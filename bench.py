@@ -31,6 +31,15 @@ from cours_datalake_dwh_td_kafka_spark.session import get_spark
 N_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
 
+def _sf_value(sf: str) -> float | str:
+    """The scale factor as a number when the directory suffix parses as
+    one (``sf0.1`` -> 0.1), else the suffix itself (``sf0.1.2``)."""
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -102,7 +111,7 @@ def main() -> None:
             "metric": "total_query_wall_sec",
             "value": total,
             "unit": "sec",
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "sf": _sf_value(sf),
             "n_queries": len(timings),
             "repeats": max(1, N_REPEATS),
             "operator_sec": round(oper_raw, 3),
@@ -124,7 +133,7 @@ def main() -> None:
         with open(out_path, "w") as fh:
             json.dump(
                 {
-                    "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                    "sf": _sf_value(sf),
                     "cpus": os.environ.get("SPARK_GRAFT_CPUS"),
                     "repeats": max(1, N_REPEATS),
                     "total_sec": total,

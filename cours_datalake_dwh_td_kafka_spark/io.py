@@ -12,7 +12,7 @@ work/TD_pySpark.ipynb:486).
 from __future__ import annotations
 
 import os
-from functools import lru_cache
+import stat
 
 import pyarrow.parquet as _pq
 from pyspark.sql import DataFrame, SparkSession
@@ -34,12 +34,65 @@ LAKE_TABLES = (
 )
 
 
-@lru_cache(maxsize=256)
-def _nanos_timestamp_cols_cached(path: str, mtime_ns: int) -> tuple[str, ...]:
+#: SQL confs that change the Spark schema inferred from a parquet path:
+#: the first four change how parquet types map to Spark types, and
+#: mergeSchema changes which footers a directory's inference reads.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_PROBES_MAX = 256
+#: (path fingerprint, conf values) -> (nanos columns, inferred schema, or
+#: None for a partitioned layout). A full cache starts over; every
+#: operation on it is a single dict call, so driver threads may share it.
+_probes: dict[tuple, tuple[tuple[str, ...], StructType | None]] = {}
+
+
+def _schema_confs(spark: SparkSession) -> tuple[str, ...]:
+    return tuple(spark.conf.get(k) for k in _PARQUET_SCHEMA_CONFS)
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """``(ino, mtime_ns, size)`` of ``path`` and, for a directory, of
+    each visible entry in it (a part file rewritten in place leaves the
+    directory's own stat unchanged). None when the path cannot be
+    stat'ed (missing, or a remote URI)."""
+    try:
+        st = os.stat(path)
+        entries = []
+        if stat.S_ISDIR(st.st_mode):
+            with os.scandir(path) as it:
+                for e in it:
+                    if not e.name.startswith(("_", ".")):
+                        es = e.stat()
+                        entries.append(
+                            (e.name, es.st_ino, es.st_mtime_ns, es.st_size)
+                        )
+    except OSError:
+        return None
+    return (
+        path, st.st_ino, st.st_mtime_ns, st.st_size, tuple(sorted(entries))
+    )
+
+
+def _footer_probe(path: str) -> tuple[tuple[str, ...], bool]:
+    """(columns stored as parquet TIMESTAMP(NANOS), whether the layout
+    is partitioned into ``key=value`` directories) — one footer read.
+
+    Spark's vectorized reader rejects nanosecond timestamps outright
+    (PARQUET_TYPE_ILLEGAL); the lake's ``events.ts`` is nanos. We read such
+    columns as raw int64 nanos (``spark.sql.legacy.parquet.nanosAsLong``)
+    and truncate to microseconds with integer division — the same
+    truncation DuckDB applies, so oracle comparisons agree to the micro.
+    """
     # directory-style parquet (anything Spark itself wrote): probe one
     # part file — all parts of a table share the footer schema. A
     # partitionBy layout nests part files under key=value dirs, so
     # descend (bounded) until one is found.
+    partitioned = False
     for _ in range(8):  # partition-depth bound
         if not os.path.isdir(path):
             break
@@ -54,10 +107,11 @@ def _nanos_timestamp_cols_cached(path: str, mtime_ns: int) -> tuple[str, ...]:
             e for e in entries if os.path.isdir(os.path.join(path, e))
         ]
         if not subdirs:
-            return ()  # empty dataset: nothing to probe
+            return (), partitioned  # empty dataset: nothing to probe
         path = os.path.join(path, subdirs[0])
+        partitioned = True
     else:
-        return ()
+        return (), partitioned
     # the PARQUET schema, not the Arrow one: Arrow reports legacy INT96
     # timestamps (Spark's own historical default) as timestamp[ns] too,
     # but Spark reads INT96 natively — only true INT64 TIMESTAMP(NANOS)
@@ -70,26 +124,7 @@ def _nanos_timestamp_cols_cached(path: str, mtime_ns: int) -> tuple[str, ...]:
         and c.logical_type is not None
         and c.logical_type.type == "TIMESTAMP"
         and "nanoseconds" in str(c.logical_type)
-    )
-
-
-def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — one footer read, cached
-    on (path, mtime) so a table REWRITTEN at the same path mid-session
-    (e.g. with a different timestamp resolution) re-reads its footer
-    instead of applying a stale nanos-column list.
-
-    Spark's vectorized reader rejects nanosecond timestamps outright
-    (PARQUET_TYPE_ILLEGAL); the lake's ``events.ts`` is nanos. We read such
-    columns as raw int64 nanos (``spark.sql.legacy.parquet.nanosAsLong``)
-    and truncate to microseconds with integer division — the same
-    truncation DuckDB applies, so oracle comparisons agree to the micro.
-    """
-    try:
-        mtime_ns = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime_ns = 0  # directory-style parquet or remote path: no stat
-    return _nanos_timestamp_cols_cached(path, mtime_ns)
+    ), partitioned
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -97,25 +132,50 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     column pruning and partition pruning on the table scan (verify with
     ``df.explain``: PushedFilters / ReadSchema).
 
+    A read whose schema is known never runs an inference job. The first
+    load of a local path runs Spark's inference (one job) and caches the
+    schema it found; later loads pass it to ``spark.read.schema`` and
+    submit no job. The schema counts as known while the cache key holds:
+    the path's ``(st_ino, st_mtime_ns, st_size)`` (and each part file's,
+    for a directory) plus the values of ``_PARQUET_SCHEMA_CONFS``. A
+    table rewritten at the same path, or a conf flip, is inferred
+    again. Paths that cannot be stat'ed and partitioned ``key=value``
+    layouts (whose partition column types come from directory names)
+    always infer.
+
     Note: loading a table with nanosecond timestamp columns flips
     ``spark.sql.legacy.parquet.nanosAsLong`` for the whole session — a
     global conf mutation. It only changes how OTHER scans read
     TIMESTAMP(NANOS) parquet (a type Spark would otherwise refuse to scan
     at all), so coexisting micro/milli reads are unaffected."""
     path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        df = spark.read.parquet(path)
+    fp = _fingerprint(path)
+    cached = _probes.get((fp, _schema_confs(spark))) if fp else None
+    if cached:
+        ns_cols, schema = cached
     else:
+        ns_cols, partitioned = _footer_probe(path)
+        schema = None
+    if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        for c in ns_cols:
-            # int64 nanos -> micros via integer `div` (truncation, not a
-            # double round-trip: 1.7e18 exceeds double's 53-bit
-            # exact-integer range)
-            df = df.withColumn(
-                c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-            )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
+    if fp and not cached:
+        if len(_probes) >= _PROBES_MAX:
+            _probes.clear()
+        # keyed on the confs the inference ran under (the nanos flip above
+        # included), so the next load of a nanos table hits
+        _probes[(fp, _schema_confs(spark))] = (
+            ns_cols,
+            None if partitioned else df.schema,
+        )
+    for c in ns_cols:
+        # int64 nanos -> micros via integer `div` (truncation, not a
+        # double round-trip: 1.7e18 exceeds double's 53-bit
+        # exact-integer range)
+        df = df.withColumn(
+            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
+        )
     # Parquet written without isAdjustedToUTC reads back as TIMESTAMP_NTZ.
     # Normalize to session-TZ TIMESTAMP (sessions pin UTC) so the public
     # schema is stable whether the lake stores nanos, micros-UTC, or

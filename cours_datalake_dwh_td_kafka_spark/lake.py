@@ -24,7 +24,12 @@ Invariants:
   Round 10 adds the MERGE-ON-READ alternative (:func:`lake_delete_keys`,
   the Iceberg-v2 equality-delete shape): a delete writes only its key
   file, readers anti-join at scan time, and the rewrite rungs (cluster,
-  merge, CoW delete, compact) fold the debt.
+  merge, CoW delete, compact) fold the debt;
+- a read whose schema is known never runs a Spark schema-inference
+  job, and a schema is known when the version's manifest declares it:
+  data files are read under the declared schema, delete-key files
+  under the declared type of their key column (:func:`_delete_keys`).
+  Only pre-evolution manifests, which declare no schema, infer.
 
 Local-FS paths only (os/json manifest handling); the data files
 themselves go through Spark writers, so pointing the manifest layer at
@@ -333,9 +338,7 @@ def _occ_delete_disjoint(
         if d["key"] != col:
             return False
         try:
-            keyed = spark.read.parquet(
-                *(os.path.join(path, kf) for kf in d["files"])
-            )
+            keyed = _delete_keys(spark, path, m, d)
             probe = None
             if len(vals) > KEYS_INSET_MAX:
                 # same literal-size cliff lake_read_keys caps: a huge
@@ -881,6 +884,35 @@ def lake_delete_keys(
     return _occ_publish_loop(path, "merge-on-read key delete", attempt)
 
 
+def _delete_keys(
+    spark: SparkSession, path: str, m: dict, d: dict
+) -> DataFrame:
+    """The key column of manifest ``m``'s delete entry ``d``, read from
+    its key files under the type ``m`` declares for the key — a known
+    schema, so building the read submits no Spark job. Key files are
+    written under that type (:func:`lake_delete_keys` checks a keys
+    frame against it), so this is the schema inference would find
+    anyway.
+    Only a pre-evolution manifest, which declares no schema, infers."""
+    files = [os.path.join(path, kf) for kf in d["files"]]
+    field = next(
+        (
+            f
+            for f in (m.get("schema") or {}).get("fields", [])
+            if f["name"] == d["key"]
+        ),
+        None,
+    )
+    if field is None:
+        from pyspark.sql import functions as F
+
+        return spark.read.parquet(*files).select(F.col(d["key"]))
+    from pyspark.sql.types import StructType
+
+    declared = StructType.fromJson({"type": "struct", "fields": [field]})
+    return spark.read.schema(declared).parquet(*files)
+
+
 def _apply_deletes(
     spark: SparkSession, path: str, m: dict, files: list[str]
 ) -> DataFrame:
@@ -896,8 +928,6 @@ def _apply_deletes(
     applicable = [d for d in deletes if fset & set(d["over"])]
     if not applicable:
         return _read_file_subset(spark, path, m, files)
-    from pyspark.sql import functions as F
-
     overs = [set(d["over"]) for d in applicable]
     groups: dict[tuple, list[str]] = {}
     for f in files:
@@ -909,9 +939,7 @@ def _apply_deletes(
         declared_order = df.columns
         for i in sig:
             d = applicable[i]
-            keys = spark.read.parquet(
-                *(os.path.join(path, kf) for kf in d["files"])
-            ).select(F.col(d["key"]))
+            keys = _delete_keys(spark, path, m, d)
             # no broadcast hint: AQE broadcasts a small key set by
             # itself, and a large one (bulk erasure) must shuffle
             df = df.join(keys, d["key"], "left_anti")
@@ -1269,9 +1297,7 @@ def lake_changes_since(
             # new entry's covered files that match its keys
             step = None
             for d in new_deletes:
-                keys = spark.read.parquet(
-                    *(os.path.join(path, kf) for kf in d["files"])
-                ).select(F.col(d["key"]))
+                keys = _delete_keys(spark, path, m, d)
                 part = _apply_deletes(
                     spark, path, prev_m, list(d["over"])
                 ).join(keys, d["key"], "leftsemi")

@@ -127,19 +127,20 @@ def kmeans_lloyd(
     against (a cell with a centroid row but no surviving members keeps
     the row with n_vecs = 0 — that is the cell-death signal a refresh
     loop keys re-seeding on)."""
-    emb = e.select("vec_id", "embedding")
+    # the gate count pins the source scan: the explode below and (above
+    # the gate) every M-step read these blocks, never the source again
+    emb = e.select("vec_id", "embedding").localCheckpoint(eager=False)
+    small = emb.count() <= KMEANS_BC_MAX_VECS
     # read by every round's E-step AND (below the gate) every M-step:
     # materialize the explode once
     flat = _flat(emb).localCheckpoint(eager=True)
     # r15 (VERDICT r14 #5): below the gate each round's M-step reuses
     # the PINNED quantized explode with the O(n) assignment broadcast —
-    # no per-round source re-scan, re-explode, re-cast, and no shuffle
-    # join (the checkpointed assignment has no stats, so the planner
-    # can never pick the broadcast itself — the CC_BC_MAX_NODES rule).
-    # Decimal sums are exact (order-independent), so `craw` is
-    # bit-identical on both paths; the gate costs one count on the
-    # already-materialized source scan.
-    small = emb.count() <= KMEANS_BC_MAX_VECS
+    # no per-round re-explode, re-cast, and no shuffle join (the
+    # checkpointed assignment has no stats, so the planner can never
+    # pick the broadcast itself — the CC_BC_MAX_NODES rule). Decimal
+    # sums are exact (order-independent), so `craw` is bit-identical on
+    # both paths.
     assign = emb.select("vec_id", (F.col("vec_id") % k).alias("cell"))
     m_agg = [
         F.round(F.sum("vq").cast("double") / F.count(F.lit(1)), 6).alias(

@@ -93,3 +93,19 @@ def assert_matches_oracle(spark_df, duck_df: pd.DataFrame, name: str = "") -> No
             f"spark:\n{sp[diff_mask].head(5)}\n"
             f"duck:\n{dk[diff_mask].head(5)}"
         )
+
+
+def spark_jobs(spark, fn):
+    """(``fn()``, number of Spark jobs it submitted), counted under a
+    fresh job group through the status tracker (works with the UI off).
+    Jobs submitted from other threads are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -20,6 +20,7 @@ from pyspark.sql.types import (
 )
 
 from cours_datalake_dwh_td_kafka_spark import io
+from tests.conftest import spark_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -191,6 +192,111 @@ def test_nanos_parquet_load_truncates_to_micros(spark, tmp_path):
     epoch = dt.datetime(1970, 1, 1)
     exp = sorted(epoch + dt.timedelta(microseconds=n // 1000) for n in ns)
     assert got == exp
+
+
+def _rows(df):
+    # repr keys: NaN compares equal to itself, nested arrays sort
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def test_second_load_table_submits_no_job(spark, tmp_path):
+    """The first load of a path infers its schema (a Spark job); a
+    second load of the unchanged table reuses the cached schema and
+    submits none — nanos ``events`` (whose load flips nanosAsLong)
+    and a directory-style table included."""
+    spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+
+    def load():
+        return io.load_table(spark, str(tmp_path), "t")
+
+    _, first = spark_jobs(spark, load)
+    _, second = spark_jobs(spark, load)
+    assert first >= 1
+    assert second == 0
+    for name in ("events", "orders"):
+        io.load_table(spark, SF, name)
+        _, jobs = spark_jobs(spark, lambda: io.load_table(spark, SF, name))
+        assert jobs == 0, name
+
+
+def test_cached_schema_load_matches_inference(spark):
+    """Every lake table reads back the same dtypes and rows through the
+    cached schema as through plain inference."""
+    io._probes.clear()
+    for name in io.LAKE_TABLES:
+        inferred = io.load_table(spark, SF, name)  # cache miss: infers
+        cached, jobs = spark_jobs(
+            spark, lambda: io.load_table(spark, SF, name)
+        )
+        assert jobs == 0, name
+        assert cached.schema == inferred.schema, name
+        assert _rows(cached) == _rows(inferred), name
+
+
+@pytest.mark.parametrize("layout", ["file", "directory"])
+def test_table_rewritten_in_place_is_inferred_again(spark, tmp_path, layout):
+    """A table rewritten at the same path with a different column set
+    gets its new schema, not the cached one — also when only a part
+    file inside a directory is rewritten (the directory's own stat does
+    not change)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    target = tmp_path / "t.parquet"
+    if layout == "directory":
+        target.mkdir()
+        target = target / "part-0.parquet"
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), str(target))
+    assert io.load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    pq.write_table(
+        pa.table({"a": [3], "c": [0.5], "d": [True]}), str(target)
+    )
+    df, jobs = spark_jobs(
+        spark, lambda: io.load_table(spark, str(tmp_path), "t")
+    )
+    assert jobs >= 1
+    assert df.columns == ["a", "c", "d"]
+    assert [tuple(r) for r in df.collect()] == [(3, 0.5, True)]
+
+
+def test_schema_conf_flip_is_inferred_again(spark, tmp_path):
+    """The parquet type-mapping confs are part of the cache key: a flip
+    of ``binaryAsString`` between two loads yields the new type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"b": pa.array([b"x"], pa.binary())}),
+        str(tmp_path / "t.parquet"),
+    )
+    assert io.load_table(spark, str(tmp_path), "t").dtypes == [("b", "binary")]
+    key = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        df = io.load_table(spark, str(tmp_path), "t")
+        assert df.dtypes == [("b", "string")]
+        assert df.collect()[0].b == "x"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_partitioned_layout_bypasses_schema_cache(spark, tmp_path):
+    """A partitionBy directory types its partition column from directory
+    names, so every load infers — no cached schema is reused."""
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "p INT, v STRING"
+    ).write.partitionBy("p").parquet(str(tmp_path / "pt.parquet"))
+    for _ in range(2):
+        df, jobs = spark_jobs(
+            spark, lambda: io.load_table(spark, str(tmp_path), "pt")
+        )
+        assert jobs >= 1
+        assert dict(df.dtypes) == {"v": "string", "p": "int"}
+    assert sorted(tuple(r) for r in df.select("p", "v").collect()) == [
+        (1, "a"),
+        (2, "b"),
+    ]
 
 
 def test_bucketed_join_skips_shuffle(spark, tmp_path):

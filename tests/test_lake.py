@@ -1459,6 +1459,49 @@ def test_merge_on_read_delete_corners(spark, tmp_path):
     assert lake_read(spark, path).where("k = 40").count() == 0
 
 
+def test_merge_on_read_reads_build_without_jobs(spark, tmp_path):
+    """Building a merge-on-read read (a pending delete_keys entry) and
+    its CDC delete step submits no Spark job: the delete-key files are
+    read under the manifest's declared key type, not inferred. A
+    pre-evolution manifest (no declared schema) still infers and reads
+    the same rows."""
+    import json
+
+    from cours_datalake_dwh_td_kafka_spark.lake import (
+        lake_changes_since,
+        lake_delete_keys,
+    )
+    from tests.conftest import spark_jobs
+
+    path = str(tmp_path / "t")
+    lake_commit(
+        spark.createDataFrame(
+            [(f"v{i}", i) for i in range(10)], "val STRING, k BIGINT"
+        ),
+        path,
+    )
+    lake_delete_keys(spark, path, "k", "k < 3")  # v2
+    df, jobs = spark_jobs(spark, lambda: lake_read(spark, path))
+    assert jobs == 0
+    cdc, jobs = spark_jobs(spark, lambda: lake_changes_since(spark, path, 1))
+    assert jobs == 0
+    assert df.columns == ["val", "k"]
+    assert sorted(r.k for r in df.collect()) == list(range(3, 10))
+    assert sorted((r.k, r._change) for r in cdc.collect()) == [
+        (k, "delete") for k in range(3)
+    ]
+
+    mpath = os.path.join(path, "_manifests", "v2.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    assert sorted(r.k for r in lake_read(spark, path).collect()) == list(
+        range(3, 10)
+    )
+
+
 def test_maintenance_plan_fold_verdict(spark, tmp_path):
     """fold_due: pending merge-on-read delete entries past the knob
     flag a fold; a rewrite rung clears both the entries and the flag."""
