@@ -26,6 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cours_datalake_dwh_td_kafka_spark import registry
+from cours_datalake_dwh_td_kafka_spark.plans.inspect import codegen_compiles
 from cours_datalake_dwh_td_kafka_spark.session import get_spark
 
 N_REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
@@ -80,13 +81,19 @@ def main() -> None:
     spark.range(10).mapInPandas(lambda it: it, "id LONG").count()
 
     timings: dict[str, float] = {}
+    # classes compiled over each query's repeats: with a warm codegen
+    # cache only the first repeat compiles, so a count that grows with
+    # N_REPEATS means the cache is evicting the query's own classes
+    compiles: dict[str, int] = {}
     for name in sorted(qs):
         best = float("inf")
+        c0 = codegen_compiles(spark)
         for _ in range(max(1, N_REPEATS)):
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             best = min(best, time.perf_counter() - t0)
         timings[name] = best
+        compiles[name] = codegen_compiles(spark) - c0
         # one short line per query — survives any bounded tail cut
         print(json.dumps({"q": name, "sec": round(best, 3)}), flush=True)
 
@@ -138,6 +145,7 @@ def main() -> None:
                     "repeats": max(1, N_REPEATS),
                     "total_sec": total,
                     "queries": {n: round(s, 3) for n, s in sorted(timings.items())},
+                    "codegen_compiles": compiles,
                 },
                 fh,
                 indent=1,

@@ -52,12 +52,13 @@ def main(argv: list[str] | None = None) -> int:
         formatted_plan,
         plan_facts,
     )
+    from cours_datalake_dwh_td_kafka_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .appName("explain")
-        .getOrCreate()
+    # Reuse a live session untouched: a builder's getOrCreate() on an
+    # existing session applies its confs to it, rewriting the caller's
+    # settings for every later query in the process.
+    spark = SparkSession.getActiveSession() or get_spark(
+        app_name="explain", master="local[2]"
     )
     df = qs[args.query](spark, args.sf_dir)
     f = plan_facts(df)

@@ -16,7 +16,7 @@ import re
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def physical_plan(df: DataFrame, executed: bool = False) -> str:
@@ -78,6 +78,21 @@ def plan_facts(df: DataFrame, executed: bool = False) -> PlanFacts:
         read_schemas=re.findall(r"ReadSchema: (\S+)", fmt),
     )
     return facts
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Number of classes Spark has compiled from generated code (Janino)
+    since the JVM started: ``CodegenMetrics``' compilation-time histogram
+    count. A compile is a miss in the generated-class cache
+    (``spark.sql.codegen.cache.maxEntries``), so a warm query that
+    reports compiles is paying Janino again.
+
+    The counter is JVM-wide, not per session or per query: the
+    difference between two calls is exact only when one query runs at a
+    time; concurrent queries, streams or pooled driver threads add their
+    compiles to whichever delta is open."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 @contextmanager

@@ -58,7 +58,18 @@ def enrich_alerts(
     (reference: work/spark_processor.py:30-38; thresholds 10/20 wind,
     25/35 heat). The reference stamps processing time
     (current_timestamp); we honor an explicit event-time column when the
-    payload carries one — processing time is not reproducible."""
+    payload carries one — processing time is not reproducible.
+
+    The default falls back to processing time for rows without a
+    parseable ``timestamp``. In a stream, ``F.current_timestamp()``
+    becomes a fresh literal in every micro-batch, and Spark inlines it
+    into the generated code. The codegen cache never matches that code,
+    so each micro-batch compiles 2 new classes. Those were all 16
+    compiles left in a warm benchmark ``stream_drain`` round; the same
+    drain with
+    ``event_time=F.to_timestamp(F.col("timestamp").cast("double"))``
+    compiles none after its first run. Callers whose payload always
+    carries an event time should pass it as ``event_time=``."""
     if event_time is None:
         event_time = F.coalesce(
             F.to_timestamp(F.col("timestamp").cast("double")),

@@ -203,9 +203,11 @@ def test_disjunctive_revenue_hand_cnf_pushdown(spark):
 
 def test_explain_cli_lists_and_reports(spark, capsys):
     """The module-level EXPLAIN surface: --list enumerates the registry;
-    a query name prints its plan facts (reusing the live session)."""
+    a query name prints its plan facts (reusing the live session
+    without rewriting its confs)."""
     from cours_datalake_dwh_td_kafka_spark.explain import main
 
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     assert main(["--list"]) == 0
     out = capsys.readouterr().out
     assert "shipping_priority" in out and "(rows-only)" in out
@@ -214,6 +216,7 @@ def test_explain_cli_lists_and_reports(spark, capsys):
     out = capsys.readouterr().out
     assert "pushed_filters" in out and "l_shipdate" in out
     assert main(["no_such_query"]) == 2
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
 
 
 @pytest.mark.parametrize(

@@ -7,7 +7,10 @@ Unlike bench.py (which uses .count() for driver-compat parity), the
 default action here is the noop sink: it computes EVERY column of every
 row, so column-pruning cannot make the timed region cheaper than the
 real query. Pass --count to reproduce bench.py's exact timed action.
-Prints one JSON line per query with min/median over repeats.
+Prints one JSON line per query with min/median over repeats, plus each
+repeat's seconds and the classes Spark compiled from generated code
+during it (a warm repeat that still compiles is missing the codegen
+cache).
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cours_datalake_dwh_td_kafka_spark import registry
+from cours_datalake_dwh_td_kafka_spark.plans.inspect import codegen_compiles
 from cours_datalake_dwh_td_kafka_spark.session import get_spark
 
 
@@ -59,7 +63,9 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(name)
         times = []
+        compiles = []
         for _ in range(repeats):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             if use_count:
@@ -67,6 +73,7 @@ def main() -> None:
             else:
                 df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
+            compiles.append(codegen_compiles(spark) - c0)
         print(
             json.dumps(
                 {
@@ -74,6 +81,8 @@ def main() -> None:
                     "min": round(min(times), 3),
                     "med": round(statistics.median(times), 3),
                     "n": repeats,
+                    "secs": [round(t, 3) for t in times],
+                    "compiles": compiles,
                     "action": "count" if use_count else "noop",
                 }
             ),
