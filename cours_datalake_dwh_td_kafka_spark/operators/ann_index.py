@@ -2892,8 +2892,12 @@ def ann_index_compact_lifecycle(
     - ``ancestors_reclaimable``: a dry-run vacuum reports every
       pre-compaction version as sweepable (the chain is released)."""
     import json
-    from concurrent.futures import ThreadPoolExecutor
 
+    from cours_datalake_dwh_td_kafka_spark.operators.attest import (
+        legs,
+        multiset_eq,
+        parallel_vals,
+    )
     from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
         ann_topk_bruteforce,
     )
@@ -2902,44 +2906,41 @@ def ann_index_compact_lifecycle(
     # r15 (guide §2.6, the ann_index_delete recipe): the brute-force
     # truth reads only the input frame — start its eager pin before the
     # build/append/compact chain so the BLAS pass rides underneath.
-    bg = ThreadPoolExecutor(max_workers=1)
-    truth_fut = bg.submit(
-        lambda: ann_topk_bruteforce(e)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    base = emb_d.where(F.col("vec_id") % 2 == 0)
-    extra = emb_d.where(F.col("vec_id") % 2 == 1)
-    marker = os.path.join(path, "COMPACTED.json")
-    if not os.path.exists(marker):
-        if not os.path.exists(os.path.join(path, "CURRENT")):
-            build_ivf_index(base, path)
-        if chain_length(path) < 2:
-            append_ivf_index(extra, path)
-        pre = os.path.basename(_current_version_dir(path))
-        tmp = marker + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"pre": pre}, f)
-        os.replace(tmp, marker)
-    with open(marker) as f:
-        pre = json.load(f)["pre"]
-    if os.path.basename(_current_version_dir(path)) == pre:
-        compact_ivf_index(spark, path)
+    with legs(spark) as bg:
+        truth_fut = bg.submit(
+            lambda: ann_topk_bruteforce(e)
+            .select("query_id", "neighbor_id")
+            .localCheckpoint(eager=True)
+        )
+        base = emb_d.where(F.col("vec_id") % 2 == 0)
+        extra = emb_d.where(F.col("vec_id") % 2 == 1)
+        marker = os.path.join(path, "COMPACTED.json")
+        if not os.path.exists(marker):
+            if not os.path.exists(os.path.join(path, "CURRENT")):
+                build_ivf_index(base, path)
+            if chain_length(path) < 2:
+                append_ivf_index(extra, path)
+            pre = os.path.basename(_current_version_dir(path))
+            tmp = marker + f".tmp.{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                json.dump({"pre": pre}, f)
+            os.replace(tmp, marker)
+        with open(marker) as f:
+            pre = json.load(f)["pre"]
+        if os.path.basename(_current_version_dir(path)) == pre:
+            compact_ivf_index(spark, path)
 
-    chain_before = len(_vector_roots(path, os.path.join(path, pre)))
-    chain_after = chain_length(path)
-    q = emb_d.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    # truth feeds four actions (two counts, exceptAll, two recall_hits
-    # semi-joins) and full two — pin each so the BLAS brute force and
-    # the full-probe scan run once, not per action (truth's pin was
-    # started before the build chain; joined here)
-    try:
+        chain_before = len(_vector_roots(path, os.path.join(path, pre)))
+        chain_after = chain_length(path)
+        q = emb_d.where(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("emb"),
+        )
+        # truth feeds four actions (two counts, exceptAll, two recall_hits
+        # semi-joins) and full two — pin each so the BLAS brute force and
+        # the full-probe scan run once, not per action (truth's pin was
+        # started before the build chain; joined here)
         truth = truth_fut.result()
-    finally:
-        bg.shutdown(wait=True)
     full = (
         ivf_query_index(spark, path, q, nprobe=N_CELLS)
         .select("query_id", "neighbor_id")
@@ -2951,11 +2952,6 @@ def ann_index_compact_lifecycle(
             .join(truth, ["query_id", "neighbor_id"], "leftsemi")
             .count()
         )
-
-    from cours_datalake_dwh_td_kafka_spark.operators.attest import (
-        multiset_eq,
-        parallel_vals,
-    )
 
     # truth is already materialized (eager pin above): overlap the four
     # independent read-only checks (r14, guide §2.6; the equality is
@@ -3046,11 +3042,10 @@ def ann_index_delete_lifecycle(
     )
 
     from cours_datalake_dwh_td_kafka_spark.operators.attest import (
+        legs,
         multiset_eq,
         parallel_vals,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     emb = e.select("vec_id", "embedding")
     del_pred = (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") % 10 == 5)
@@ -3060,42 +3055,41 @@ def ann_index_delete_lifecycle(
     # index store — yet they waited behind build + delete. Start them
     # first so they ride under the build/delete chain; eager pins keep
     # the pooled consumers race-free exactly as before.
-    bg = ThreadPoolExecutor(max_workers=2)
-    truth_all_fut = bg.submit(
-        lambda: ann_topk_bruteforce(e)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    truth_rem_fut = bg.submit(
-        lambda: ann_topk_bruteforce(e.where(~del_pred))
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    # index build + two read-only counts overlapped (r14, guide §2.6)
-    _, n_vecs, n_deleted = parallel_vals(
-        lambda: build_ivf_index(emb, path),
-        lambda: emb.count(),
-        lambda: deleted.count(),
-    )
-    pinned = os.path.basename(_current_version_dir(path))
-    delete_from_ivf_index(deleted, path)
+    with legs(spark) as bg:
+        truth_all_fut = bg.submit(
+            lambda: ann_topk_bruteforce(e)
+            .select("query_id", "neighbor_id")
+            .localCheckpoint(eager=True)
+        )
+        truth_rem_fut = bg.submit(
+            lambda: ann_topk_bruteforce(e.where(~del_pred))
+            .select("query_id", "neighbor_id")
+            .localCheckpoint(eager=True)
+        )
+        # index build + two read-only counts overlapped (r14, guide §2.6)
+        _, n_vecs, n_deleted = parallel_vals(
+            lambda: build_ivf_index(emb, path),
+            lambda: emb.count(),
+            lambda: deleted.count(),
+        )
+        pinned = os.path.basename(_current_version_dir(path))
+        delete_from_ivf_index(deleted, path)
 
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    def _snapshot_check() -> bool:
-        snap = ivf_query_index(
-            spark, path, q, nprobe=N_CELLS, version=pinned
-        ).select("query_id", "neighbor_id")
-        return multiset_eq(snap, truth_all_fut.result())
+        q = emb.where(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("emb"),
+        )
+        def _snapshot_check() -> bool:
+            snap = ivf_query_index(
+                spark, path, q, nprobe=N_CELLS, version=pinned
+            ).select("query_id", "neighbor_id")
+            return multiset_eq(snap, truth_all_fut.result())
 
-    # EAGER: served/truth_rem feed several pooled checks (truth_rem
-    # also the post-compaction one) — materialize once, race-free.
-    # The snapshot check rides the SAME wave: it reads only the
-    # immutable pinned version + the early-started truth pin (r14/r15,
-    # guide §2.6)
-    try:
+        # EAGER: served/truth_rem feed several pooled checks (truth_rem
+        # also the post-compaction one) — materialize once, race-free.
+        # The snapshot check rides the SAME wave: it reads only the
+        # immutable pinned version + the early-started truth pin (r14/r15,
+        # guide §2.6)
         served, truth_rem, snapshot_ok = parallel_vals(
             lambda: ivf_query_index(spark, path, q, nprobe=N_CELLS)
             .select("query_id", "neighbor_id")
@@ -3103,8 +3097,6 @@ def ann_index_delete_lifecycle(
             truth_rem_fut.result,
             _snapshot_check,
         )
-    finally:
-        bg.shutdown(wait=True)
 
     # each equality is one signed-tag action (VERDICT r13 #4)
     excludes, exact_after = parallel_vals(

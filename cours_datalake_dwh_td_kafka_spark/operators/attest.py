@@ -9,16 +9,93 @@ Semantics match the exceptAll formulations it replaces: groupBy
 row-equality treats NULL == NULL and NaN == NaN, exactly like
 exceptAll's row comparison. Columns must be groupable (array/struct
 fine, MAP not) — true for every artifact frame the protocol rows
-compare."""
+compare.
+
+The module also owns the package's driver-side concurrency: ``legs``
+is the only place that starts a thread. A protocol row overlaps
+independent Spark actions on its legs (``parallel_vals`` is the
+fan-out/fan-in form); every leg keeps the submitter's Spark job group
+and description, is joined before the ``with`` block ends, and fails
+loudly."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable, Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import contextmanager
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+LEG_THREAD_PREFIX = "attest-leg"
+
+
+class _Leg(Future):
+    """A leg's future that remembers whether its outcome was read."""
+
+    read = False
+
+    def result(self, timeout=None):
+        self.read = True
+        return super().result(timeout)
+
+    def exception(self, timeout=None):
+        self.read = True
+        return super().exception(timeout)
+
+
+class _Legs(ThreadPoolExecutor):
+    def __init__(self, spark: SparkSession, max_workers: int):
+        super().__init__(max_workers, thread_name_prefix=LEG_THREAD_PREFIX)
+        self._spark = spark
+        self.submitted: list[_Leg] = []
+
+    def submit(self, fn, /, *args, **kwargs) -> Future:
+        # wrapped NOW, so the leg carries the submitter's local
+        # properties (job group, description) and session tags
+        fn = inheritable_thread_target(self._spark)(fn)
+        leg = _Leg()
+
+        def run() -> None:
+            if not leg.set_running_or_notify_cancel():
+                return  # cancelled while queued: never runs
+            try:
+                leg.set_result(fn(*args, **kwargs))
+            except BaseException as e:  # noqa: BLE001 - kept on the leg
+                leg.set_exception(e)
+
+        super().submit(run)
+        self.submitted.append(leg)
+        return leg
+
+
+@contextmanager
+def legs(spark: SparkSession, max_workers: int = 4) -> Iterator[_Legs]:
+    """Background legs for one block: ``with legs(spark) as bg:`` yields
+    an executor whose ``submit`` runs the callable on a driver thread
+    that inherits the submitter's Spark job group, description and
+    tags, so every job a leg submits is attributed like the caller's.
+
+    Leaving the block always joins every leg. If the body raised, legs
+    still queued are cancelled (they never run), running legs are
+    joined, and the body's exception propagates. If the body finished,
+    the first leg exception (in submission order) that nobody read
+    through ``.result()`` or ``.exception()`` is raised, so a failing
+    leg is as loud as the sequential form."""
+    bg = _Legs(spark, max_workers)
+    try:
+        yield bg
+    except BaseException:
+        for leg in bg.submitted:
+            leg.cancel()
+        raise
+    finally:
+        bg.shutdown(wait=True)
+    for leg in bg.submitted:
+        if not (leg.read or leg.cancelled()) and leg.exception():
+            raise leg.exception()
 
 
 def parallel_vals(
@@ -38,14 +115,18 @@ def parallel_vals(
     out. Worker count stays small on purpose: the point is filling the
     tail of each job, not oversubscribing the scheduler — and the pool
     adds NO work, so the min-of-n bench measures real overlap, not a
-    cache effect. Exceptions re-raise on .result(), so a failing
-    attestation is as loud as the sequential form."""
+    cache effect. The thunks run as ``legs`` of the active session:
+    their jobs carry the caller's job group, and the call returns only
+    after every thunk finished or was cancelled. The first failing
+    thunk (in submission order) re-raises here, thunks still queued
+    behind it never run, so a failing attestation is as loud as the
+    sequential form. One thunk runs inline."""
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(
-        max_workers=min(max_workers, len(thunks))
-    ) as pool:
-        futures = [pool.submit(t) for t in thunks]
+    # active() falls back to the default session: a leg's own thread
+    # has no active one
+    with legs(SparkSession.active(), min(max_workers, len(thunks))) as bg:
+        futures = [bg.submit(t) for t in thunks]
         return [f.result() for f in futures]
 
 

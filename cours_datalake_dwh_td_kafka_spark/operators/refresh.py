@@ -94,6 +94,7 @@ from cours_datalake_dwh_td_kafka_spark.operators.dedup import (
     shingle_rows,
 )
 from cours_datalake_dwh_td_kafka_spark.operators.attest import (
+    legs,
     multiset_eq,
     parallel_vals,
 )
@@ -146,8 +147,6 @@ def corpus_refresh(
     writes only the new batch, and the packing delta is the ceil
     identity on per-source token sums (no per-row packing pass).
     Driver collects are bounded scalars."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from cours_datalake_dwh_td_kafka_spark.operators.ann_index import (
         append_ivf_index,
         build_ivf_index,
@@ -200,320 +199,321 @@ def corpus_refresh(
     # overlap). Start them the moment their inputs exist so they ride
     # UNDER the document phases; their results are joined in the final
     # pool exactly where the sequential form consumed them.
-    bg = ThreadPoolExecutor(max_workers=2)
-    ann_fut = bg.submit(_ann_leg)
+    with legs(spark) as bg:
+        ann_fut = bg.submit(_ann_leg)
 
-    lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).first()
-    cut = int(lo) + int((int(hi) - int(lo)) * INCREMENT_SPLIT)
-    prior = d.where(F.col("doc_id") < cut)
-    batch = d.where(F.col("doc_id") >= cut)
+        lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).first()
+        cut = int(lo) + int((int(hi) - int(lo)) * INCREMENT_SPLIT)
+        prior = d.where(F.col("doc_id") < cut)
+        batch = d.where(F.col("doc_id") >= cut)
 
-    # v1: the survivor set of the prior runs (keep-min-doc_id per
-    # fingerprint — the state every earlier refresh left behind)
-    fp = F.md5(norm_text(F.col("text")))
-    survivors = (
-        prior.withColumn("_fp", fp)
-        .withColumn(
-            "_keep", F.min("doc_id").over(Window.partitionBy("_fp"))
-        )
-        .where(F.col("doc_id") == F.col("_keep"))
-        .drop("_fp", "_keep")
-    )
-    lake_path = os.path.join(workdir, "corpus")
-    lake_commit(survivors, lake_path)  # v1
-    v1 = lake_read(spark, lake_path, 1)
-    # v1 is settled: the text-index BUILD (its own tidx store) can run
-    # under everything up to the serve check; the append waits on this
-    # future inside the final pool
-    text_build_fut = bg.submit(build_text_index, spark, v1, tidx)
-    # the PERSISTED dedup-gate table (round 10, closing the r9 weak #1):
-    # (doc_id, band_key) rows for every kept doc — 4 rows/doc whatever
-    # the text size — committed alongside the corpus and appended per
-    # MERGE below, exactly as ann_index_append maintains the vector
-    # index. Every subsequent gate pass reads THIS table instead of
-    # re-shingling the survivor corpus, so a crawl increment costs
-    # O(increment + candidates), not O(corpus).
-    bands_path = os.path.join(workdir, "dedup_bands")
-    # the PERSISTED exact-dedup table (r11, closing the r10 verdict's
-    # #1): (doc_id, fp) for every kept doc — the fingerprint is
-    # computed ONCE at insert time and maintained per MERGE, so the
-    # next refresh's anti-join is a key join against ~48-byte rows,
-    # never a survivor-text re-hash
-    fps_path = os.path.join(workdir, "dedup_fps")
-    # the two side-table v1 commits write DISJOINT stores from the same
-    # settled corpus v1; the survivor count is read-only — overlap the
-    # three jobs (r14, guide §2.6 — attest.parallel_vals)
-    n_kept, _, _ = parallel_vals(
-        lambda: v1.count(),
-        lambda: lake_commit(minhash_band_rows(v1), bands_path),
-        lambda: lake_commit(fingerprint_rows(v1), fps_path),
-    )
-
-    # incremental exact dedup of the batch against the PERSISTED
-    # fingerprints (the lake's survivor text is never read here)
-    # (localCheckpoint: fresh feeds three consumers — the unique count,
-    # the leak scan, and the clean set — one anti-join, not three)
-    fresh_ids = incremental_new_docs(
-        None, batch, corpus_fps=lake_read(spark, fps_path, 1)
-    ).select("doc_id")
-    fresh = batch.join(fresh_ids, "doc_id", "leftsemi").localCheckpoint(
-        eager=False
-    )
-    # two independent counts (fresh's checkpoint materializes inside
-    # its OWN thunk only — n_batch never touches it)
-    n_batch, n_new_unique = parallel_vals(
-        lambda: batch.count(), lambda: fresh.count()
-    )
-
-    # decontamination gate: drop benchmark members AND 8-gram leakers
-    # (bench_sh is scanned by the gate AND the post-merge re-check)
-    bench_sh = (
-        _sh_hashes(d.where(F.col("doc_id") % CONTAM_BENCH_MOD == 0))
-        .select("sh")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    leakers = (
-        _sh_hashes(fresh).join(bench_sh, "sh").select("doc_id").distinct()
-    )
-    # cross-run NEAR-dup gate (round 9): drop increment docs that
-    # near-duplicate a kept survivor — the re-crawled page with a new
-    # footer, which the exact fingerprint anti-join structurally keeps.
-    # Round 10: the corpus side comes from the PERSISTED band table
-    # (never re-shingled), and the exact-Jaccard verify shingles only
-    # the band-candidate corpus docs.
-    near = (
-        incremental_near_dups(
-            v1, fresh, corpus_bands=lake_read(spark, bands_path, 1)
-        )
-        .select(F.col("inc_doc").alias("doc_id"))
-        .distinct()
-    )
-    clean = (
-        fresh.where(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
-        .join(leakers, "doc_id", "left_anti")
-        .join(near, "doc_id", "left_anti")
-        .localCheckpoint(eager=False)
-    )
-    n_inserted = clean.count()
-
-    # one atomic MERGE commit; snapshot isolation for the prior state.
-    # The two side-table appends write disjoint stores from the already
-    # materialized `clean` checkpoint — overlap all three writes.
-    parallel_vals(
-        lambda: lake_merge_upsert(spark, lake_path, clean, "doc_id"),  # v2
-        lambda: lake_commit(
-            minhash_band_rows(clean), bands_path, mode="append"
-        ),
-        lambda: lake_commit(
-            fingerprint_rows(clean), fps_path, mode="append"
-        ),
-    )
-    # EAGER pin of the post-merge corpus (r15, VERDICT r14 #3 / guide
-    # §2.4): nine downstream consumers (the six checks, the serve
-    # compare, the packing aggregate, the repaired-gate re-check) each
-    # re-derived this frame from the lake; one materialization feeds
-    # them all, and eager is mandatory — the consumers run on pool
-    # threads (a lazy checkpoint raced from two threads can compute
-    # twice).
-    v2 = lake_read(spark, lake_path, 2).localCheckpoint(eager=True)
-    inserted = v2.where(F.col("doc_id") >= cut)
-    # EAGER side-table snapshots: the post-merge checks below share
-    # these frames across threads, and the maintenance repair further
-    # down vacuums the files they read — materialize once, up front
-    bands_v2 = lake_read(spark, bands_path, 2).localCheckpoint(eager=True)
-    fps_v2 = lake_read(spark, fps_path, 2).localCheckpoint(eager=True)
-    n_after = v2.count()
-
-    # ---- post-merge checks: all read-only over settled stores and the
-    # pinned snapshots above — one overlapped pool (r14, guide §2.6)
-    def _merge_atomic_check() -> bool:
-        return (
-            n_after == n_kept + n_inserted
-            and lake_read(spark, lake_path, 1).count() == n_kept
-        )
-
-    def _near_dup_check() -> bool:
-        return (
-            incremental_near_dups(
-                v2.where(F.col("doc_id") < cut),
-                inserted,
-                corpus_bands=bands_v2.where(F.col("doc_id") < cut),
-            ).count()
-            == 0
-        )
-
-    def _no_dup_check() -> bool:
-        # global fingerprint uniqueness, measured on the PERSISTED
-        # table — O(artifact), no text; the attestation thunks prove
-        # the table IS the truth
-        return (
-            fps_v2.select("fp").distinct().count() == n_after
-            and fps_v2.count() == n_after
-        )
-
-    if attest:
-        # the incremental maintenance must be EXACT: each persisted
-        # table after the append equals a from-scratch recompute over
-        # the live snapshot (one signed-tag action per recompute —
-        # VERDICT r13 #4, operators/attest.py). O(corpus) text reads
-        # BY DESIGN — this is the drift-is-zero proof the registered
-        # row attests; the deployable call (attest=False) skips it.
-        def _bands_table_check() -> bool:
-            return multiset_eq(bands_v2, minhash_band_rows(v2))
-
-        def _fps_table_check() -> bool:
-            return multiset_eq(fps_v2, fingerprint_rows(v2))
-    else:
-        # artifact-shape consistency only (exactly one fp row per kept
-        # doc, exactly N_BANDS band rows per kept doc, no orphans) —
-        # O(side tables), zero text reads
-        def _bands_table_check() -> bool:
-            return (
-                bands_v2.count() == _N_BANDS * n_after
-                and bands_v2.select("doc_id").distinct().count() == n_after
+        # v1: the survivor set of the prior runs (keep-min-doc_id per
+        # fingerprint — the state every earlier refresh left behind)
+        fp = F.md5(norm_text(F.col("text")))
+        survivors = (
+            prior.withColumn("_fp", fp)
+            .withColumn(
+                "_keep", F.min("doc_id").over(Window.partitionBy("_fp"))
             )
-
-        def _fps_table_check() -> bool:
-            return (
-                fps_v2.select("doc_id").distinct().count() == n_after
-            )
-
-    def _no_leak_check() -> bool:
-        return (
-            inserted.where(
-                F.col("doc_id") % CONTAM_BENCH_MOD == 0
-            ).count()
-            == 0
-            and _sh_hashes(inserted.select("doc_id", "text"))
-            .join(bench_sh, "sh")
-            .count()
-            == 0
+            .where(F.col("doc_id") == F.col("_keep"))
+            .drop("_fp", "_keep")
+        )
+        lake_path = os.path.join(workdir, "corpus")
+        lake_commit(survivors, lake_path)  # v1
+        v1 = lake_read(spark, lake_path, 1)
+        # v1 is settled: the text-index BUILD (its own tidx store) can run
+        # under everything up to the serve check; the append waits on this
+        # future inside the final pool
+        text_build_fut = bg.submit(build_text_index, spark, v1, tidx)
+        # the PERSISTED dedup-gate table (round 10, closing the r9 weak #1):
+        # (doc_id, band_key) rows for every kept doc — 4 rows/doc whatever
+        # the text size — committed alongside the corpus and appended per
+        # MERGE below, exactly as ann_index_append maintains the vector
+        # index. Every subsequent gate pass reads THIS table instead of
+        # re-shingling the survivor corpus, so a crawl increment costs
+        # O(increment + candidates), not O(corpus).
+        bands_path = os.path.join(workdir, "dedup_bands")
+        # the PERSISTED exact-dedup table (r11, closing the r10 verdict's
+        # #1): (doc_id, fp) for every kept doc — the fingerprint is
+        # computed ONCE at insert time and maintained per MERGE, so the
+        # next refresh's anti-join is a key join against ~48-byte rows,
+        # never a survivor-text re-hash
+        fps_path = os.path.join(workdir, "dedup_fps")
+        # the two side-table v1 commits write DISJOINT stores from the same
+        # settled corpus v1; the survivor count is read-only — overlap the
+        # three jobs (r14, guide §2.6 — attest.parallel_vals)
+        n_kept, _, _ = parallel_vals(
+            lambda: v1.count(),
+            lambda: lake_commit(minhash_band_rows(v1), bands_path),
+            lambda: lake_commit(fingerprint_rows(v1), fps_path),
         )
 
-    (
-        merge_atomic_ok,
-        no_near_dup_ok,
-        no_dup_ok,
-        bands_table_ok,
-        fps_table_ok,
-        no_leak_ok,
-    ) = parallel_vals(
-        _merge_atomic_check,
-        _near_dup_check,
-        _no_dup_check,
-        _bands_table_check,
-        _fps_table_check,
-        _no_leak_check,
-    )
-    # advisor coverage for the protocol SIDE tables (r11, verdict #6):
-    # the band + fingerprint tables accumulate one small-file append
-    # per refresh — the maintenance advisor must watch them like any
-    # lake table, its compact verdict must FIRE on the accumulated
-    # debt, and applying the repair (compact + vacuum) must preserve
-    # the gate's artifacts row-for-row
-    from cours_datalake_dwh_td_kafka_spark.lake import (
-        lake_compact,
-        lake_maintenance_plan,
-        lake_vacuum,
-    )
-
-    def _maintain_side(side: str) -> bool:
-        # side-table policy: each refresh appends exactly ONE small
-        # file, so the fold threshold is 2 (the data-table default of 4
-        # would let debt ride for four crawls before the advisor speaks)
-        plan = lake_maintenance_plan(side, min_small_files=2)
-        ok = bool(plan["compact_due"])
-        # EAGER checkpoint: the vacuum below deletes the files this
-        # frame reads, so it must materialize BEFORE the repair (the
-        # pre-r14 code materialized it via its count() action)
-        before = lake_read(spark, side).localCheckpoint()
-        lake_compact(spark, side, target_files=1)
-        lake_vacuum(side, keep_versions=1, orphan_grace_seconds=0)
-        after = lake_read(spark, side)
-        return (
-            ok
-            and multiset_eq(after, before)
-            and not lake_maintenance_plan(side, min_small_files=2)[
-                "compact_due"
-            ]
+        # incremental exact dedup of the batch against the PERSISTED
+        # fingerprints (the lake's survivor text is never read here)
+        # (localCheckpoint: fresh feeds three consumers — the unique count,
+        # the leak scan, and the clean set — one anti-join, not three)
+        fresh_ids = incremental_new_docs(
+            None, batch, corpus_fps=lake_read(spark, fps_path, 1)
+        ).select("doc_id")
+        fresh = batch.join(fresh_ids, "doc_id", "leftsemi").localCheckpoint(
+            eager=False
+        )
+        # two independent counts (fresh's checkpoint materializes inside
+        # its OWN thunk only — n_batch never touches it)
+        n_batch, n_new_unique = parallel_vals(
+            lambda: batch.count(), lambda: fresh.count()
         )
 
-    # the two side stores are disjoint: their repair cycles overlap
-    side_tables_maintained_ok = all(
-        parallel_vals(
-            lambda: _maintain_side(bands_path),
-            lambda: _maintain_side(fps_path),
-        )
-    )
-
-    def _repaired_gate_check() -> bool:
-        # the repaired band table still answers the gate identically
-        # (read-only over the already-settled repaired store — rides
-        # the final pool instead of serializing before it, r15)
-        return (
-            incremental_near_dups(
-                v2.where(F.col("doc_id") < cut),
-                inserted,
-                corpus_bands=lake_read(spark, bands_path).where(
-                    F.col("doc_id") < cut
-                ),
-            ).count()
-            == 0
-        )
-
-    # maintain the TEXT retrieval index through the merge (r11 verdict
-    # #2's append leg): the posting lists are an artifact exactly like
-    # the vectors — built once with the survivor commit, O(increment)
-    # appended per MERGE. With attest=True the served BM25 answer over
-    # the refreshed corpus is compared against the direct in-query
-    # operator (an O(corpus) re-tokenize, gated like the other
-    # attestation recomputes); attest=False trusts the maintained
-    # artifact, whose exactness the registered row proves.
-    def _text_index_leg() -> bool:
-        text_build_fut.result()  # v1 build started right after v1 settled
-        append_text_index(spark, clean, tidx)
-        if attest:
-            from cours_datalake_dwh_td_kafka_spark.operators.text_analysis import (  # noqa: E501
-                bm25_search,
-            )
-
-            return multiset_eq(bm25_query_index(spark, tidx), bm25_search(v2))
-        # artifact-shape consistency only: one doclen row per kept doc
-        from cours_datalake_dwh_td_kafka_spark.operators.text_index import (
-            _doclens_path,
-        )
-
-        return (
-            lake_read(spark, _doclens_path(tidx))
-            .select("doc_id")
+        # decontamination gate: drop benchmark members AND 8-gram leakers
+        # (bench_sh is scanned by the gate AND the post-merge re-check)
+        bench_sh = (
+            _sh_hashes(d.where(F.col("doc_id") % CONTAM_BENCH_MOD == 0))
+            .select("sh")
             .distinct()
-            .count()
-            == n_after
+            .localCheckpoint(eager=False)
         )
-
-    def _pack_leg() -> int:
-        # re-pack: the refreshed corpus' shard count (ceil identity —
-        # the pack_efficiency algebra, no per-row packing pass needed)
-        toks = F.size(F.split(norm_text(F.col("text")), " ")).cast("long")
-        return int(
-            v2.select("source", toks.alias("t"))
-            .groupBy("source")
-            .agg(F.sum("t").alias("n_tokens"))
-            .agg(
-                F.sum(
-                    F.ceil(F.col("n_tokens") / F.lit(float(PACK_BUDGET)))
-                ).alias("s")
+        leakers = (
+            _sh_hashes(fresh).join(bench_sh, "sh").select("doc_id").distinct()
+        )
+        # cross-run NEAR-dup gate (round 9): drop increment docs that
+        # near-duplicate a kept survivor — the re-crawled page with a new
+        # footer, which the exact fingerprint anti-join structurally keeps.
+        # Round 10: the corpus side comes from the PERSISTED band table
+        # (never re-shingled), and the exact-Jaccard verify shingles only
+        # the band-candidate corpus docs.
+        near = (
+            incremental_near_dups(
+                v1, fresh, corpus_bands=lake_read(spark, bands_path, 1)
             )
-            .first()
-            .s
+            .select(F.col("inc_doc").alias("doc_id"))
+            .distinct()
+        )
+        clean = (
+            fresh.where(F.col("doc_id") % CONTAM_BENCH_MOD != 0)
+            .join(leakers, "doc_id", "left_anti")
+            .join(near, "doc_id", "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        n_inserted = clean.count()
+
+        # one atomic MERGE commit; snapshot isolation for the prior state.
+        # The two side-table appends write disjoint stores from the already
+        # materialized `clean` checkpoint — overlap all three writes.
+        parallel_vals(
+            lambda: lake_merge_upsert(spark, lake_path, clean, "doc_id"),  # v2
+            lambda: lake_commit(
+                minhash_band_rows(clean), bands_path, mode="append"
+            ),
+            lambda: lake_commit(
+                fingerprint_rows(clean), fps_path, mode="append"
+            ),
+        )
+        # EAGER pin of the post-merge corpus (r15, VERDICT r14 #3 / guide
+        # §2.4): nine downstream consumers (the six checks, the serve
+        # compare, the packing aggregate, the repaired-gate re-check) each
+        # re-derived this frame from the lake; one materialization feeds
+        # them all, and eager is mandatory — the consumers run on pool
+        # threads (a lazy checkpoint raced from two threads can compute
+        # twice).
+        v2 = lake_read(spark, lake_path, 2).localCheckpoint(eager=True)
+        inserted = v2.where(F.col("doc_id") >= cut)
+        # EAGER side-table snapshots: the post-merge checks below share
+        # these frames across threads, and the maintenance repair further
+        # down vacuums the files they read — materialize once, up front
+        bands_v2 = lake_read(spark, bands_path, 2).localCheckpoint(eager=True)
+        fps_v2 = lake_read(spark, fps_path, 2).localCheckpoint(eager=True)
+        n_after = v2.count()
+
+        # ---- post-merge checks: all read-only over settled stores and the
+        # pinned snapshots above — one overlapped pool (r14, guide §2.6)
+        def _merge_atomic_check() -> bool:
+            return (
+                n_after == n_kept + n_inserted
+                and lake_read(spark, lake_path, 1).count() == n_kept
+            )
+
+        def _near_dup_check() -> bool:
+            return (
+                incremental_near_dups(
+                    v2.where(F.col("doc_id") < cut),
+                    inserted,
+                    corpus_bands=bands_v2.where(F.col("doc_id") < cut),
+                ).count()
+                == 0
+            )
+
+        def _no_dup_check() -> bool:
+            # global fingerprint uniqueness, measured on the PERSISTED
+            # table — O(artifact), no text; the attestation thunks prove
+            # the table IS the truth
+            return (
+                fps_v2.select("fp").distinct().count() == n_after
+                and fps_v2.count() == n_after
+            )
+
+        if attest:
+            # the incremental maintenance must be EXACT: each persisted
+            # table after the append equals a from-scratch recompute over
+            # the live snapshot (one signed-tag action per recompute —
+            # VERDICT r13 #4, operators/attest.py). O(corpus) text reads
+            # BY DESIGN — this is the drift-is-zero proof the registered
+            # row attests; the deployable call (attest=False) skips it.
+            def _bands_table_check() -> bool:
+                return multiset_eq(bands_v2, minhash_band_rows(v2))
+
+            def _fps_table_check() -> bool:
+                return multiset_eq(fps_v2, fingerprint_rows(v2))
+        else:
+            # artifact-shape consistency only (exactly one fp row per kept
+            # doc, exactly N_BANDS band rows per kept doc, no orphans) —
+            # O(side tables), zero text reads
+            def _bands_table_check() -> bool:
+                return (
+                    bands_v2.count() == _N_BANDS * n_after
+                    and bands_v2.select("doc_id").distinct().count() == n_after
+                )
+
+            def _fps_table_check() -> bool:
+                return (
+                    fps_v2.select("doc_id").distinct().count() == n_after
+                )
+
+        def _no_leak_check() -> bool:
+            return (
+                inserted.where(
+                    F.col("doc_id") % CONTAM_BENCH_MOD == 0
+                ).count()
+                == 0
+                and _sh_hashes(inserted.select("doc_id", "text"))
+                .join(bench_sh, "sh")
+                .count()
+                == 0
+            )
+
+        (
+            merge_atomic_ok,
+            no_near_dup_ok,
+            no_dup_ok,
+            bands_table_ok,
+            fps_table_ok,
+            no_leak_ok,
+        ) = parallel_vals(
+            _merge_atomic_check,
+            _near_dup_check,
+            _no_dup_check,
+            _bands_table_check,
+            _fps_table_check,
+            _no_leak_check,
+        )
+        # advisor coverage for the protocol SIDE tables (r11, verdict #6):
+        # the band + fingerprint tables accumulate one small-file append
+        # per refresh — the maintenance advisor must watch them like any
+        # lake table, its compact verdict must FIRE on the accumulated
+        # debt, and applying the repair (compact + vacuum) must preserve
+        # the gate's artifacts row-for-row
+        from cours_datalake_dwh_td_kafka_spark.lake import (
+            lake_compact,
+            lake_maintenance_plan,
+            lake_vacuum,
         )
 
-    # the text-index tail (append+serve over the build future), the
-    # early-started ANN chain's join, the packing aggregate and the
-    # repaired-gate re-check touch disjoint stores / are read-only:
-    # overlap all four (r14/r15, guide §2.6)
-    try:
+        def _maintain_side(side: str) -> bool:
+            # side-table policy: each refresh appends exactly ONE small
+            # file, so the fold threshold is 2 (the data-table default of 4
+            # would let debt ride for four crawls before the advisor speaks)
+            plan = lake_maintenance_plan(side, min_small_files=2)
+            ok = bool(plan["compact_due"])
+            # EAGER checkpoint: the vacuum below deletes the files this
+            # frame reads, so it must materialize BEFORE the repair (the
+            # pre-r14 code materialized it via its count() action)
+            before = lake_read(spark, side).localCheckpoint()
+            lake_compact(spark, side, target_files=1)
+            lake_vacuum(side, keep_versions=1, orphan_grace_seconds=0)
+            after = lake_read(spark, side)
+            return (
+                ok
+                and multiset_eq(after, before)
+                and not lake_maintenance_plan(side, min_small_files=2)[
+                    "compact_due"
+                ]
+            )
+
+        # the two side stores are disjoint: their repair cycles overlap
+        side_tables_maintained_ok = all(
+            parallel_vals(
+                lambda: _maintain_side(bands_path),
+                lambda: _maintain_side(fps_path),
+            )
+        )
+
+        def _repaired_gate_check() -> bool:
+            # the repaired band table still answers the gate identically
+            # (read-only over the already-settled repaired store — rides
+            # the final pool instead of serializing before it, r15)
+            return (
+                incremental_near_dups(
+                    v2.where(F.col("doc_id") < cut),
+                    inserted,
+                    corpus_bands=lake_read(spark, bands_path).where(
+                        F.col("doc_id") < cut
+                    ),
+                ).count()
+                == 0
+            )
+
+        # maintain the TEXT retrieval index through the merge (r11 verdict
+        # #2's append leg): the posting lists are an artifact exactly like
+        # the vectors — built once with the survivor commit, O(increment)
+        # appended per MERGE. With attest=True the served BM25 answer over
+        # the refreshed corpus is compared against the direct in-query
+        # operator (an O(corpus) re-tokenize, gated like the other
+        # attestation recomputes); attest=False trusts the maintained
+        # artifact, whose exactness the registered row proves.
+        def _text_index_leg() -> bool:
+            text_build_fut.result()  # v1 build started right after v1 settled
+            append_text_index(spark, clean, tidx)
+            if attest:
+                from cours_datalake_dwh_td_kafka_spark.operators.text_analysis import (  # noqa: E501
+                    bm25_search,
+                )
+
+                return multiset_eq(
+                    bm25_query_index(spark, tidx), bm25_search(v2)
+                )
+            # artifact-shape consistency only: one doclen row per kept doc
+            from cours_datalake_dwh_td_kafka_spark.operators.text_index import (  # noqa: E501
+                _doclens_path,
+            )
+
+            return (
+                lake_read(spark, _doclens_path(tidx))
+                .select("doc_id")
+                .distinct()
+                .count()
+                == n_after
+            )
+
+        def _pack_leg() -> int:
+            # re-pack: the refreshed corpus' shard count (ceil identity —
+            # the pack_efficiency algebra, no per-row packing pass needed)
+            toks = F.size(F.split(norm_text(F.col("text")), " ")).cast("long")
+            return int(
+                v2.select("source", toks.alias("t"))
+                .groupBy("source")
+                .agg(F.sum("t").alias("n_tokens"))
+                .agg(
+                    F.sum(
+                        F.ceil(F.col("n_tokens") / F.lit(float(PACK_BUDGET)))
+                    ).alias("s")
+                )
+                .first()
+                .s
+            )
+
+        # the text-index tail (append+serve over the build future), the
+        # early-started ANN chain's join, the packing aggregate and the
+        # repaired-gate re-check touch disjoint stores / are read-only:
+        # overlap all four (r14/r15, guide §2.6)
         (
             text_index_serves_ok,
             serves_union,
@@ -522,8 +522,6 @@ def corpus_refresh(
         ) = parallel_vals(
             _text_index_leg, ann_fut.result, _pack_leg, _repaired_gate_check
         )
-    finally:
-        bg.shutdown(wait=True)
     side_tables_maintained_ok &= repaired_gate_ok
 
     # ONE atomic catalog commit pairs the merged corpus with every
@@ -986,8 +984,6 @@ def erasure_protocol(
         ann_topk_bruteforce,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     erased = F.col("doc_id") % ERASE_MOD == ERASE_REMAINDER
     lake_path = os.path.join(workdir, "docs")
     idx = os.path.join(workdir, "idx")
@@ -998,85 +994,84 @@ def erasure_protocol(
     # r15 (guide §2.6, the ann_index_delete recipe): the serving
     # check's brute-force truth reads only the input frame — start its
     # eager pin first so the BLAS pass rides under both write phases.
-    bg = ThreadPoolExecutor(max_workers=1)
-    truth_rem_fut = bg.submit(
-        lambda: ann_topk_bruteforce(e.where(~vec_erased))
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    # build phase: the two stores are disjoint and the two counts are
-    # read-only — overlap the four jobs (r14, guide §2.6)
-    _, _, n_docs, n_erased = parallel_vals(
-        lambda: lake_commit(d, lake_path),  # v1
-        lambda: build_ivf_index(emb, idx, lake_version=1),
-        lambda: d.count(),
-        lambda: d.where(erased).count(),
-    )
-    import os as _os
+    with legs(spark) as bg:
+        truth_rem_fut = bg.submit(
+            lambda: ann_topk_bruteforce(e.where(~vec_erased))
+            .select("query_id", "neighbor_id")
+            .localCheckpoint(eager=True)
+        )
+        # build phase: the two stores are disjoint and the two counts are
+        # read-only — overlap the four jobs (r14, guide §2.6)
+        _, _, n_docs, n_erased = parallel_vals(
+            lambda: lake_commit(d, lake_path),  # v1
+            lambda: build_ivf_index(emb, idx, lake_version=1),
+            lambda: d.count(),
+            lambda: d.where(erased).count(),
+        )
+        import os as _os
 
-    pinned_idx = _os.path.basename(_current_version_dir(idx))
+        pinned_idx = _os.path.basename(_current_version_dir(idx))
 
-    # the request lands: O(deleted) writes on BOTH stores. The request
-    # ARRIVES as explicit keys (the GDPR shape, r11 verdict #5) — the
-    # keys-overload writes them without any lake read, end-to-end
-    # O(deleted) including the scan. Disjoint stores again: overlapped.
-    _, _, n_vecs_erased = parallel_vals(
-        lambda: lake_delete_keys(
-            spark, lake_path, "doc_id",
-            keys=d.where(erased).select("doc_id"),
-        ),  # v2
-        lambda: delete_from_ivf_index(
-            emb.where(vec_erased).select("vec_id"), idx
-        ),
-        lambda: emb.where(vec_erased).count(),
-    )
-
-    # serving checks: read-only over the settled stores — one pool
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-
-    def _lake_without_check() -> bool:
-        live = lake_read(spark, lake_path)
-        return (
-            live.where(erased).count() == 0
-            and live.count() == n_docs - n_erased
+        # the request lands: O(deleted) writes on BOTH stores. The request
+        # ARRIVES as explicit keys (the GDPR shape, r11 verdict #5) — the
+        # keys-overload writes them without any lake read, end-to-end
+        # O(deleted) including the scan. Disjoint stores again: overlapped.
+        _, _, n_vecs_erased = parallel_vals(
+            lambda: lake_delete_keys(
+                spark, lake_path, "doc_id",
+                keys=d.where(erased).select("doc_id"),
+            ),  # v2
+            lambda: delete_from_ivf_index(
+                emb.where(vec_erased).select("vec_id"), idx
+            ),
+            lambda: emb.where(vec_erased).count(),
         )
 
-    def _point_check() -> bool:
-        probe_doc = int(d.where(erased).agg(F.min("doc_id")).first()[0])
-        return (
-            lake_read_point(spark, lake_path, "doc_id", probe_doc).count()
-            == 0
+        # serving checks: read-only over the settled stores — one pool
+        q = emb.where(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("emb"),
         )
 
-    def _index_without_check() -> bool:
-        served = ivf_query_index(spark, idx, q, nprobe=N_CELLS).select(
-            "query_id", "neighbor_id"
-        )
-        return multiset_eq(served, truth_rem_fut.result())
-
-    def _snapshots_check() -> bool:
-        # audit trail: pre-erasure snapshots readable BY EXPLICIT version
-        return (
-            lake_read(spark, lake_path, 1).where(erased).count()
-            == n_erased
-            and ivf_query_index(
-                spark, idx, q, nprobe=N_CELLS, version=pinned_idx
+        def _lake_without_check() -> bool:
+            live = lake_read(spark, lake_path)
+            return (
+                live.where(erased).count() == 0
+                and live.count() == n_docs - n_erased
             )
-            .join(
-                emb.where(vec_erased).select(
-                    F.col("vec_id").alias("neighbor_id")
-                ),
-                "neighbor_id",
-                "leftsemi",
-            )
-            .count()
-            > 0  # the old snapshot still serves erased vectors — by design
-        )
 
-    try:
+        def _point_check() -> bool:
+            probe_doc = int(d.where(erased).agg(F.min("doc_id")).first()[0])
+            return (
+                lake_read_point(spark, lake_path, "doc_id", probe_doc).count()
+                == 0
+            )
+
+        def _index_without_check() -> bool:
+            served = ivf_query_index(spark, idx, q, nprobe=N_CELLS).select(
+                "query_id", "neighbor_id"
+            )
+            return multiset_eq(served, truth_rem_fut.result())
+
+        def _snapshots_check() -> bool:
+            # audit trail: pre-erasure snapshots readable BY EXPLICIT version
+            return (
+                lake_read(spark, lake_path, 1).where(erased).count()
+                == n_erased
+                and ivf_query_index(
+                    spark, idx, q, nprobe=N_CELLS, version=pinned_idx
+                )
+                .join(
+                    emb.where(vec_erased).select(
+                        F.col("vec_id").alias("neighbor_id")
+                    ),
+                    "neighbor_id",
+                    "leftsemi",
+                )
+                .count()
+                > 0  # the old snapshot still serves erased vectors — by design
+            )
+
         (
             lake_without,
             point_empty,
@@ -1088,8 +1083,6 @@ def erasure_protocol(
             _index_without_check,
             _snapshots_check,
         )
-    finally:
-        bg.shutdown(wait=True)
 
     # fold + vacuum: the rows are physically GONE from both stores.
     # The reclaim is MEASURED (r11 verdict #7): vacuum's returned

@@ -272,9 +272,8 @@ def q_session_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_path = os.path.join(tmp, "events")
     sess_path = os.path.join(tmp, "sessions")
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from cours_datalake_dwh_td_kafka_spark.operators.attest import (
+        legs,
         parallel_vals,
     )
 
@@ -291,26 +290,27 @@ def q_session_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needs the bootstrap's mark.
     sid = f"sessions:{os.path.abspath(ev_path)}"
     ev_boot = lake_read(spark, ev_path, v_boot)
-    bg = ThreadPoolExecutor(max_workers=1)
-    boot_fut = bg.submit(
-        lambda: lake_commit(
-            sessionize_events(ev_boot),
-            sess_path,
-            stream_batch_id=v_boot,
-            stream_id=sid,
+    with legs(spark) as bg:
+        boot_fut = bg.submit(
+            lambda: lake_commit(
+                sessionize_events(ev_boot),
+                sess_path,
+                stream_batch_id=v_boot,
+                stream_id=sid,
+            )
         )
-    )
-    # the late wave arrives as a 2-version backlog before the next poll
-    lake_commit(
-        e.where(late & (F.col("event_id") % 4 == 0)), ev_path, mode="append"
-    )
-    lake_commit(
-        e.where(late & (F.col("event_id") % 4 == 2)), ev_path, mode="append"
-    )
-    try:
+        # the late wave arrives as a 2-version backlog before the next poll
+        lake_commit(
+            e.where(late & (F.col("event_id") % 4 == 0)),
+            ev_path,
+            mode="append",
+        )
+        lake_commit(
+            e.where(late & (F.col("event_id") % 4 == 2)),
+            ev_path,
+            mode="append",
+        )
         boot_fut.result()
-    finally:
-        bg.shutdown(wait=True)
 
     # the touched-user count AND the full-recompute pin are read-only
     # over the settled event lake; the daemon fold reads the event lake

@@ -47,6 +47,7 @@ from cours_datalake_dwh_td_kafka_spark.lake import (
     lake_read_pruned,
 )
 from cours_datalake_dwh_td_kafka_spark.operators.attest import (
+    legs,
     multiset_eq,
     parallel_vals,
 )
@@ -425,8 +426,6 @@ def text_index_protocol(
         pruned_files,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     lo, hi = d.agg(F.min("doc_id"), F.max("doc_id")).first()
     cut = int(lo) + int((int(hi) - int(lo)) * INCREMENT_SPLIT)
     idx = os.path.join(workdir, "text_index")
@@ -435,42 +434,39 @@ def text_index_protocol(
     # pins before the build+append chain so the full-corpus tokenize
     # rides underneath; the parity checks join them where the
     # sequential form recomputed them.
-    bg = ThreadPoolExecutor(max_workers=2)
-    bm25_want_fut = bg.submit(
-        lambda: bm25_search(d).localCheckpoint(eager=True)
-    )
-    phrase_want_fut = bg.submit(
-        lambda: phrase_search(d).localCheckpoint(eager=True)
-    )
-    build_text_index(spark, d.where(F.col("doc_id") < cut), idx)
-    append_text_index(spark, d.where(F.col("doc_id") >= cut), idx)
-
-    # EAGER: the served frame feeds the parity check AND the returned
-    # rows; one materialization up front keeps the pooled checks below
-    # race-free (r14, guide §2.6 — attest.parallel_vals)
-    served = bm25_query_index(spark, idx).localCheckpoint(eager=True)
-
-    def _bm25_eq_check() -> bool:
-        # one signed-tag action (VERDICT r13 #4) instead of
-        # count + count + exceptAll
-        return multiset_eq(served, bm25_want_fut.result())
-
-    def _phrase_eq_check() -> bool:
-        return multiset_eq(
-            phrase_query_index(spark, idx), phrase_want_fut.result()
+    with legs(spark) as bg:
+        bm25_want_fut = bg.submit(
+            lambda: bm25_search(d).localCheckpoint(eager=True)
         )
+        phrase_want_fut = bg.submit(
+            lambda: phrase_search(d).localCheckpoint(eager=True)
+        )
+        build_text_index(spark, d.where(F.col("doc_id") < cut), idx)
+        append_text_index(spark, d.where(F.col("doc_id") >= cut), idx)
 
-    def _phrase_rows_count() -> int:
-        return _term_postings(
-            spark, idx, tuple(set(PHRASE_QUERY.split(" ")))
-        ).count()
+        # EAGER: the served frame feeds the parity check AND the returned
+        # rows; one materialization up front keeps the pooled checks below
+        # race-free (r14, guide §2.6 — attest.parallel_vals)
+        served = bm25_query_index(spark, idx).localCheckpoint(eager=True)
 
-    try:
+        def _bm25_eq_check() -> bool:
+            # one signed-tag action (VERDICT r13 #4) instead of
+            # count + count + exceptAll
+            return multiset_eq(served, bm25_want_fut.result())
+
+        def _phrase_eq_check() -> bool:
+            return multiset_eq(
+                phrase_query_index(spark, idx), phrase_want_fut.result()
+            )
+
+        def _phrase_rows_count() -> int:
+            return _term_postings(
+                spark, idx, tuple(set(PHRASE_QUERY.split(" ")))
+            ).count()
+
         bm25_eq, phrase_eq, phrase_rows = parallel_vals(
             _bm25_eq_check, _phrase_eq_check, _phrase_rows_count
         )
-    finally:
-        bg.shutdown(wait=True)
     opened: set[str] = set()
     total = 0
     for t in dict.fromkeys(BM25_TERMS):

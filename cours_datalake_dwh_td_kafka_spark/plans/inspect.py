@@ -13,8 +13,11 @@ cluster bill would notice it.
 from __future__ import annotations
 
 import re
+import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -93,6 +96,33 @@ def codegen_compiles(spark: SparkSession) -> int:
     compiles to whichever delta is open."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def count_jobs(
+    spark: SparkSession, fn: Callable[[], Any], description: str | None = None
+) -> tuple[Any, int]:
+    """(``fn()``, number of Spark jobs it submitted), counted under a
+    fresh job group through the status tracker (works with the UI off).
+    ``description`` labels the group's jobs (default: the group id).
+    Jobs that ``fn`` submits from ``attest.legs`` threads inherit the
+    group and are counted; the caller's own group is restored after."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    prev = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    sc.setJobGroup(group, description or group)
+    try:
+        out = fn()
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @contextmanager

@@ -15,6 +15,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cours_datalake_dwh_td_kafka_spark.io import LAKE_TABLES
+from cours_datalake_dwh_td_kafka_spark.plans.inspect import count_jobs
 from cours_datalake_dwh_td_kafka_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -96,16 +97,6 @@ def assert_matches_oracle(spark_df, duck_df: pd.DataFrame, name: str = "") -> No
 
 
 def spark_jobs(spark, fn):
-    """(``fn()``, number of Spark jobs it submitted), counted under a
-    fresh job group through the status tracker (works with the UI off).
-    Jobs submitted from other threads are not counted."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"test-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    """(``fn()``, number of Spark jobs it submitted): see
+    ``plans.inspect.count_jobs``."""
+    return count_jobs(spark, fn)

@@ -90,3 +90,75 @@ def test_parallel_vals_matches_sequential_on_spark_jobs(spark):
         lambda: df.where("k in (1, 2)").count(),
     ]
     assert parallel_vals(*thunks) == [t() for t in thunks]
+
+
+# ---------------------------------------------------------------------------
+# legs: the one background-work primitive. Leaving the block joins every
+# leg, a leg failure nobody read is raised, a failing body cancels the
+# queued legs, and legs keep the submitter's Spark job group.
+# ---------------------------------------------------------------------------
+import threading
+
+from cours_datalake_dwh_td_kafka_spark.operators.attest import (
+    LEG_THREAD_PREFIX,
+    legs,
+)
+from cours_datalake_dwh_td_kafka_spark.plans.inspect import count_jobs
+
+
+def _live_legs() -> list[str]:
+    return [
+        t.name
+        for t in threading.enumerate()
+        if t.name.startswith(LEG_THREAD_PREFIX)
+    ]
+
+
+def test_legs_raise_an_unread_leg_failure(spark):
+    def boom():
+        raise ValueError("leg failed")
+
+    with pytest.raises(ValueError, match="leg failed"):
+        with legs(spark) as bg:
+            bg.submit(lambda: 1)
+            bg.submit(boom)
+    # a failure the body read through .exception() is the body's to
+    # handle: it is not raised again on exit
+    with legs(spark) as bg:
+        fut = bg.submit(boom)
+        assert isinstance(fut.exception(), ValueError)
+    assert _live_legs() == []
+
+
+def test_legs_failing_body_cancels_queued_and_joins_running(spark):
+    started, release = threading.Event(), threading.Event()
+    ran = []
+
+    def sleeper():
+        started.set()
+        release.wait(timeout=1.0)  # still running when the body fails
+        ran.append("running")
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with legs(spark, max_workers=1) as bg:
+            running = bg.submit(sleeper)
+            queued = bg.submit(lambda: ran.append("queued"))
+            assert started.wait(timeout=30)
+            raise RuntimeError("body failed")
+    # the running leg was joined before the exception left the block;
+    # the leg queued behind it never ran
+    assert ran == ["running"] and running.done()
+    assert queued.cancelled()
+    assert _live_legs() == []
+
+
+def test_parallel_vals_jobs_keep_the_callers_job_group(spark):
+    df = spark.range(1000)
+    vals, jobs = count_jobs(
+        spark,
+        lambda: parallel_vals(
+            lambda: df.count(), lambda: df.where("id % 2 = 0").count()
+        ),
+    )
+    assert vals == [1000, 500]
+    assert jobs >= 2

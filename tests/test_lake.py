@@ -386,86 +386,6 @@ def test_lake_compact_loses_commit_race(spark, tmp_path, monkeypatch):
     assert isinstance(ei.value.__cause__, FileExistsError)
 
 
-@pytest.mark.slow
-def test_graftlake_python_datasource(spark, tmp_path):
-    """The Spark-4 Python DataSource surface: spark.read.format
-    ('graftlake') resolves the manifest inside the engine's own planning
-    contract — latest snapshot by default, option('version', n) time
-    travel, one scan partition per committed file."""
-    pytest.importorskip("pyspark.sql.datasource")
-    from cours_datalake_dwh_td_kafka_spark.sources.lake_source import (
-        register_lake_source,
-    )
-
-    path = str(tmp_path / "t")
-    lake_commit(_df(spark, [(1, "a"), (2, "b")]), path)
-    lake_commit(_df(spark, [(3, "c")]), path)
-    assert register_lake_source(spark)
-
-    latest = spark.read.format("graftlake").option("path", path).load()
-    assert {tuple(r) for r in latest.collect()} == {
-        (1, "a"),
-        (2, "b"),
-        (3, "c"),
-    }
-    v1 = (
-        spark.read.format("graftlake")
-        .option("path", path)
-        .option("version", 1)
-        .load()
-    )
-    assert {tuple(r) for r in v1.collect()} == {(1, "a"), (2, "b")}
-    # agrees with the manifest-resolving reader on the same snapshot
-    assert {tuple(r) for r in lake_read(spark, path).collect()} == {
-        tuple(r) for r in latest.collect()
-    }
-
-
-def test_graftlake_filter_pushdown(spark, tmp_path):
-    """With option('pushdown', 'true'), EqualTo/GreaterThan predicates
-    push through the Python DataSource into pyarrow read filters
-    (row-group pruning) — each load-filter-once pattern gives correct
-    results; OR shapes (not pushable per the API) evaluate Spark-side.
-    With pushdown OFF (the default), filters are never consumed, so a
-    SHARED DataFrame handle stays correct across differently-filtered
-    queries (the planning worker caches one reader per DataFrame —
-    the reason pushdown is opt-in)."""
-    pytest.importorskip("pyspark.sql.datasource")
-    from cours_datalake_dwh_td_kafka_spark.sources.lake_source import (
-        register_lake_source,
-    )
-
-    path = str(tmp_path / "t")
-    lake_commit(
-        spark.createDataFrame(
-            [(i, f"v{i}") for i in range(100)], ["id", "val"]
-        ),
-        path,
-    )
-    register_lake_source(spark)
-
-    def load(pushdown):
-        return (
-            spark.read.format("graftlake")
-            .option("path", path)
-            .option("pushdown", "true" if pushdown else "false")
-            .load()
-        )
-
-    # load-filter-once with pushdown: correct for every supported shape
-    assert load(True).filter("id = 7").collect() == [(7, "v7")]
-    assert load(True).filter("id > 95").count() == 4
-    assert load(True).filter("id > 90 AND id = 93").collect() == [
-        (93, "v93")
-    ]
-    assert load(True).filter("id = 3 OR id = 96").count() == 2  # not pushed
-    # default mode: one shared handle, many query shapes — all correct
-    df = load(False)
-    assert df.filter("id = 7").count() == 1
-    assert df.filter("id = 3 OR id = 96").count() == 2
-    assert df.count() == 100
-
-
 def test_schema_evolution_add_column(spark, tmp_path):
     """Add-column append: the new reader sees NULLs for pre-column rows
     and values for appended ones; time travel to the pre-column version
@@ -523,53 +443,6 @@ def test_schema_evolution_add_column(spark, tmp_path):
         for r in lake_read(spark, path, v_after).collect()
     }
     assert after == {**rows, 6: (None, 0.1)}
-
-
-def test_graftlake_datasource_reads_evolved_schema(spark, tmp_path):
-    """The graftlake DataSource serves the manifest's DECLARED schema:
-    after an add-column append, pre-column files read back with NULLs,
-    and version-pinned time travel to the pre-column snapshot shows the
-    old schema — through the DataSource, not just lake_read."""
-    from cours_datalake_dwh_td_kafka_spark.lake import lake_commit
-    from cours_datalake_dwh_td_kafka_spark.sources.lake_source import (
-        register_lake_source,
-    )
-
-    if not register_lake_source(spark):
-        import pytest as _pytest
-
-        _pytest.skip("PySpark < 4: no Python DataSource API")
-    path = str(tmp_path / "t")
-    lake_commit(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id BIGINT, name STRING"),
-        path,
-    )
-    lake_commit(
-        spark.createDataFrame([(3, "c", 0.9)], "id BIGINT, name STRING, q DOUBLE"),
-        path,
-    )
-    cur = spark.read.format("graftlake").option("path", path).load()
-    assert cur.columns == ["id", "name", "q"]
-    rows = {r.id: (r.name, r.q) for r in cur.collect()}
-    assert rows == {1: ("a", None), 2: ("b", None), 3: ("c", 0.9)}
-    old = (
-        spark.read.format("graftlake")
-        .option("path", path)
-        .option("version", "1")
-        .load()
-    )
-    assert old.columns == ["id", "name"]
-    assert {r.id for r in old.collect()} == {1, 2}
-    # consumed pushdown filter on the NEW column: pre-column files
-    # contribute nothing (NULL never passes =/>), new files filter fine
-    pushed = (
-        spark.read.format("graftlake")
-        .option("path", path)
-        .option("pushdown", "true")
-        .load()
-        .where("q > 0.5")
-    )
-    assert [(r.id, r.q) for r in pushed.collect()] == [(3, 0.9)]
 
 
 def test_lake_diff_across_schema_versions(spark, tmp_path):

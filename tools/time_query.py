@@ -8,9 +8,10 @@ default action here is the noop sink: it computes EVERY column of every
 row, so column-pruning cannot make the timed region cheaper than the
 real query. Pass --count to reproduce bench.py's exact timed action.
 Prints one JSON line per query with min/median over repeats, plus each
-repeat's seconds and the classes Spark compiled from generated code
-during it (a warm repeat that still compiles is missing the codegen
-cache).
+repeat's seconds, the Spark jobs it submitted (counted under a job group
+described by the query name, background legs included) and the classes
+Spark compiled from generated code during it (a warm repeat that still
+compiles is missing the codegen cache).
 """
 
 from __future__ import annotations
@@ -24,7 +25,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cours_datalake_dwh_td_kafka_spark import registry
-from cours_datalake_dwh_td_kafka_spark.plans.inspect import codegen_compiles
+from cours_datalake_dwh_td_kafka_spark.plans.inspect import (
+    codegen_compiles,
+    count_jobs,
+)
 from cours_datalake_dwh_td_kafka_spark.session import get_spark
 
 
@@ -60,19 +64,26 @@ def main() -> None:
         load_table(spark, sf_dir, t).count()
     spark.range(10).mapInPandas(lambda it: it, "id LONG").count()
 
+    def run(name: str) -> float:
+        t0 = time.perf_counter()
+        df = qs[name](spark, sf_dir)
+        if use_count:
+            df.count()
+        else:
+            df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
     for name in names:
-        spark.sparkContext.setJobDescription(name)
         times = []
+        jobs = []
         compiles = []
         for _ in range(repeats):
             c0 = codegen_compiles(spark)
-            t0 = time.perf_counter()
-            df = qs[name](spark, sf_dir)
-            if use_count:
-                df.count()
-            else:
-                df.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
+            secs, n_jobs = count_jobs(
+                spark, lambda: run(name), description=name
+            )
+            times.append(secs)
+            jobs.append(n_jobs)
             compiles.append(codegen_compiles(spark) - c0)
         print(
             json.dumps(
@@ -82,6 +93,7 @@ def main() -> None:
                     "med": round(statistics.median(times), 3),
                     "n": repeats,
                     "secs": [round(t, 3) for t in times],
+                    "jobs": jobs,
                     "compiles": compiles,
                     "action": "count" if use_count else "noop",
                 }
