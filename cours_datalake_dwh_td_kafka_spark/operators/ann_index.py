@@ -5,10 +5,33 @@ serving workload that answers many query batches against one corpus.
 
 Index layout (plain parquet, no sidecar formats; versioned like the
 lake layer so a rebuild is ATOMIC for readers):
-    <index>/CURRENT                          pointer file -> live version
-    <index>/v_<id>/centroids.parquet         (cell, centroid array<double>)
-    <index>/v_<id>/manifest.json             vector roots this version serves
-    <index>/v_<id>/vectors/cell=<c>/part-*.parquet  cell-PARTITIONED rows
+    <index>/CURRENT                  pointer file -> live version
+    <index>/CURRENT.lock             flock file of the publish CAS
+    <index>/v_<id>/centroids.parquet (cell int, centroid array<double>)
+    <index>/v_<id>/manifest.json     {"vector_roots": [...],
+                                      "tombstone_roots": [...],
+                                      "lake_version": n}
+    <index>/v_<id>/vectors/cell=<c>/part-*.parquet
+                                     IVF rows (vec_id, emb, *meta),
+                                     cell-PARTITIONED
+    <index>/v_<id>/codes/cell=<c>/part-*.parquet
+                                     IVF-PQ rows (vec_id, codes, *meta),
+                                     cell-PARTITIONED
+    <index>/v_<id>/books.parquet     PQ codebooks (sub int, code int,
+                                     centroid array<double>)
+    <index>/v_<id>/rotation.parquet  OPQ rotation (i int, row array<double>)
+    <index>/v_<id>/tombstones/       vec_ids this version deletes
+
+Manifest roots are relative to ``<index>``; ``tombstone_roots`` and
+``lake_version`` are written only when present, and versions that
+predate the manifest serve their own ``vectors/`` or ``codes/``
+directory (:func:`_read_manifest`). Every reader goes through one small
+surface: :func:`_version_dir` (pinned or CURRENT), :func:`_read_manifest`,
+one loader per artifact (the three artifact tables are read under the
+declared schemas their writers use) and :func:`_live_rows`. The live
+rows are ONE ``spark.read.parquet`` per root plus ``union``: a single
+multi-path read of several cell-partitioned roots fails Spark's
+partition discovery (CONFLICTING_DIRECTORY_STRUCTURES).
 
 A rebuild writes a complete NEW version directory and atomically swaps
 the CURRENT pointer (tmp + rename); a reader that resolved the pointer
@@ -31,8 +54,11 @@ lake layer's z-order/bucket levers (io.py).
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,9 +73,19 @@ from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
     TOP_K,
     QUANTIZER_SAMPLE,
     _fit_cells,
+    _plan_probes,
     global_topk,
 )
 from cours_datalake_dwh_td_kafka_spark.registry import register
+
+# declared schemas of the quantizer artifacts, shared by writer and
+# loader: a load then reads no parquet footer to learn what the writer
+# fixed (vector/code roots still infer — their columns carry meta_cols)
+_CENTROIDS_DDL = "cell int, centroid array<double>"
+_BOOKS_DDL = "sub int, code int, centroid array<double>"
+_ROTATION_DDL = "i int, row array<double>"
+#: vector/code row columns that are not filtered-ANN metadata
+_CORE_COLS = ("vec_id", "emb", "codes", "cell")
 
 
 def _current_version_dir(path: str) -> str:
@@ -176,36 +212,129 @@ def _publish_current(
         os.close(fd)  # closing the fd releases the flock
 
 
-def _vector_roots(path: str, vdir: str) -> list[str]:
-    """Vector-data roots of a version: the version's ``manifest.json``
-    lists roots RELATIVE to the index path (an appended version
-    references its ancestors' vector directories instead of copying
-    them); versions predating the manifest own exactly their local
-    ``vectors/`` directory."""
-    import json
+class _Manifest(NamedTuple):
+    vector_roots: list[str]
+    tombstone_roots: list[str]
+    lake_version: int | None
 
+
+def _read_manifest(path: str, vdir: str) -> _Manifest:
+    """THE reader of a version's ``manifest.json``: its vector (or PQ
+    code) roots and tombstone roots, stored RELATIVE to the index path
+    (an appended version references its ancestors' directories instead
+    of copying them) and returned absolute, plus its lake pin.
+
+    A version without a manifest predates append support — ``fmt1`` tag
+    directories are reused across runs, so such a version can still be
+    served: it owns exactly its local ``codes/`` (PQ layout) or
+    ``vectors/`` directory, with no tombstones and no lake pin."""
     mpath = os.path.join(vdir, "manifest.json")
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            return [
-                os.path.join(path, r) for r in json.load(f)["vector_roots"]
-            ]
-    return [os.path.join(vdir, "vectors")]
+    if not os.path.exists(mpath):
+        codes = os.path.join(vdir, "codes")
+        local = codes if os.path.isdir(codes) else os.path.join(vdir, "vectors")
+        return _Manifest([local], [], None)
+    with open(mpath) as f:
+        m = json.load(f)
+    return _Manifest(
+        [os.path.join(path, r) for r in m["vector_roots"]],
+        [os.path.join(path, r) for r in m.get("tombstone_roots", [])],
+        m.get("lake_version"),
+    )
+
+
+def _vector_roots(path: str, vdir: str) -> list[str]:
+    """Vector (or PQ code) roots a version serves, absolute."""
+    return _read_manifest(path, vdir).vector_roots
 
 
 def _tombstone_roots(path: str, vdir: str) -> list[str]:
     """Tombstone roots of a version (absolute paths); empty for
     versions with no pending vector deletions."""
-    import json
+    return _read_manifest(path, vdir).tombstone_roots
 
-    mpath = os.path.join(vdir, "manifest.json")
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            return [
-                os.path.join(path, r)
-                for r in json.load(f).get("tombstone_roots", [])
-            ]
-    return []
+
+def _version_dir(path: str, version: str | None) -> str:
+    """The directory of version ``version``, or of the live version
+    (through the CURRENT pointer) when ``version`` is None."""
+    if version is None:
+        return _current_version_dir(path)
+    return os.path.join(path, version)
+
+
+def _live_rows(
+    spark: SparkSession, path: str, vdir: str, cells: list | None = None
+) -> DataFrame:
+    """The rows a version serves: its vector (or code) roots unioned,
+    pruned to ``cells`` when given, minus every tombstoned vec_id.
+
+    One ``spark.read.parquet(root)`` per root, then ``union``: a single
+    multi-path read of several cell-partitioned roots fails partition
+    discovery (CONFLICTING_DIRECTORY_STRUCTURES). The ``cell IN``
+    filter on each root is what partition pruning turns into directory
+    selection."""
+    m = _read_manifest(path, vdir)
+    parts = [spark.read.parquet(root) for root in m.vector_roots]
+    if cells is not None:
+        parts = [p.where(F.col("cell").isin(cells)) for p in parts]
+    rows = functools.reduce(DataFrame.union, parts)
+    if m.tombstone_roots:
+        # no broadcast hint: AQE broadcasts a small tombstone set by
+        # itself; a bulk erasure must shuffle
+        tomb = (
+            spark.read.parquet(*m.tombstone_roots).select("vec_id").distinct()
+        )
+        rows = rows.join(tomb, "vec_id", "left_anti")
+    return rows
+
+
+def _load_centroids(spark: SparkSession, vdir: str):
+    """The version's coarse quantizer as an (n_cells, d) numpy matrix,
+    row ``c`` = cell ``c``."""
+    import numpy as np
+
+    rows = (
+        spark.read.schema(_CENTROIDS_DDL)
+        .parquet(os.path.join(vdir, "centroids.parquet"))
+        .collect()
+    )
+    if not rows:
+        raise ValueError(f"empty IVF index at {os.path.dirname(vdir)}")
+    cents = np.zeros((len(rows), len(rows[0].centroid)))
+    for r in rows:
+        cents[r.cell] = r.centroid
+    return cents
+
+
+def _load_books(spark: SparkSession, vdir: str):
+    """The version's PQ codebooks as an (m, k, d/m) numpy array."""
+    import numpy as np
+
+    rows = (
+        spark.read.schema(_BOOKS_DDL)
+        .parquet(os.path.join(vdir, "books.parquet"))
+        .collect()
+    )
+    m = max(r.sub for r in rows) + 1
+    k = max(r.code for r in rows) + 1
+    books = np.zeros((m, k, len(rows[0].centroid)))
+    for r in rows:
+        books[r.sub, r.code] = r.centroid
+    return books
+
+
+def _load_rotation(spark: SparkSession, vdir: str):
+    """The version's OPQ rotation as a d x d numpy matrix, or None for
+    a plain-PQ index (no rotation artifact persisted)."""
+    import numpy as np
+
+    rdir = os.path.join(vdir, "rotation.parquet")
+    if not os.path.exists(rdir):
+        return None
+    rows = spark.read.schema(_ROTATION_DDL).parquet(rdir).collect()
+    R = np.zeros((len(rows), len(rows)))
+    for r in rows:
+        R[r.i] = r.row
+    return R
 
 
 def _referenced_versions(path: str) -> set[str]:
@@ -218,7 +347,8 @@ def _referenced_versions(path: str) -> set[str]:
     except ValueError:
         return set()
     live = {os.path.basename(vdir)}
-    for root in _vector_roots(path, vdir) + _tombstone_roots(path, vdir):
+    m = _read_manifest(path, vdir)
+    for root in m.vector_roots + m.tombstone_roots:
         rel = os.path.relpath(root, path)
         live.add(rel.split(os.sep)[0])
     return live
@@ -313,9 +443,6 @@ def build_ivf_index(
         F.col("embedding").cast("array<double>").alias("emb"),
         *meta_cols,
     )
-    meta_schema = "".join(
-        f", {c} {t}" for c, t in emb_d.dtypes if c in meta_cols
-    )
     sample_rows = (
         emb_d.orderBy(F.md5(F.col("vec_id").cast("string")))
         .limit(QUANTIZER_SAMPLE)
@@ -324,16 +451,7 @@ def build_ivf_index(
     )
     centroids = _fit_cells([r.emb for r in sample_rows], n_cells)
     n_cells = len(centroids)
-    cents = np.asarray(centroids, dtype=np.float64)
-
-    from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
-        ivf_assign_fn,
-    )
-
-    assigned = emb_d.mapInPandas(
-        ivf_assign_fn(cents),
-        f"vec_id bigint, emb array<double>{meta_schema}, cell int",
-    )
+    assigned = _assign_cells(emb_d, np.asarray(centroids, dtype=np.float64))
     # fresh immutable version dir; the pointer swap below is the ONLY
     # mutation readers can observe, so a half-failed build never poisons
     # the path (its unreferenced v_ dir is vacuum_index residue) and a
@@ -342,8 +460,7 @@ def build_ivf_index(
     vdir = os.path.join(path, version)
     assigned.write.partitionBy("cell").parquet(f"{vdir}/vectors")
     spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
+        list(enumerate(centroids)), _CENTROIDS_DDL
     ).write.parquet(f"{vdir}/centroids.parquet")
     _write_index_manifest(vdir, [f"{version}/vectors"], lake_version)
     os.makedirs(path, exist_ok=True)
@@ -357,8 +474,6 @@ def _write_index_manifest(
     lake_version: int | None = None,
     tombstone_roots: list[str] | None = None,
 ) -> None:
-    import json
-
     m: dict = {"vector_roots": roots}
     if tombstone_roots:
         # merge-on-read vector deletion (round 10): vec_ids listed by
@@ -381,32 +496,52 @@ def index_lake_version(path: str, version: str | None = None) -> int | None:
     """The lake version recorded in an index version's manifest (None
     for indexes built without the pin, or pre-manifest versions).
     ``version`` pins a specific version directory; default CURRENT."""
-    import json
+    return _read_manifest(path, _version_dir(path, version)).lake_version
 
-    vdir = (
-        os.path.join(path, version)
-        if version is not None
-        else _current_version_dir(path)
+
+def _meta_schema(df: DataFrame, meta: "tuple | list") -> str:
+    """DDL suffix (``, label string``) of ``df``'s metadata columns."""
+    return "".join(f", {c} {t}" for c, t in df.dtypes if c in meta)
+
+
+def _assign_cells(emb_d: DataFrame, cents) -> DataFrame:
+    """(vec_id, emb, *meta) rows with their nearest ``cents`` cell."""
+    from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
+        ivf_assign_fn,
     )
-    mpath = os.path.join(vdir, "manifest.json")
-    if not os.path.exists(mpath):
-        return None
-    with open(mpath) as f:
-        return json.load(f).get("lake_version")
+
+    meta = [c for c in emb_d.columns if c not in _CORE_COLS]
+    return emb_d.mapInPandas(
+        ivf_assign_fn(cents),
+        f"vec_id bigint, emb array<double>{_meta_schema(emb_d, meta)}, "
+        "cell int",
+    )
 
 
-def _index_meta_cols(spark: SparkSession, path: str, vdir: str) -> list[str]:
-    """Metadata columns (``meta_cols``) the version's vector rows carry
-    beyond the core (vec_id, emb, cell) — read from one root's schema,
-    so maintenance rungs can PRESERVE them (round-10 review: append and
-    compact used to silently strip the label column a filtered-ANN
-    index depends on)."""
+def _append_input(emb_new: DataFrame, path: str, vdir: str) -> DataFrame:
+    """An appended batch as (vec_id, emb, *meta): the metadata columns
+    (``meta_cols``) the version's rows carry — read from one root's
+    schema — are PRESERVED, so the batch must carry them (round-10
+    review: append used to silently strip the label column a
+    filtered-ANN index depends on)."""
     root = _vector_roots(path, vdir)[0]
-    return [
+    meta = [
         c
-        for c in spark.read.parquet(root).columns
-        if c not in ("vec_id", "emb", "cell")
+        for c in emb_new.sparkSession.read.parquet(root).columns
+        if c not in _CORE_COLS
     ]
+    missing = [c for c in meta if c not in emb_new.columns]
+    if missing:
+        raise ValueError(
+            f"index at {path} stores metadata columns {meta} but the "
+            f"appended batch lacks {missing} — an append must carry the "
+            "filtered-ANN metadata or later label-filtered probes break"
+        )
+    return emb_new.select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("emb"),
+        *meta,
+    )
 
 
 def append_ivf_index(
@@ -425,62 +560,13 @@ def append_ivf_index(
     keep serving their exact snapshot (their manifests never change);
     vacuum keeps every version the live chain references. Returns the
     number of vector roots the new version serves."""
-    import shutil as _shutil
-
-    import numpy as np
-
     vdir = _current_version_dir(path)
-    spark = emb_new.sparkSession
-    cent_rows = spark.read.parquet(f"{vdir}/centroids.parquet").collect()
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cell] = r.centroid
-
-    meta = _index_meta_cols(spark, path, vdir)
-    missing = [c for c in meta if c not in emb_new.columns]
-    if missing:
-        raise ValueError(
-            f"index at {path} stores metadata columns {meta} but the "
-            f"appended batch lacks {missing} — an append must carry the "
-            "filtered-ANN metadata or later label-filtered probes break"
-        )
-    emb_d = emb_new.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("emb"),
-        *meta,
-    )
-    meta_schema = "".join(
-        f", {c} {t}" for c, t in emb_d.dtypes if c in meta
-    )
-    from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
-        ivf_assign_fn,
-    )
-
-    assigned = emb_d.mapInPandas(
-        ivf_assign_fn(cents),
-        f"vec_id bigint, emb array<double>{meta_schema}, cell int",
-    )
+    emb_d = _append_input(emb_new, path, vdir)
+    cents = _load_centroids(emb_new.sparkSession, vdir)
+    assigned = _assign_cells(emb_d, cents)
     version = f"v_{uuid.uuid4().hex[:12]}"
     new_vdir = os.path.join(path, version)
     assigned.write.partitionBy("cell").parquet(f"{new_vdir}/vectors")
-    # the quantizer is frozen: the new version carries a copy of the
-    # centroid table so it stays self-describing (tiny — one row/cell)
-    _shutil.copytree(
-        f"{vdir}/centroids.parquet", f"{new_vdir}/centroids.parquet"
-    )
-    old_rel = [
-        os.path.relpath(r, path) for r in _vector_roots(path, vdir)
-    ]
-    roots = old_rel + [f"{version}/vectors"]
-    if lake_version is None:
-        # no explicit pin: carry the parent's — the appended rows came
-        # from outside the lake protocol, so the recorded snapshot is
-        # unchanged (and stays None for never-pinned indexes)
-        lake_version = index_lake_version(path, os.path.basename(vdir))
-    tomb = [
-        os.path.relpath(r, path) for r in _tombstone_roots(path, vdir)
-    ]
-    _write_index_manifest(new_vdir, roots, lake_version, tomb)
     # single-winner publish: two appends racing under last-writer-wins
     # would both chain from the same parent and the loser's batch would
     # silently vanish (round-8 advice). On a lost CAS, re-chaining is
@@ -491,12 +577,11 @@ def append_ivf_index(
     # fail and let the caller re-append against the new index.
     _rechain_publish(
         path,
-        version,
+        vdir,
         new_vdir,
-        os.path.basename(vdir),
-        f"{version}/vectors",
         ("centroids.parquet",),
         lake_version,
+        own_root=f"{version}/vectors",
     )
     return len(_vector_roots(path, new_vdir))
 
@@ -518,91 +603,90 @@ def delete_from_ivf_index(
     single-winner CAS publish as an append; the quantizer is untouched
     (copied), so a lost race against a sibling append safely
     re-chains. Returns the number of pending tombstone roots."""
-    import shutil as _shutil
-
     vdir = _current_version_dir(path)
     version = f"v_{uuid.uuid4().hex[:12]}"
     new_vdir = os.path.join(path, version)
     vec_ids.select("vec_id").distinct().write.parquet(
         f"{new_vdir}/tombstones"
     )
-    _shutil.copytree(
-        f"{vdir}/centroids.parquet", f"{new_vdir}/centroids.parquet"
-    )
-    roots = [os.path.relpath(r, path) for r in _vector_roots(path, vdir)]
-    own_tomb = f"{version}/tombstones"
-    tomb = [
-        os.path.relpath(r, path) for r in _tombstone_roots(path, vdir)
-    ] + [own_tomb]
-    if lake_version is None:
-        lake_version = index_lake_version(path, os.path.basename(vdir))
-    _write_index_manifest(new_vdir, roots, lake_version, tomb)
+    # a tombstone version adds NO vector root of its own: its roots are
+    # exactly the chain it lands on
     _rechain_publish(
         path,
-        version,
+        vdir,
         new_vdir,
-        os.path.basename(vdir),
-        # a tombstone version adds NO vector root of its own: on a
-        # re-chain the roots are exactly the live chain's
-        None,
         ("centroids.parquet",),
         lake_version,
-        own_tomb,
+        own_tombstone_root=f"{version}/tombstones",
     )
-    return len(_tombstone_roots(path, os.path.join(path, version)))
+    return len(_tombstone_roots(path, new_vdir))
 
 
 def _rechain_publish(
     path: str,
-    version: str,
+    parent_vdir: str,
     new_vdir: str,
-    parent: str,
-    own_root: str | None,
-    fp_dirs: tuple[str, ...],
-    lake_version: int | None = None,
+    artifacts: tuple[str, ...],
+    lake_version: int | None,
+    own_root: str | None = None,
     own_tombstone_root: str | None = None,
 ) -> None:
-    """The CAS-publish-with-sibling-re-chain loop shared by the IVF and
-    IVF-PQ append paths (and, since round 10, tombstone deletions,
-    which contribute ``own_tombstone_root`` but no ``own_root``).
-    Retries the swap against whatever version is live, rewriting the
-    manifest to chain onto it, as long as the quantizer artifacts
-    (``fp_dirs``) are byte-identical (sibling appends copy them; a
-    rebuild retrains them and makes this append's assignments stale —
-    fail loudly)."""
-    import time as _time
+    """Publish ``new_vdir`` as a version chained onto the live one: the
+    CAS-publish-with-sibling-re-chain loop shared by the IVF and IVF-PQ
+    appends and (since round 10) tombstone deletions.
 
+    The frozen quantizer ``artifacts`` are copied from ``parent_vdir``
+    so the new version stays self-describing (tiny — one row per cell
+    or codeword). Every attempt then writes the manifest chained onto
+    its parent: the parent's vector and tombstone roots plus
+    ``own_root`` / ``own_tombstone_root``, and ``lake_version`` — None
+    carries the first parent's pin, because rows appended from outside
+    the lake protocol leave the recorded snapshot unchanged (None stays
+    None for never-pinned indexes). A lost swap re-chains onto whatever
+    version is live as long as its artifacts are byte-identical (sibling
+    appends copy them); a rebuild retrains them and makes this
+    version's assignments stale — fail loudly."""
+    import shutil
+    import time
+
+    for artifact in artifacts:
+        shutil.copytree(
+            os.path.join(parent_vdir, artifact),
+            os.path.join(new_vdir, artifact),
+        )
+    if lake_version is None:
+        lake_version = _read_manifest(path, parent_vdir).lake_version
+    version = os.path.basename(new_vdir)
+    own = [own_root] if own_root is not None else []
+    own_tomb = [own_tombstone_root] if own_tombstone_root else []
     for _attempt in range(5):
+        parent = _read_manifest(path, parent_vdir)
+        _write_index_manifest(
+            new_vdir,
+            [os.path.relpath(r, path) for r in parent.vector_roots] + own,
+            lake_version,
+            [os.path.relpath(r, path) for r in parent.tombstone_roots]
+            + own_tomb,
+        )
         try:
-            _publish_current(path, version, expect_parent=parent)
+            _publish_current(
+                path, version, expect_parent=os.path.basename(parent_vdir)
+            )
             return
         except ConcurrentIndexMutation:
-            _time.sleep(0.05)
+            time.sleep(0.05)
             live_vdir = _current_version_dir(path)
             if os.path.basename(live_vdir) == version:
                 return  # our own swap actually landed
             if _quantizer_fingerprint(
-                live_vdir, fp_dirs
-            ) != _quantizer_fingerprint(new_vdir, fp_dirs):
+                live_vdir, artifacts
+            ) != _quantizer_fingerprint(new_vdir, artifacts):
                 raise ConcurrentIndexMutation(
                     "a rebuild retrained the quantizer while this append "
                     "was in flight; its assignments are stale — re-run "
                     "the append against the new index"
                 ) from None
-            parent = os.path.basename(live_vdir)
-            roots = [
-                os.path.relpath(r, path)
-                for r in _vector_roots(path, live_vdir)
-            ] + ([own_root] if own_root is not None else [])
-            tomb = [
-                os.path.relpath(r, path)
-                for r in _tombstone_roots(path, live_vdir)
-            ]
-            if own_tombstone_root is not None:
-                tomb.append(own_tombstone_root)
-            _write_index_manifest(
-                new_vdir, roots, lake_version, tomb or None
-            )
+            parent_vdir = live_vdir
     raise ConcurrentIndexMutation(
         f"append at {path} lost the publish race repeatedly"
     )
@@ -662,18 +746,10 @@ def compact_ivf_index(
 
     vdir = _current_version_dir(path)
     parent = os.path.basename(vdir)
-    roots = _vector_roots(path, vdir)
-    meta = _index_meta_cols(spark, path, vdir)
-    keep_cols = ["vec_id", "emb", *meta]
-    vecs = spark.read.parquet(roots[0]).select(*keep_cols)
-    for r in roots[1:]:
-        vecs = vecs.union(spark.read.parquet(r).select(*keep_cols))
-    tstones = _tombstone_roots(path, vdir)
-    if tstones:
-        # the fold: tombstoned vectors are dropped PHYSICALLY here and
-        # the compacted manifest carries no tombstone roots
-        tomb = spark.read.parquet(*tstones).select("vec_id").distinct()
-        vecs = vecs.join(tomb, "vec_id", "left_anti")
+    # the fold: tombstoned vectors are dropped PHYSICALLY here and the
+    # compacted manifest carries no tombstone roots; metadata columns
+    # ride along
+    vecs = _live_rows(spark, path, vdir).drop("cell")
 
     sample_rows = (
         vecs.orderBy(F.md5(F.col("vec_id").cast("string")))
@@ -682,25 +758,12 @@ def compact_ivf_index(
         .collect()
     )
     centroids = _fit_cells([r.emb for r in sample_rows], n_cells)
-    cents = np.asarray(centroids, dtype=np.float64)
-
-    from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
-        ivf_assign_fn,
-    )
-
-    meta_schema = "".join(
-        f", {c} {t}" for c, t in vecs.dtypes if c in meta
-    )
-    assigned = vecs.mapInPandas(
-        ivf_assign_fn(cents),
-        f"vec_id bigint, emb array<double>{meta_schema}, cell int",
-    )
+    assigned = _assign_cells(vecs, np.asarray(centroids, dtype=np.float64))
     version = f"v_{uuid.uuid4().hex[:12]}"
     new_vdir = os.path.join(path, version)
     assigned.write.partitionBy("cell").parquet(f"{new_vdir}/vectors")
     spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
+        list(enumerate(centroids)), _CENTROIDS_DDL
     ).write.parquet(f"{new_vdir}/centroids.parquet")
     # compaction rewrites the SAME rows, so the recorded lake snapshot
     # carries forward unchanged
@@ -828,19 +891,8 @@ def ivf_query_index(
             "exclude_label_col requires the query frame to carry a "
             f"'label' column; got columns {queries.columns}"
         )
-    vdir = (
-        os.path.join(path, version)
-        if version is not None
-        else _current_version_dir(path)
-    )
-    cent_rows = spark.read.parquet(f"{vdir}/centroids.parquet").collect()
-    if not cent_rows:
-        raise ValueError(f"empty IVF index at {path}")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cell] = r.centroid
-    n_cells = len(cent_rows)
-    nprobe = min(nprobe, n_cells)
+    vdir = _version_dir(path, version)
+    cents = _load_centroids(spark, vdir)
 
     q_rows = queries.collect()
     if not q_rows:
@@ -860,26 +912,8 @@ def ivf_query_index(
         if exclude_label_col is not None
         else None
     )
-    sims_qc = qmat @ cents.T
-    cell_probes: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = sorted(range(n_cells), key=lambda i: (-sims_qc[qi, i], i))
-        for c in order[:nprobe]:
-            cell_probes.setdefault(c, []).append(qi)
-    probed = sorted(cell_probes)
-
-    roots = _vector_roots(path, vdir)
-    vecs = spark.read.parquet(roots[0]).where(F.col("cell").isin(probed))
-    for root in roots[1:]:
-        vecs = vecs.union(
-            spark.read.parquet(root).where(F.col("cell").isin(probed))
-        )
-    tstones = _tombstone_roots(path, vdir)
-    if tstones:
-        tomb = spark.read.parquet(*tstones).select("vec_id").distinct()
-        # no broadcast hint: AQE broadcasts a small tombstone set by
-        # itself; a bulk erasure must shuffle
-        vecs = vecs.join(tomb, "vec_id", "left_anti")
+    cell_probes = _plan_probes(qmat, cents, nprobe)
+    vecs = _live_rows(spark, path, vdir, cells=sorted(cell_probes))
     if exclude_label_col is not None and exclude_label_col not in vecs.columns:
         raise ValueError(
             f"index at {path} stores no {exclude_label_col!r} metadata "
@@ -948,20 +982,9 @@ def served_vec_ids(
 ) -> DataFrame:
     """The vec_id set an index version actually serves (union of its
     manifest's vector roots — metadata-only columns pruned at scan)."""
-    vdir = (
-        os.path.join(path, version)
-        if version is not None
-        else _current_version_dir(path)
+    return _live_rows(spark, path, _version_dir(path, version)).select(
+        "vec_id"
     )
-    roots = _vector_roots(path, vdir)
-    df = spark.read.parquet(roots[0]).select("vec_id")
-    for r in roots[1:]:
-        df = df.union(spark.read.parquet(r).select("vec_id"))
-    tstones = _tombstone_roots(path, vdir)
-    if tstones:
-        tomb = spark.read.parquet(*tstones).select("vec_id").distinct()
-        df = df.join(tomb, "vec_id", "left_anti")
-    return df
 
 
 def _ids_match(a: DataFrame, b: DataFrame) -> bool:
@@ -1647,28 +1670,12 @@ def hard_negative_mining_corpus(
 
     from cours_datalake_dwh_td_kafka_spark.operators import gram
 
-    vdir = (
-        os.path.join(index_path, version)
-        if version is not None
-        else _current_version_dir(index_path)
-    )
-    cent_rows = spark.read.parquet(f"{vdir}/centroids.parquet").collect()
-    if not cent_rows:
-        raise ValueError(f"empty IVF index at {index_path}")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cell] = r.centroid
-    n_cells = len(cent_rows)
+    vdir = _version_dir(index_path, version)
+    cents = _load_centroids(spark, vdir)
+    n_cells = len(cents)
     nprobe = n_cells if nprobe is None else min(nprobe, n_cells)
 
-    roots = _vector_roots(index_path, vdir)
-    vecs = spark.read.parquet(roots[0])
-    for root in roots[1:]:
-        vecs = vecs.union(spark.read.parquet(root))
-    tstones = _tombstone_roots(index_path, vdir)
-    if tstones:
-        tomb = spark.read.parquet(*tstones).select("vec_id").distinct()
-        vecs = vecs.join(tomb, "vec_id", "left_anti")
+    vecs = _live_rows(spark, index_path, vdir)
     if label_col not in vecs.columns:
         raise ValueError(
             f"index at {index_path} stores no {label_col!r} metadata "
@@ -1925,35 +1932,14 @@ def hard_negative_mining_corpus_pq(
     from cours_datalake_dwh_td_kafka_spark.operators import gram
 
     rerank = HARDNEG_PQ_RERANK if rerank is None else rerank
-    vdir = (
-        os.path.join(index_path, version)
-        if version is not None
-        else _current_version_dir(index_path)
-    )
-    cent_rows = spark.read.parquet(f"{vdir}/centroids.parquet").collect()
-    if not cent_rows:
-        raise ValueError(f"empty IVF-PQ index at {index_path}")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cell] = r.centroid
-    n_cells = len(cent_rows)
-    nprobe = min(nprobe, n_cells)
-    book_rows = spark.read.parquet(f"{vdir}/books.parquet").collect()
-    m = max(r.sub for r in book_rows) + 1
-    books = []
-    for mi in range(m):
-        rows = sorted(
-            (r for r in book_rows if r.sub == mi), key=lambda r: r.code
-        )
-        books.append(np.asarray([r.centroid for r in rows]))
-    books_arr = np.stack(books)  # (m, k, d_sub)
+    vdir = _version_dir(index_path, version)
+    cents = _load_centroids(spark, vdir)
+    nprobe = min(nprobe, len(cents))
+    books_arr = _load_books(spark, vdir)  # (m, k, d_sub)
+    m, _, d_sub = books_arr.shape
     norms2 = (books_arr**2).sum(axis=2)  # (m, k)
-    d_sub = books_arr.shape[2]
 
-    roots = _code_roots(index_path, vdir)
-    codes = spark.read.parquet(roots[0])
-    for root in roots[1:]:
-        codes = codes.union(spark.read.parquet(root))
+    codes = _live_rows(spark, index_path, vdir)
     if label_col not in codes.columns:
         raise ValueError(
             f"PQ index at {index_path} stores no {label_col!r} metadata "
@@ -2241,9 +2227,6 @@ def build_ivfpq_index(
         F.col("embedding").cast("array<double>").alias("emb"),
         *meta_cols,
     )
-    meta_schema = "".join(
-        f", {c} {t}" for c, t in emb_d.dtypes if c in meta_cols
-    )
     sample_rows = (
         emb_d.orderBy(F.md5(F.col("vec_id").cast("string")))
         .limit(QUANTIZER_SAMPLE)
@@ -2268,14 +2251,14 @@ def build_ivfpq_index(
     # and the in-query twin can never compute different codes
     encoded = emb_d.mapInPandas(
         pq_encode_fn(cents, books, meta_cols, rotation=rotation),
-        f"vec_id BIGINT, cell INT, codes ARRAY<INT>{meta_schema}",
+        "vec_id BIGINT, cell INT, codes ARRAY<INT>"
+        + _meta_schema(emb_d, meta_cols),
     )
     version = f"v_{uuid.uuid4().hex[:12]}"
     vdir = os.path.join(path, version)
     encoded.write.partitionBy("cell").parquet(f"{vdir}/codes")
     spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
+        list(enumerate(centroids)), _CENTROIDS_DDL
     ).write.parquet(f"{vdir}/centroids.parquet")
     spark.createDataFrame(
         [
@@ -2283,33 +2266,17 @@ def build_ivfpq_index(
             for mi in range(m)
             for ci in range(len(books[mi]))
         ],
-        "sub int, code int, centroid array<double>",
+        _BOOKS_DDL,
     ).write.parquet(f"{vdir}/books.parquet")
     if rotation is not None:
         spark.createDataFrame(
             [(i, [float(v) for v in rotation[i]]) for i in range(len(rotation))],
-            "i int, row array<double>",
+            _ROTATION_DDL,
         ).write.parquet(f"{vdir}/rotation.parquet")
     _write_index_manifest(vdir, [f"{version}/codes"], lake_version)
     os.makedirs(path, exist_ok=True)
     _publish_current(path, version)
     return n_cells
-
-
-def _load_rotation(spark: SparkSession, vdir: str):
-    """The version's OPQ rotation as a d x d numpy matrix, or None for
-    a plain-PQ index (no rotation artifact persisted)."""
-    import numpy as np
-
-    rdir = os.path.join(vdir, "rotation.parquet")
-    if not os.path.exists(rdir):
-        return None
-    rows = spark.read.parquet(rdir).collect()
-    d = len(rows)
-    R = np.zeros((d, d))
-    for r in rows:
-        R[r.i] = r.row
-    return R
 
 
 def _pq_artifact_dirs(vdir: str) -> tuple[str, ...]:
@@ -2323,22 +2290,6 @@ def _pq_artifact_dirs(vdir: str) -> tuple[str, ...]:
     if os.path.exists(os.path.join(vdir, "rotation.parquet")):
         return base + ("rotation.parquet",)
     return base
-
-
-def _code_roots(path: str, vdir: str) -> list[str]:
-    """Code-data roots of a PQ version: same manifest mechanism as
-    :func:`_vector_roots`, with the pre-manifest fallback pointing at
-    the PQ layout's local ``codes`` directory (indexes persisted before
-    the append support carried no manifest)."""
-    import json
-
-    mpath = os.path.join(vdir, "manifest.json")
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            return [
-                os.path.join(path, r) for r in json.load(f)["vector_roots"]
-            ]
-    return [os.path.join(vdir, "codes")]
 
 
 def append_ivfpq_index(
@@ -2360,84 +2311,38 @@ def append_ivfpq_index(
     :func:`build_ivfpq_index` over that table IS the compaction
     (retrain + single-root rewrite + atomic swap); gate it on
     :func:`chain_length` exactly like :func:`compact_if_needed`."""
-    import shutil as _shutil
-
-    import numpy as np
-
     from cours_datalake_dwh_td_kafka_spark.operators.similarity import (
         pq_encode_fn,
     )
 
     vdir = _current_version_dir(path)
     spark = emb_new.sparkSession
-    cent_rows = spark.read.parquet(f"{vdir}/centroids.parquet").collect()
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cell] = r.centroid
-    book_rows = spark.read.parquet(f"{vdir}/books.parquet").collect()
-    m = max(r.sub for r in book_rows) + 1
-    books = []
-    for mi in range(m):
-        rows = sorted(
-            (r for r in book_rows if r.sub == mi), key=lambda r: r.code
-        )
-        books.append(np.asarray([r.centroid for r in rows]))
-
-    # PRESERVE the live version's metadata columns (round-10 lesson:
-    # maintenance must not strip what filtered serving depends on) —
-    # discovered from one code root's schema, required on the new batch
-    meta = [
-        c
-        for c in spark.read.parquet(_code_roots(path, vdir)[0]).columns
-        if c not in ("vec_id", "cell", "codes")
-    ]
-    missing = [c for c in meta if c not in emb_new.columns]
-    if missing:
-        raise ValueError(
-            f"index at {path} stores metadata columns {meta} but the "
-            f"append batch lacks {missing}"
-        )
-    emb_d = emb_new.select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("emb"),
-        *meta,
-    )
-    meta_schema = "".join(
-        f", {c} {t}" for c, t in emb_d.dtypes if c in meta
-    )
+    emb_d = _append_input(emb_new, path, vdir)
+    meta = tuple(c for c in emb_d.columns if c not in _CORE_COLS)
     # an OPQ index's appends encode under the SAME frozen rotation —
     # it is copied with the codebooks and fingerprinted with them
-    rotation = _load_rotation(spark, vdir)
-    artifacts = _pq_artifact_dirs(vdir)
     encoded = emb_d.mapInPandas(
-        pq_encode_fn(cents, books, tuple(meta), rotation=rotation),
-        f"vec_id BIGINT, cell INT, codes ARRAY<INT>{meta_schema}",
+        pq_encode_fn(
+            _load_centroids(spark, vdir),
+            _load_books(spark, vdir),
+            meta,
+            rotation=_load_rotation(spark, vdir),
+        ),
+        "vec_id BIGINT, cell INT, codes ARRAY<INT>"
+        + _meta_schema(emb_d, meta),
     )
     version = f"v_{uuid.uuid4().hex[:12]}"
     new_vdir = os.path.join(path, version)
     encoded.write.partitionBy("cell").parquet(f"{new_vdir}/codes")
-    for artifact in artifacts:
-        _shutil.copytree(
-            os.path.join(vdir, artifact), os.path.join(new_vdir, artifact)
-        )
-    old_rel = [os.path.relpath(r, path) for r in _code_roots(path, vdir)]
-    if lake_version is None:
-        # same carry rule as append_ivf_index: out-of-protocol rows
-        # don't advance (or drop) the recorded lake pairing
-        lake_version = index_lake_version(path, os.path.basename(vdir))
-    _write_index_manifest(
-        new_vdir, old_rel + [f"{version}/codes"], lake_version
-    )
     _rechain_publish(
         path,
-        version,
+        vdir,
         new_vdir,
-        os.path.basename(vdir),
-        f"{version}/codes",
-        artifacts,
+        _pq_artifact_dirs(vdir),
         lake_version,
+        own_root=f"{version}/codes",
     )
-    return len(_code_roots(path, new_vdir))
+    return len(_vector_roots(path, new_vdir))
 
 
 def ivfpq_query_index(
@@ -2469,27 +2374,9 @@ def ivfpq_query_index(
     )
 
     rerank = PQ_RERANK if rerank is None else rerank
-    vdir = (
-        os.path.join(path, version)
-        if version is not None
-        else _current_version_dir(path)
-    )
-    cent_rows = spark.read.parquet(f"{vdir}/centroids.parquet").collect()
-    if not cent_rows:
-        raise ValueError(f"empty IVF-PQ index at {path}")
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        cents[r.cell] = r.centroid
-    n_cells = len(cent_rows)
-    nprobe = min(nprobe, n_cells)
-    book_rows = spark.read.parquet(f"{vdir}/books.parquet").collect()
-    m = max(r.sub for r in book_rows) + 1
-    books = []
-    for mi in range(m):
-        rows = sorted(
-            (r for r in book_rows if r.sub == mi), key=lambda r: r.code
-        )
-        books.append(np.asarray([r.centroid for r in rows]))
+    vdir = _version_dir(path, version)
+    cents = _load_centroids(spark, vdir)
+    books = _load_books(spark, vdir)
 
     q_rows = queries.collect()
     if not q_rows:
@@ -2505,24 +2392,13 @@ def ivfpq_query_index(
     rotation = _load_rotation(spark, vdir)
     qmat_probe = qmat if rotation is None else qmat @ rotation
     qids = np.asarray([int(r.query_id) for r in q_rows])
-    sims_qc = qmat_probe @ cents.T
-    cell_probes: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = sorted(range(n_cells), key=lambda i: (-sims_qc[qi, i], i))
-        for c in order[:nprobe]:
-            cell_probes.setdefault(c, []).append(qi)
-    probed = sorted(cell_probes)
+    cell_probes = _plan_probes(qmat_probe, cents, nprobe)
 
-    luts, norms2 = _pq_probe_tables(qmat_probe, books, m)
+    luts, norms2 = _pq_probe_tables(qmat_probe, books, len(books))
     shortlist_k = rerank * top_k
     # an appended index unions its manifest's code roots, pruned per
     # root (the IVF serving shape applied to the PQ layout)
-    roots = _code_roots(path, vdir)
-    codes = spark.read.parquet(roots[0]).where(F.col("cell").isin(probed))
-    for root in roots[1:]:
-        codes = codes.union(
-            spark.read.parquet(root).where(F.col("cell").isin(probed))
-        )
+    codes = _live_rows(spark, path, vdir, cells=sorted(cell_probes))
     scored = codes.mapInPandas(
         _adc_score_fn(cell_probes, luts, norms2, qids, shortlist_k),
         "query_id BIGINT, neighbor_id BIGINT, cosine DOUBLE",
@@ -2663,9 +2539,7 @@ def ann_index_append_lifecycle(
     # CURRENT with a 1-root chain — checking CURRENT alone would skip
     # the append forever and wedge the attested row; the manifest chain
     # length is the real completion signal
-    if (
-        len(_vector_roots(path, _current_version_dir(path))) < 2
-    ):
+    if chain_length(path) < 2:
         append_ivf_index(extra, path)
     vdir = _current_version_dir(path)
     roots = _vector_roots(path, vdir)
@@ -2776,10 +2650,10 @@ def ann_ivfpq_append_lifecycle(
         build_ivfpq_index(base, path)
     # resume-safe: the code-root chain length is the completion signal
     # (the ann_index_append rule — CURRENT alone would wedge the row)
-    if len(_code_roots(path, _current_version_dir(path))) < 2:
+    if chain_length(path) < 2:
         append_ivfpq_index(extra, path)
     vdir = _current_version_dir(path)
-    roots = _code_roots(path, vdir)
+    roots = _vector_roots(path, vdir)
     old_version = os.path.relpath(roots[0], path).split(os.sep)[0]
     q = emb_d.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -2891,8 +2765,6 @@ def ann_index_compact_lifecycle(
       decay ``ann_index_drift`` measures;
     - ``ancestors_reclaimable``: a dry-run vacuum reports every
       pre-compaction version as sweepable (the chain is released)."""
-    import json
-
     from cours_datalake_dwh_td_kafka_spark.operators.attest import (
         legs,
         multiset_eq,
@@ -3112,7 +2984,7 @@ def ann_index_delete_lifecycle(
     cur = _current_version_dir(path)
 
     def _compact_drops_check() -> bool:
-        raw = spark.read.parquet(*_vector_roots(path, cur)).count()
+        raw = _live_rows(spark, path, cur).count()
         return raw == n_vecs - n_deleted and not _tombstone_roots(path, cur)
 
     def _post_exact_check() -> bool:

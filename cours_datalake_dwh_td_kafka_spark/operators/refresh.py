@@ -970,8 +970,8 @@ def erasure_protocol(
     )
     from cours_datalake_dwh_td_kafka_spark.operators.ann_index import (
         _current_version_dir,
+        _live_rows,
         _tombstone_roots,
-        _vector_roots,
         build_ivf_index,
         compact_ivf_index,
         delete_from_ivf_index,
@@ -1120,7 +1120,7 @@ def erasure_protocol(
         orphans = vacuum_index(idx, grace_seconds=0)
         bytes_post = _tree_bytes(idx)
         cur = _current_version_dir(idx)
-        raw_vecs = spark.read.parquet(*_vector_roots(idx, cur))
+        raw_vecs = _live_rows(spark, idx, cur)
         reclaimed = len(orphans) > 0 and bytes_post < bytes_pre
         phys = (
             raw_vecs.where(

@@ -248,6 +248,26 @@ def _fit_cells(sample: "list[list[float]]", n_cells: int, n_iter: int = 10):
     return [[float(v) for v in c] for c in cents]
 
 
+def _plan_probes(qmat, cents, nprobe: int) -> dict[int, list[int]]:
+    """THE probe planner of every driver-side IVF probe (the in-query
+    :func:`ivf_topk`/:func:`ivfpq_topk` and the persisted-index serving
+    paths in ann_index): per cell, the rows of ``qmat`` that probe it.
+    Each query probes its ``nprobe`` most similar centroids ranked by
+    (similarity desc, cell id asc) — a stable argsort of the negated
+    similarities — so a served index and its in-query twin probe the
+    same cells by construction. ``qmat`` rows are unit vectors in the
+    centroids' frame (rotated first for an OPQ index); an ``nprobe``
+    past the cell count probes every cell."""
+    import numpy as np
+
+    order = np.argsort(-(qmat @ cents.T), axis=1, kind="stable")[:, :nprobe]
+    cell_probes: dict[int, list[int]] = {}
+    for qi, cells in enumerate(order.tolist()):
+        for c in cells:
+            cell_probes.setdefault(c, []).append(qi)
+    return cell_probes
+
+
 def ivf_topk(
     emb: DataFrame,
     n_cells: int = N_CELLS,
@@ -283,10 +303,9 @@ def ivf_topk(
         .select("emb")
         .collect()
     )
+    # _fit_cells clamps the cell count on tiny corpora; the planner
+    # clamps nprobe to the cells that exist
     centroids = _fit_cells([r.emb for r in sample_rows], n_cells)
-    # _fit_cells clamps cell count on tiny corpora — track the real one
-    n_cells = len(centroids)
-    nprobe = min(nprobe, n_cells)
 
     # probe assignment driver-side: the query set is small by definition
     # (that's what makes it the probe side), so its nprobe-nearest cells
@@ -301,15 +320,10 @@ def ivf_topk(
     qmat = np.vstack([np.asarray(r.emb, dtype=np.float64) for r in q_rows])
     qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
     qids = np.asarray([int(r.vec_id) for r in q_rows])
-    sims_qc = qmat @ cents.T
-    # rank cells by (similarity desc, cell_id asc); per cell: the unit
-    # query vectors probing it. Captured in the UDF closure — tiny
-    # (n_queries x dim), so it ships with the task like a broadcast.
-    cell_probes: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = sorted(range(n_cells), key=lambda i: (-sims_qc[qi, i], i))
-        for c in order[:nprobe]:
-            cell_probes.setdefault(c, []).append(qi)
+    # per cell: the unit query vectors probing it. Captured in the UDF
+    # closure — tiny (n_queries x dim), so it ships with the task like a
+    # broadcast.
+    cell_probes = _plan_probes(qmat, cents, nprobe)
 
     # One mapInPandas pass: numpy cell assignment (X@C.T argmax) + scoring
     # against the probing queries + partition-local top-k. No join, no
@@ -540,8 +554,6 @@ def ivfpq_topk(
     )
     sample = [r.emb for r in sample_rows]
     centroids = _fit_cells(sample, n_cells)
-    n_cells = len(centroids)
-    nprobe = min(nprobe, n_cells)
     books = _fit_pq_books(sample, m, k)
 
     q_rows = emb_d.where(F.col("vec_id") < n_queries).collect()
@@ -553,12 +565,7 @@ def ivfpq_topk(
     qmat = np.vstack([np.asarray(r.emb, dtype=np.float64) for r in q_rows])
     qmat /= np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
     qids = np.asarray([int(r.vec_id) for r in q_rows])
-    sims_qc = qmat @ cents.T
-    cell_probes: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = sorted(range(n_cells), key=lambda i: (-sims_qc[qi, i], i))
-        for c in order[:nprobe]:
-            cell_probes.setdefault(c, []).append(qi)
+    cell_probes = _plan_probes(qmat, cents, nprobe)
 
     luts, norms2 = _pq_probe_tables(qmat, books, m)
     shortlist_k = rerank * top_k

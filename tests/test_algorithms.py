@@ -1678,7 +1678,7 @@ def test_pq_corpus_mining_and_meta_preservation(spark, tmp_path):
     )
     ai.append_ivfpq_index(e.where("vec_id % 2 = 1"), half)
     vdir = ai._current_version_dir(half)
-    for root in ai._code_roots(half, vdir):
+    for root in ai._vector_roots(half, vdir):
         assert "label" in spark.read.parquet(root).columns, root
     # mining over the appended index covers the union
     got = ai.hard_negative_mining_corpus_pq(spark, half, e)
