@@ -93,7 +93,11 @@ def _read_manifest(path: str, version: int) -> dict:
 def _write_data_files(df: DataFrame, path: str) -> list[str]:
     commit_id = uuid.uuid4().hex[:12]
     out = os.path.join(path, "data", commit_id)
-    df.write.parquet(out)
+    # no _SUCCESS marker: the manifest is the commit point and nothing
+    # reads the marker, which costs a file, its .crc and their forks
+    df.write.option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(out)
     return sorted(
         os.path.join("data", commit_id, f)
         for f in os.listdir(out)
@@ -980,12 +984,12 @@ def lake_merge_upsert(
     one mutation the lake still lacked: rows of ``updates`` REPLACE the
     current rows sharing their ``key``; unmatched keys INSERT. One
     atomic commit: the kept rows (current anti-join updates' keys)
-    rewrite copy-on-write alongside the updates' files, and the
-    manifest swaps the file set (op ``merge``) — prior versions stay
-    readable, exactly like delete. Schema evolution composes: updates
-    may ADD columns (never retype — the same
-    :func:`_merged_append_schema` rule as append), and both sides align
-    to the merged declared schema before writing.
+    and the updates rewrite copy-on-write as ONE data write (one Spark
+    job, one commit directory), and the manifest swaps the file set
+    (op ``merge``) — prior versions stay readable, exactly like
+    delete. Schema evolution composes: updates may ADD columns (never
+    retype — the same :func:`_merged_append_schema` rule as append),
+    and both sides align to the merged declared schema before writing.
 
     Semantics to know: updates carrying DUPLICATE keys all land (this
     MERGE replaces-by-key then inserts the update rows verbatim — dedup
@@ -1023,8 +1027,12 @@ def lake_merge_upsert(
             m.get("schema") or _schema_dict(cur), updates
         )
         kept = cur.join(updates.select(key).distinct(), key, "left_anti")
-        files = _write_data_files(_align_to(kept, declared), path)
-        files += _write_data_files(_align_to(updates, declared), path)
+        files = _write_data_files(
+            _align_to(kept, declared).unionByName(
+                _align_to(updates, declared)
+            ),
+            path,
+        )
         return _commit_manifest(path, v + 1, files, "merge", declared)
 
     return _occ_publish_loop(path, "merge upsert", attempt)
@@ -1148,7 +1156,7 @@ def lake_vacuum(
         for commit_id in sorted(os.listdir(data_root)):
             cdir = os.path.join(data_root, commit_id)
             # A commit dir with ANY kept file is live — leave it whole
-            # (its _SUCCESS/.crc markers included).
+            # (its .crc checksum files included).
             if not os.path.isdir(cdir) or commit_id in kept_commits:
                 continue
             for fname in sorted(os.listdir(cdir)):
@@ -1156,8 +1164,9 @@ def lake_vacuum(
                 full = os.path.join(cdir, fname)
                 if os.path.isfile(full) and os.path.getmtime(full) <= cutoff:
                     os.remove(full)
-                    # _SUCCESS/.crc markers aren't manifest-listed, so
-                    # only report parquet files as reclaimed data.
+                    # .crc files (and the _SUCCESS marker of older
+                    # commits) aren't manifest-listed, so only report
+                    # parquet files as reclaimed data.
                     if fname.endswith(".parquet"):
                         deleted.append(rel)
             if not os.listdir(cdir):

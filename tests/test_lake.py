@@ -145,6 +145,46 @@ def test_vacuum_reclaims_orphaned_commit_dirs(spark, tmp_path):
     assert {tuple(r) for r in lake_read(spark, path).collect()} == {(1, "a")}
 
 
+def _commit_dirs(path: str, version: int) -> set[str]:
+    """The data/<commit-id>/ directories a version's manifest lists."""
+    from cours_datalake_dwh_td_kafka_spark.lake import _read_manifest
+
+    return {
+        rel.split(os.sep)[1] for rel in _read_manifest(path, version)["files"]
+    }
+
+
+def test_commit_dir_holds_parts_and_checksums_only(spark, tmp_path):
+    """A lake write leaves its part files and their checksums, and no
+    _SUCCESS marker: the manifest is the commit point and nothing reads
+    the marker."""
+    path = str(tmp_path / "t")
+    lake_commit(_df(spark, [(1, "a"), (2, "b")]), path)
+    (cid,) = _commit_dirs(path, 1)
+    names = os.listdir(os.path.join(path, "data", cid))
+    parts = {n for n in names if n.startswith("part-")}
+    assert parts and all(n.endswith(".parquet") for n in parts)
+    assert set(names) == parts | {f".{n}.crc" for n in parts}
+    assert "_SUCCESS" not in names
+
+
+def test_vacuum_sweeps_a_whole_uncommitted_write(spark, tmp_path):
+    """Files a real lake write left without publishing a manifest (its
+    parts and their .crc files) are all swept past the grace window, and
+    the empty commit directory goes with them."""
+    from cours_datalake_dwh_td_kafka_spark.lake import _write_data_files
+
+    path = str(tmp_path / "t")
+    lake_commit(_df(spark, [(1, "a")]), path)
+    files = _write_data_files(_df(spark, [(2, "b"), (3, "c")]), path)
+    orphan = os.path.join(path, os.path.dirname(files[0]))
+    assert any(n.endswith(".crc") for n in os.listdir(orphan))
+    deleted = lake_vacuum(path, keep_versions=1, orphan_grace_seconds=0)
+    assert deleted == files
+    assert not os.path.exists(orphan)
+    assert {tuple(r) for r in lake_read(spark, path).collect()} == {(1, "a")}
+
+
 def test_manifest_publish_is_atomic_no_partial_visible(spark, tmp_path):
     """The published v{N}.json is complete the instant it exists: no
     .tmp residue survives a commit, and every manifest in the directory
@@ -867,6 +907,9 @@ def test_lake_merge_upsert_replaces_and_inserts(spark, tmp_path):
     )  # v2
     v2 = {r.id: r.val for r in lake_read(spark, path, 2).collect()}
     assert v2 == {1: "a", 2: "B2", 3: "c", 9: "Z"}
+    # kept rows and updates land in ONE data write: one new commit dir
+    (merge_dir,) = _commit_dirs(path, 2)
+    assert merge_dir not in _commit_dirs(path, 1)
     v1 = {r.id: r.val for r in lake_read(spark, path, 1).collect()}
     assert v1 == {1: "a", 2: "b", 3: "c"}  # snapshot untouched
     assert [h["op"] for h in lake_history(path)] == ["append", "merge"]
@@ -884,6 +927,8 @@ def test_lake_merge_upsert_replaces_and_inserts(spark, tmp_path):
     assert v3 == {
         1: ("a", None), 2: ("B2", None), 3: ("C3", 0.7), 9: ("Z", None),
     }
+    (evolved_dir,) = _commit_dirs(path, 3)
+    assert evolved_dir != merge_dir
 
 
 def test_lake_cluster_by_stats_pruning_and_append_conservatism(

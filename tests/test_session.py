@@ -42,3 +42,26 @@ def test_codegen_cache_holds_a_warm_pass(spark):
 
     one_pass()  # may compile nothing if earlier tests ran these plans
     assert one_pass() == 0
+
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_logs_go_through_filesystem_api(spark, tmp_path):
+    """Streaming checkpoints are written through Hadoop's FileSystem API,
+    whose local file system resolves no links, so it forks no `readlink`
+    per path without a native libhadoop. Spark builds the manager from
+    this conf at every stream start, so a class that moved package fails
+    the first stream, and this test names the cause."""
+    conf = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(conf) == _FS_CHECKPOINT_MANAGER
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == _FS_CHECKPOINT_MANAGER
