@@ -41,9 +41,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cours_datalake_dwh_td_kafka_spark.io import parquet_row_count
 
 
 def _manifest_dir(path: str) -> str:
@@ -451,6 +454,8 @@ def lake_commit_occ(
     stream_batch_id: int | None = None,
     stream_id: str | None = None,
     stats_cols=(),
+    *,
+    _skip_empty: bool = False,
 ) -> int:
     """OPTIMISTIC multi-writer append (round 13, VERDICT r12 #3 — the
     Delta/Iceberg OCC rung above the raw single-winner CAS): write the
@@ -505,7 +510,14 @@ def lake_commit_occ(
     one table — actually run concurrently: the stream's appends
     rebase over the daemon's row-preserving commits instead of dying
     on the raw CAS (the single-writer-per-STREAM rule still holds;
-    it is the per-TABLE rule this lifts)."""
+    it is the per-TABLE rule this lifts).
+
+    ``_skip_empty`` is the streaming sink's switch: a write whose files
+    hold zero rows (counted from their parquet footers, no Spark job)
+    publishes nothing, advances no mark and leaves no commit directory,
+    and returns the current version. Other callers
+    (CDC consumers) must publish their mark even for an empty change
+    set, hence off by default."""
     if stream_batch_id is not None and stream_id is None:
         raise ValueError(
             "lake_commit_occ(stream_batch_id=...) requires stream_id: "
@@ -571,16 +583,23 @@ def lake_commit_occ(
                 )
             )
 
-    # classify BEFORE paying the data write: a transaction already
-    # doomed by commits that landed before entry aborts at
-    # manifest-read cost, leaving no orphan files at all
     if (
         stream_batch_id is not None
         and stream_batch_id <= last_stream_batch_id(path, stream_id)
     ):
         return current_version(path)  # replayed batch: already in
+    # classify BEFORE paying the data write: a transaction already
+    # doomed by commits that landed before entry aborts at
+    # manifest-read cost, leaving no orphan files at all
     classify(entry_tip)
     new_files = _write_data_files(df, path)
+    if _skip_empty and not any(
+        parquet_row_count(os.path.join(path, f)) for f in new_files
+    ):
+        # Spark still wrote one row-less part file for partition 0
+        for d in {os.path.dirname(f) for f in new_files}:
+            shutil.rmtree(os.path.join(path, d))
+        return current_version(path)
     # stats-on-append (see lake_commit): the new files' ranges are a
     # property of the files, computed ONCE; each rebase attempt merges
     # them with whatever stats the live tip carries
@@ -1200,19 +1219,22 @@ def lake_diff(
     cheap to answer AFTER the fact, without having subscribed to a
     change stream while the commits happened.
 
-    Shape: two exceptAll set-differences over the manifests' file sets
-    — each a hash anti-join keyed on the full row. At scale, diff
+    Shape: one aggregation over both snapshots' rows, keyed on the
+    full row, with multiset (``exceptAll``) semantics: a row held n
+    times more by one side reports n times. At scale, diff
     pruned slices (partition/bucket columns) rather than whole
     snapshots; the file-set arithmetic in the manifests tells you which
     files CAN differ (files shared by both versions can be skipped
     entirely — an optimization worth adding when file counts grow)."""
     from pyspark.sql import functions as F
 
+    from cours_datalake_dwh_td_kafka_spark.operators.attest import signed_net
+
     new = lake_read(spark, path, to_version)
     old = lake_read(spark, path, from_version)
     # Schema evolution: the versions may declare different columns, and
-    # exceptAll needs identical schemas. Align BOTH sides to the union
-    # of columns (NULL where a version never had the column) — a row
+    # the row comparison needs identical schemas. Align BOTH sides to
+    # the union of columns (NULL where a version never had it) — a row
     # that only gained a not-yet-populated column then compares equal
     # on both sides and produces NO spurious delete+insert, while rows
     # whose added column carries a value diff as expected.
@@ -1228,9 +1250,15 @@ def lake_diff(
         }
         new = _align_to(new, union_schema)
         old = _align_to(old, union_schema)
-    inserts = new.exceptAll(old).withColumn("_change", F.lit("insert"))
-    deletes = old.exceptAll(new).withColumn("_change", F.lit("delete"))
-    return inserts.unionByName(deletes)
+    # a positive net count is that many inserts, a negative one that
+    # many deletes: exceptAll's multiset rule (NULL and NaN equal to
+    # themselves) in one shuffle instead of one per direction
+    net, n = signed_net(new, old)
+    return net.select(
+        *new.columns,
+        F.when(F.col(n) > 0, "insert").otherwise("delete").alias("_change"),
+        F.explode(F.array_repeat(F.lit(0), F.abs(n).cast("int"))).alias(n),
+    ).drop(n)
 
 
 def lake_changes_since(

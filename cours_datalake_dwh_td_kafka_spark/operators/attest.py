@@ -130,27 +130,28 @@ def parallel_vals(
         return [f.result() for f in futures]
 
 
-def multiset_eq(a: DataFrame, b: DataFrame) -> bool:
-    """True iff ``a`` and ``b`` are multiset-equal, in ONE action: tag
-    a's rows +1 and b's -1, group by the full row — equal iff every
-    group's tag-sum is zero. Replaces a.count() == b.count() and two
-    exceptAll counts (3-4 jobs, each with its own shuffle). The tag
-    and sum columns are suffixed past any collision with the compared
-    frames' own columns (r14 review: a data column named ``_t`` would
-    otherwise be silently REPLACED by the tag and dropped from the
-    comparison)."""
+def signed_net(a: DataFrame, b: DataFrame) -> tuple[DataFrame, str]:
+    """Every distinct row whose count differs between ``a`` and ``b``,
+    with its net count (a's minus b's), in ONE aggregation: tag a's
+    rows +1 and b's -1, group by the full row, keep non-zero sums.
+    Returns the frame (a's columns plus the net) and the net column's
+    name, which is suffixed past any collision with the frames' own
+    columns (r14 review: a data column named ``_t`` would otherwise be
+    silently REPLACED by the tag and dropped from the comparison)."""
     cols = a.columns
-    tag, s = "_t", "_s"
-    while tag in cols or s in cols:
-        tag, s = tag + "_", s + "_"
+    tag = "_t"
+    while tag in cols:
+        tag += "_"
     tagged = a.select(*cols).withColumn(tag, F.lit(1)).unionByName(
         b.select(*cols).withColumn(tag, F.lit(-1))
     )
-    return (
-        tagged.groupBy(*cols)
-        .agg(F.sum(tag).alias(s))
-        .where(F.col(s) != 0)
-        .limit(1)
-        .count()
-        == 0
-    )
+    net = tagged.groupBy(*cols).agg(F.sum(tag).alias(tag))
+    return net.where(F.col(tag) != 0), tag
+
+
+def multiset_eq(a: DataFrame, b: DataFrame) -> bool:
+    """True iff ``a`` and ``b`` are multiset-equal, in ONE action: no
+    row's :func:`signed_net` count is non-zero. Replaces a.count() ==
+    b.count() and two exceptAll counts (3-4 jobs, each with its own
+    shuffle)."""
+    return signed_net(a, b)[0].limit(1).count() == 0

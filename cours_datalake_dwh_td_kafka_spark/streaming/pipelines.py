@@ -627,8 +627,16 @@ def commit_stream_to_lake(
     maintenance (compact / cluster / bloom / mark), so the advisor's
     own recommended topology (this ingest stream plus a compact_due
     daemon on one table) runs concurrently instead of dying on the raw
-    single-winner CAS (VERDICT r13 #1). The replay mark is re-checked
-    inside the publish loop, closing the check-then-act window.
+    single-winner CAS (VERDICT r13 #1). The replay mark is checked
+    before the write and re-checked inside the publish loop, closing
+    the check-then-act window.
+
+    ONE SPARK JOB PER MICRO-BATCH: the sink never looks at the batch
+    before writing it (``foreachBatch`` hands over a plan whose every
+    action re-runs the source scan and enrichment). Emptiness is read
+    from the parquet footers of the files the write produced: a batch
+    with zero rows publishes no version, advances no mark, leaves no
+    ``data/<commit-id>/`` directory and raises nothing.
 
     Scale shape: a commit writes only the batch's files plus one
     manifest — O(batch), never O(lake); compaction of the resulting
@@ -642,10 +650,7 @@ def commit_stream_to_lake(
     since the last recluster. One extra aggregate per batch, over the
     batch's files only. Use for naturally-narrow columns (event time,
     monotone ids); see ``lake_commit``'s caveat on random keys."""
-    from cours_datalake_dwh_td_kafka_spark.lake import (
-        lake_commit_occ,
-        last_stream_batch_id,
-    )
+    from cours_datalake_dwh_td_kafka_spark.lake import lake_commit_occ
 
     qid_cache: list[str] = []
 
@@ -657,14 +662,9 @@ def commit_stream_to_lake(
         return qid_cache[0]
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        qid = _query_id()
-        if batch_id <= last_stream_batch_id(path, qid):
-            return  # replayed after a kill: already committed
         lake_commit_occ(
-            batch_df, path, stream_batch_id=batch_id, stream_id=qid,
-            stats_cols=stats_cols,
+            batch_df, path, stream_batch_id=batch_id, stream_id=_query_id(),
+            stats_cols=stats_cols, _skip_empty=True,
         )
 
     return (
@@ -759,8 +759,6 @@ def merge_stream_to_lake(
     column are not supported (parquet mergeSchema rejects them)."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         spark = batch_df.sparkSession
         if order_col is not None:
             from pyspark.sql import Window as _W
@@ -777,6 +775,8 @@ def merge_stream_to_lake(
             r[0]
             for r in batch_dedup.select(partition_col).distinct().collect()
         ]
+        if not parts:
+            return  # empty micro-batch: nothing to merge
         # existence is checked EXPLICITLY: a blanket try/except around
         # the read would also swallow transient FS/schema errors and
         # then overwrite surviving rows with batch-only data

@@ -508,6 +508,84 @@ def test_lake_diff_across_schema_versions(spark, tmp_path):
     assert d == {(3, "c", 0.9, "insert")}
 
 
+def test_lake_diff_matches_except_all_multisets(spark, tmp_path):
+    """The one-aggregation diff reports exactly the two-``exceptAll``
+    change feed: duplicate rows by their count difference, NULL and
+    NaN cells as equal to themselves, and versions of different
+    schemas aligned on the union of their columns."""
+    import math
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from cours_datalake_dwh_td_kafka_spark.lake import lake_diff
+
+    nan = float("nan")
+    schema = "id BIGINT, x DOUBLE, s STRING"
+    path = str(tmp_path / "t")
+    lake_commit(
+        spark.createDataFrame(
+            [(1, 1.0, "a")] * 3 + [(2, nan, None)] * 2
+            + [(None, None, None), (3, 0.0, "c")],
+            schema,
+        ),
+        path,
+    )  # v1
+    lake_commit(
+        spark.createDataFrame(
+            [(1, 1.0, "a")] + [(2, nan, None)] * 3
+            + [(None, None, None)] + [(4, nan, "d")] * 2,
+            schema,
+        ),
+        path,
+        mode="overwrite",
+    )  # v2
+    lake_commit(
+        spark.createDataFrame(
+            [(5, nan, None, None)] * 2 + [(1, 1.0, "a", 7)],
+            schema + ", q BIGINT",
+        ),
+        path,
+    )  # v3: adds q
+
+    def bag(df):
+        return Counter(
+            tuple(
+                "NaN" if isinstance(v, float) and math.isnan(v) else v
+                for v in r
+            )
+            for r in df.collect()
+        )
+
+    def except_all(frm, to):
+        new, old = lake_read(spark, path, to), lake_read(spark, path, frm)
+        fields = {f.name: f.dataType for f in old.schema.fields}
+        for f in new.schema.fields:
+            fields.setdefault(f.name, f.dataType)
+
+        def align(df):
+            return df.select([
+                F.col(c) if c in df.columns else F.lit(None).cast(t).alias(c)
+                for c, t in fields.items()
+            ])
+
+        new, old = align(new), align(old)
+        return new.exceptAll(old).withColumn(
+            "_change", F.lit("insert")
+        ).unionByName(old.exceptAll(new).withColumn("_change", F.lit("delete")))
+
+    for frm, to in ((1, 2), (2, 1), (2, 3), (1, 3)):
+        got, want = lake_diff(spark, path, frm, to), except_all(frm, to)
+        assert got.columns == want.columns
+        assert bag(got) == bag(want), (frm, to)
+    assert bag(lake_diff(spark, path, 1, 2)) == Counter({
+        (1, 1.0, "a", "delete"): 2,
+        (3, 0.0, "c", "delete"): 1,
+        (2, "NaN", None, "insert"): 1,
+        (4, "NaN", "d", "insert"): 2,
+    })
+
+
 def test_ivf_index_append_serves_grown_corpus_and_survives_vacuum(
     spark, tmp_path
 ):

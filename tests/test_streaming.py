@@ -607,6 +607,67 @@ def test_merge_stream_to_lake_upserts(spark, tmp_path):
     assert got == {1: ("eu", 11.0), 2: ("us", 20.0), 3: ("eu", 30.0)}
 
 
+def test_merge_stream_to_lake_filtered_batch_leaves_lake_unchanged(
+    spark, tmp_path
+):
+    """A micro-batch that filters to zero rows touches no file: the
+    merge sink sees no partition to replace and returns before reading
+    or writing the lake. A streaming query runs its jobs under its
+    ``runId`` job group, so they are counted there."""
+    import os
+
+    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
+        merge_stream_to_lake,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    lake = str(tmp_path / "lake")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        s = spark.readStream.schema(
+            "station LONG, region STRING, reading DOUBLE"
+        ).json(str(indir))
+        q = merge_stream_to_lake(
+            s.where("reading > 0"), lake, ckpt, keys=("station",),
+            partition_col="region",
+        ).start()
+        q.awaitTermination(120)
+        assert q.exception() is None
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+        return q.lastProgress["batchId"], len(jobs)
+
+    def snapshot():
+        out = {}
+        for root, _, files in os.walk(lake):
+            for f in files:
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    out[os.path.relpath(full, lake)] = (
+                        fh.read(), os.stat(full).st_mtime_ns
+                    )
+        return out
+
+    _write_batch(
+        str(indir), [{"station": 1, "region": "eu", "reading": 1.0}], "b0"
+    )
+    batch, jobs_first = run()
+    assert batch == 0
+    before = snapshot()
+    assert before
+    _write_batch(
+        str(indir), [{"station": 1, "region": "eu", "reading": -5.0}], "b1"
+    )
+    batch, jobs_empty = run()
+    assert batch == 1
+    assert snapshot() == before
+    # only the partition collect ran: no lake read, no write
+    assert jobs_empty < jobs_first
+
+
 def test_merge_lake_restart_with_added_column(spark, tmp_path):
     """Checkpoint-upgrade compatibility (SURVEY §7 hard-point #1): the
     merge sink restarted from its existing checkpoint with an ADDED
@@ -1821,6 +1882,88 @@ def test_commit_stream_to_lake_exactly_once_commits(
     assert [(r.station, r._change) for r in diff] == [(3, "insert")]
     # and the advisor sees the per-batch small files piling up
     assert lake_maintenance_plan(lake)["n_files"] >= 2
+
+
+def test_commit_stream_to_lake_empty_batch_publishes_nothing(spark, tmp_path):
+    """A micro-batch that filters to zero rows publishes no version,
+    advances no mark, leaves no ``data/<commit-id>/`` directory and
+    raises nothing; the next non-empty batch commits v1 under its own
+    batch id."""
+    import os
+
+    from cours_datalake_dwh_td_kafka_spark.lake import (
+        current_version,
+        lake_history,
+        lake_read,
+        last_stream_batch_id,
+    )
+    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
+        commit_stream_to_lake,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    lake = str(tmp_path / "lake")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        s = spark.readStream.schema("station LONG, reading DOUBLE").json(
+            str(indir)
+        )
+        q = commit_stream_to_lake(s.where("reading > 0"), lake, ckpt).start()
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return q.lastProgress["batchId"]
+
+    _write_batch(str(indir), [{"station": 1, "reading": -1.0}], "b0")
+    assert run() == 0
+    assert current_version(lake) == 0
+    assert last_stream_batch_id(lake) == -1
+    data = os.path.join(lake, "data")
+    assert not os.path.isdir(data) or os.listdir(data) == []
+
+    _write_batch(str(indir), [{"station": 2, "reading": 2.0}], "b1")
+    assert run() == 1
+    assert current_version(lake) == 1
+    assert last_stream_batch_id(lake) == 1
+    assert lake_history(lake)[0]["op"] == "append"
+    assert [tuple(r) for r in lake_read(spark, lake).collect()] == [(2, 2.0)]
+    assert len(os.listdir(data)) == 1
+
+
+def test_commit_stream_to_lake_one_job_per_batch(spark, tmp_path):
+    """The exactly-once sink's only Spark job per micro-batch is the
+    data write: K non-empty batches of a plain JSON source submit K
+    jobs. A streaming query runs its jobs under its ``runId`` job
+    group, so they are counted there."""
+    from cours_datalake_dwh_td_kafka_spark.lake import lake_history
+    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
+        commit_stream_to_lake,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    lake = str(tmp_path / "lake")
+    k = 3
+    for i in range(k):
+        _write_batch(
+            str(indir),
+            [{"station": 10 * i + j, "reading": 1.0} for j in range(5)],
+            f"b{i}",
+        )
+    s = (
+        spark.readStream.schema("station LONG, reading DOUBLE")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(indir))
+    )
+    q = commit_stream_to_lake(s, lake, str(tmp_path / "ckpt")).start()
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [h["op"] for h in lake_history(lake)] == ["append"] * k
+    sc = spark.sparkContext
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == k
 
 
 def test_stream_near_dup_alerts_with_persisted_artifacts(spark, tmp_path):
