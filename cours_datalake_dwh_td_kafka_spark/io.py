@@ -342,216 +342,3 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, target_mb: int = 128
-) -> int:
-    """Small-file compaction for a parquet directory: rewrite to
-    ``ceil(total_bytes / target_mb)`` files and swap into place. Returns
-    the new file count.
-
-    Streaming sinks commit one file per partition per micro-batch, so a
-    lake ingesting all day accumulates thousands of KB-sized files —
-    and at read time each costs a task + a footer fetch (the classic
-    small-files tax). Compaction runs as a periodic batch job on
-    partitions the stream has moved past. Sizes and the directory swap
-    both go through the Hadoop FileSystem API, so the same code runs on
-    local paths and hdfs:// alike; on object stores (rename is a copy,
-    not atomic) front the swap with a manifest commit or run it under a
-    table format's transaction instead."""
-    import math
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def hpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = hpath(path).getFileSystem(hconf)
-    if fs.exists(hpath(f"{path}/_spark_metadata")):
-        raise ValueError(
-            f"{path} is a structured-streaming file-sink output: its "
-            "_spark_metadata log pins the exact file set, so rewriting "
-            "files underneath it corrupts reads and the running "
-            "stream's commit protocol. Compact individual partition "
-            "directories the stream has finished writing, or move the "
-            "data out of the sink's root first."
-        )
-    df = spark.read.parquet(path)
-    total = sum(fs.getFileStatus(hpath(f)).getLen() for f in df.inputFiles())
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    tmp = f"{path}.compact.tmp"
-    df.repartition(n).write.mode("overwrite").parquet(tmp)
-    old = f"{path}.compact.old"
-    if not fs.rename(hpath(path), hpath(old)):
-        raise OSError(f"compact_parquet: rename {path} -> {old} failed")
-    if not fs.rename(hpath(tmp), hpath(path)):
-        # roll back so the lake path is never left missing
-        fs.rename(hpath(old), hpath(path))
-        raise OSError(f"compact_parquet: rename {tmp} -> {path} failed")
-    fs.delete(hpath(old), True)
-    return len(spark.read.parquet(path).inputFiles())
-
-
-def zorder_key(cols: list, bits: int = 16):
-    """Z-order (Morton) key: interleave the low ``bits`` bits of each
-    integer column into one long. Sorting by this key clusters rows
-    that are close in EVERY dimension into the same parquet row groups,
-    so min/max row-group stats stay tight for ALL interleaved columns
-    at once — a linear sort gets tight stats only for its leading
-    column. Built from shift/mask/sum terms (disjoint bit positions, so
-    ``+`` is bitwise OR) — pure codegen arithmetic, no UDF.
-
-    Columns must be non-negative integers; pre-map other types to an
-    integer rank (e.g. ``F.unix_timestamp``, dictionary codes) first.
-    """
-    n = len(cols)
-    if n * bits > 63:
-        # position 63 is the long's sign bit and Java shifts wrap at 64
-        # — past this the key silently scrambles the sort order
-        raise ValueError(
-            f"{n} columns x {bits} bits = {n * bits} key bits; a signed "
-            f"long holds 63. Lower bits (e.g. bits={63 // n}) or drop a "
-            "column."
-        )
-    terms = []
-    for i in range(bits):
-        for j, c in enumerate(cols):
-            bit = F.shiftright(F.col(c) if isinstance(c, str) else c, i)
-            bit = bit.cast("long").bitwiseAND(F.lit(1))
-            terms.append(F.shiftleft(bit, i * n + j))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-) -> None:
-    """Write parquet clustered by the Z-order of ``zorder_cols``: each
-    column is min/max-normalized to the full ``bits`` range (without
-    this, a narrow column's high interleave bits are constant zeros and
-    the wide column silently dominates the sort — i.e. no Z at all),
-    then a range repartition + in-partition sort on the Morton key
-    clusters row groups so min/max stats stay tight on EVERY clustered
-    column and point/range scans on any of them prune most of the lake
-    (tests pin the stats-tightness win vs a linear sort).
-
-    The normalization bounds cost one tiny min/max aggregate over the
-    input — at 100 TB that's a column-pruned scan the write was going
-    to do anyway, and the bounds can be cached per partition batch.
-
-    ``bits`` is clamped so the interleaved key fits a signed long
-    (n_cols * bits <= 63); precision beyond that adds nothing once the
-    values are min/max-normalized anyway."""
-    bits = min(bits, 63 // len(zorder_cols))
-    hi = (1 << bits) - 1
-    bounds = df.agg(
-        *[F.min(c).alias(f"lo_{c}") for c in zorder_cols],
-        *[F.max(c).alias(f"hi_{c}") for c in zorder_cols],
-    ).first()
-    if any(bounds[f"lo_{c}"] is None for c in zorder_cols):
-        # empty input (or an all-NULL cluster column): there is nothing
-        # to cluster — write the frame as-is instead of crashing on
-        # None arithmetic below
-        df.write.mode("overwrite").parquet(path)
-        return
-    scaled = []
-    for c in zorder_cols:
-        lo, span = bounds[f"lo_{c}"], bounds[f"hi_{c}"] - bounds[f"lo_{c}"]
-        span = span if span else 1
-        scaled.append(
-            ((F.col(c) - F.lit(lo)) * hi / F.lit(span)).cast("long")
-        )
-    out = df.withColumn("__z", zorder_key(scaled, bits=bits))
-    out = (
-        out.repartitionByRange(n_files, "__z")
-        if n_files
-        else out.repartitionByRange("__z")
-    )
-    out.sortWithinPartitions("__z").drop("__z").write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-# --------------------------------------------------------------------------
-# ORC (built into Spark, no external package): the other columnar lake
-# format a reference user migrating an existing Hive warehouse brings —
-# same pushdown/pruning contract as parquet, verified in tests.
-# --------------------------------------------------------------------------
-
-def read_orc(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    """ORC scan — predicate pushdown and column pruning reach the reader
-    exactly like the parquet path (pinned by test_orc_roundtrip)."""
-    if isinstance(paths, str):
-        return spark.read.orc(paths)
-    return spark.read.orc(*paths)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """ORC sink with the same hive-style partition layout as
-    :func:`write_parquet`."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-# --------------------------------------------------------------------------
-# Raw-file ingestion (built into Spark): text lines and whole binary
-# files — the front door for corpus text dumps and multimodal payloads
-# BEFORE they have a schema. binaryFile is how image/audio/video bytes
-# enter the engine at scale: one row per file, content as a binary
-# column, partitioned by Spark's file bin-packing — no driver reads.
-# --------------------------------------------------------------------------
-
-def read_text(
-    spark: SparkSession,
-    paths: str | list[str],
-    whole: bool = False,
-    line_sep: str | None = None,
-) -> DataFrame:
-    """Text scan: one row per line (default) or per file
-    (``whole=True``), column ``value STRING``. ``line_sep`` overrides
-    the newline splitter for record-separated dumps (e.g. NUL- or
-    form-feed-delimited corpora)."""
-    reader = spark.read
-    if line_sep is not None:
-        reader = reader.option("lineSep", line_sep)
-    # wholetext goes through the typed text() kwarg, not option():
-    # option() stringifies Python True to "True", which the text source
-    # does not parse as a boolean
-    return reader.text(
-        paths if isinstance(paths, str) else list(paths), wholetext=whole
-    )
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-) -> DataFrame:
-    """Whole-file binary scan via Spark's ``binaryFile`` source: one
-    row per file with (path, modificationTime, length, content BINARY)
-    — the ingestion edge for multimodal payloads (operators/
-    multimodal.py decodes the ``content`` column). ``glob`` filters by
-    pathGlobFilter (e.g. ``*.wav``) INSIDE the listing, so non-matching
-    files are never opened. Spark bin-packs small files into read
-    tasks; at 100 TB cap per-task memory with
-    ``spark.sql.files.maxPartitionBytes`` since each row holds a whole
-    file's bytes."""
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)

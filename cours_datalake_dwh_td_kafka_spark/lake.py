@@ -33,8 +33,7 @@ Invariants:
 
 Local-FS paths only (os/json manifest handling); the data files
 themselves go through Spark writers, so pointing the manifest layer at
-a DFS needs only the manifest IO swapped to the Hadoop FileSystem API
-(the same boundary io.compact_parquet already crosses).
+a DFS needs only the manifest IO swapped to the Hadoop FileSystem API.
 """
 
 from __future__ import annotations

@@ -433,8 +433,6 @@ def q_unpivot_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # funnel analysis: ordered stage progression per user
 # --------------------------------------------------------------------------
-_FUNNEL_STAGES = ("click", "view", "purchase")
-
 _FUNNEL_SQL = """
     WITH s1 AS (
       SELECT user_id, MIN(ts) AS t1 FROM events

@@ -1622,10 +1622,9 @@ def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # served path above still driver-collects a bounded probe batch and
 # ships the query matrix in a closure, impossible when the probe set is
 # the corpus. Here nothing query-sized ever touches the driver: probe
-# assignment is a distributed pass over the index's own vectors (the
-# stream_cell_occupancy shared-kernel idea — centroids k x d in the
-# closure, assignment entirely executor-side), and scoring is a
-# cell-local COGROUP: probes grouped by (probed cell, query block) meet
+# assignment is a distributed pass over the index's own vectors
+# (centroids k x d in the closure, assignment entirely executor-side),
+# and scoring is a cell-local COGROUP: probes grouped by (probed cell, query block) meet
 # that cell's resident vectors, one BLAS matmul per group, label mask
 # before the per-group top-k, global_topk tree reduce. Driver collects:
 # the k x d centroid table and bounded protocol scalars — never a

@@ -282,57 +282,6 @@ def q_dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def with_audio_fingerprint(
-    clips: DataFrame, strict: bool = True
-) -> DataFrame:
-    """Append an ``ahash`` column while PRESERVING the input columns —
-    the streaming-friendly shape (a stream dedup needs event time and
-    payload to survive the hash stage), mirroring
-    :func:`image_dedup.with_phash`. Stateless mapInPandas; works on
-    batch and streaming frames alike. ``payload`` must be WAV PCM-16
-    bytes (any length — short clips fingerprint with zero-energy
-    trailing cells, the accept-everything contract of
-    :func:`audio_fingerprint_of_samples`).
-
-    ``strict=False`` maps undecodable payloads to a NULL ahash instead
-    of raising — the streaming posture, where one poisoned record must
-    not kill the query (batch callers keep the default fail-fast, the
-    codec fuzz-test discipline)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    import numpy as np
-
-    in_cols = list(clips.columns)
-    out_schema = StructType(
-        list(clips.schema.fields) + [StructField("ahash", LongType())]
-    )
-
-    def hash_payload(p: bytes) -> int:
-        _, dec = decode_wav_pcm16(bytes(p))
-        return audio_fingerprint_of_samples(dec.astype(np.int64))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.copy()
-            hashes = []
-            for p in pdf["payload"]:
-                if strict:
-                    hashes.append(hash_payload(p))
-                else:
-                    try:
-                        hashes.append(
-                            None if p is None else hash_payload(p)
-                        )
-                    except (ValueError, TypeError):
-                        hashes.append(None)
-            pdf["ahash"] = pd.array(hashes, dtype="Int64")
-            yield pdf[in_cols + ["ahash"]]
-
-    return clips.mapInPandas(run, out_schema)
-
-
 # mapInPandas closures here must ship BY VALUE (including the imported
 # codec callables) — under a plain driver session the executors' Python
 # workers don't have the repo on sys.path (the round-3 gram lesson).

@@ -237,8 +237,8 @@ def bpe_train(d: DataFrame, merges: int = BPE_MERGES) -> DataFrame:
 # SINGLE-slot by design: a new key evicts the old entry, so a dead
 # session's checkpoint blocks never pin memory across corpora, and the
 # lock closes the check-then-train race between concurrent callers.
-# Library entry points (bpe_train / bpe_segment) stay uncached — they
-# accept arbitrary DataFrames whose identity we cannot key on.
+# The library entry point (bpe_train) stays uncached — it accepts
+# arbitrary DataFrames whose identity we cannot key on.
 import threading as _threading
 
 _CORE_CACHE: dict[tuple[str, str, int], tuple[list, DataFrame]] = {}
@@ -285,23 +285,6 @@ _SEGMENT_SELECT = """SELECT d.doc_id,
     JOIN w{m} w ON w.word = d.word
     GROUP BY d.doc_id
     ORDER BY d.doc_id"""
-
-
-def bpe_segment(d: DataFrame, merges: int = BPE_MERGES) -> DataFrame:
-    """Tokenize the corpus with the merges just learned: per document,
-    word count, subword-piece count, and mean pieces per word (the
-    fertility statistic tokenizer teams track — high fertility means
-    the vocabulary fits the corpus badly).
-
-    Scale shape: training's final word-repr table IS the segmentation
-    of every distinct word, so applying BPE to the corpus is ONE
-    equi-join of the exploded corpus words against the vocab-sized
-    piece table (broadcast when it fits) — no per-document merge loop
-    ever runs. The oracle reuses the training CTE chain and reads the
-    final w{n} relation, so the learned segmentation is value-checked
-    end-to-end, not just the merge list."""
-    _, words = _bpe_core(d, merges)
-    return _segment_from_words(d, words)
 
 
 def _segment_from_words(d: DataFrame, words: DataFrame) -> DataFrame:

@@ -56,7 +56,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cours_datalake_dwh_td_kafka_spark.io import load_table
 from cours_datalake_dwh_td_kafka_spark.registry import register
@@ -201,60 +200,6 @@ def kmeans_lloyd(
         )
         .orderBy("cell", "pos")
     )
-
-
-def with_cell_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Stateless nearest-centroid assignment: adds a ``cell`` column to
-    ``vecs`` (any frame with an ``embedding`` array column — BATCH OR
-    STREAM; mapInPandas is a stateless passthrough, so this is the
-    serving-side quantizer step a streaming pipeline can run per
-    micro-batch with zero state).
-
-    ``centroids`` is the long-form (cell, pos, c) table
-    :func:`kmeans_lloyd` emits; it is collected once (k x d rows,
-    bounded by construction) and shipped in the task closure like a
-    broadcast. EXACTNESS: both the vectors and the 6-dp centroids are
-    scaled to int64 micro-units (half-away-from-zero, the decimal-cast
-    rounding), so each squared distance is an EXACT integer and the
-    argmin with lowest-cell tie-break matches :func:`_estep`'s decimal
-    arithmetic (pinned corpus-wide in tests) — no float accumulation
-    anywhere; the only theoretical divergence surface is a value whose
-    1e6-scale double product lands on an exact .5 rounding boundary."""
-    import numpy as np
-
-    rows = centroids.select("cell", "pos", "c").collect()
-    cells = sorted({int(r.cell) for r in rows})
-    cmap = {c: i for i, c in enumerate(cells)}
-    d_dim = max(int(r.pos) for r in rows) + 1
-    cent_i = np.zeros((len(cells), d_dim), dtype=np.int64)
-    for r in rows:
-        v = float(r.c) * 1e6
-        cent_i[cmap[int(r.cell)], int(r.pos)] = int(
-            np.floor(abs(v) + 0.5) * (1 if v >= 0 else -1)
-        )
-    cells_arr = np.asarray(cells, dtype=np.int64)
-    # StructType.add MUTATES (and returns) self — copy the field list
-    # instead of corrupting the input frame's cached schema object
-    out_schema = T.StructType(
-        list(vecs.schema.fields) + [T.StructField("cell", T.LongType())]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            x *= 1e6
-            xi = (np.floor(np.abs(x) + 0.5) * np.sign(x)).astype(np.int64)
-            # exact int64 squared distances: values are 1e6-scaled
-            # (|x| ~ 1e7), so a squared diff is <= ~1e14 and a d-dim
-            # sum stays far below 2^63
-            dist = ((xi[:, None, :] - cent_i[None, :, :]) ** 2).sum(axis=2)
-            pdf = pdf.copy()
-            pdf["cell"] = cells_arr[dist.argmin(axis=1)]
-            yield pdf
-
-    return vecs.mapInPandas(assign, out_schema)
 
 
 def _kmeans_sql(k: int = K_CELLS, rounds: int = LLOYD_ROUNDS) -> str:

@@ -50,32 +50,16 @@ def norm_text(col: Column) -> Column:
 NORM_SQL = "lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array<string>, built with array
-    lambdas (JVM-side, no UDF).
-
-    NOTE: do not ``explode`` this column directly — Spark's GenerateExec
-    re-evaluates the generator child per OUTPUT row, so the O(words)
-    array construction runs once per shingle (O(n^2) per doc; measured
-    11 s vs 0.6 s at sf0.1). Row-wise consumers use
-    :func:`shingle_rows`, which explodes token POSITIONS first and builds
-    each shingle scalar once."""
-    toks = F.split(col, " ")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-
-
 def shingle_rows(d: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) rows via explode-FIRST: materialize the token
     array once per doc, explode the position sequence, then one
-    ``slice``+``concat_ws`` per output row. Equivalent to
-    ``explode(shingles(...))`` but linear instead of quadratic per doc
-    (see :func:`shingles`). ``distinct=False`` skips the dedup shuffle for
-    consumers where duplicates are harmless (MIN aggregates)."""
+    ``slice``+``concat_ws`` per output row. Equivalent to exploding a
+    per-doc shingle array but linear instead of quadratic per doc:
+    Spark's GenerateExec re-evaluates the generator child per OUTPUT
+    row, so an exploded O(words) array construction runs once per
+    shingle (measured 11 s vs 0.6 s at sf0.1). ``distinct=False`` skips
+    the dedup shuffle for consumers where duplicates are harmless (MIN
+    aggregates)."""
     toks = F.split(norm_text(F.col("text")), " ")
     pos = (
         d.select("doc_id", toks.alias("toks"))
@@ -181,7 +165,7 @@ MAX_DF = 50  # shingles in more docs than this carry no signal
 def _doc_shingles(d: DataFrame) -> DataFrame:
     """(doc_id, sh array<string>, n_sh) — built from :func:`shingle_rows`
     (explode-first), re-grouped into arrays for set-intersection verifies.
-    Measured FASTER than the shuffle-free per-row ``shingles()``
+    Measured FASTER than a shuffle-free per-row array-lambda
     projection: the array expression is an interpreted HOF chain
     (transform+slice+concat per element), while explode-first keeps the
     per-row work inside codegen and the regroup shuffle is cheap."""
@@ -218,9 +202,9 @@ def ngram_jaccard_pairs(
     shingles. Replaces an inverted-index self-join with a window
     df-filter (full distinct shuffle + per-shingle sort + quadratic-ish
     join — measured slower and with 3 sorts at sf0.1). NOTE: building
-    per-doc shingle ARRAYS via the ``shingles()`` HOF projection instead
+    per-doc shingle ARRAYS via an array-lambda (HOF) projection instead
     was measured ~2x SLOWER end-to-end — interpreted HOF per element vs
-    codegen explode-first (see the GenerateExec note on `shingles`).
+    codegen explode-first.
 
     The shingle STRINGS never leave the map side: each is replaced by its
     xxhash64 before the postings aggregate, so the big groupBy exchanges
@@ -394,9 +378,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def band_key_array() -> Column:
     """Array-of-band-keys expression over h0..h{N_HASHES-1} columns —
-    THE band-key format; every producer (batch `_band_rows`, the
-    streaming per-row path) must build keys through this one expression
-    or the band equi-join silently matches nothing."""
+    THE band-key format; every producer must build keys through this
+    one expression or the band equi-join silently matches nothing."""
     return F.array(
         *[
             F.concat_ws(
@@ -2042,27 +2025,6 @@ def incremental_near_dups(
     return _verify_near_dup_candidates(cand, shc, shi, threshold)
 
 
-def near_dups_from_shingles(
-    shc: DataFrame, shi: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """:func:`incremental_near_dups` on PRE-SHINGLED sides — (doc_id,
-    sh, n_sh) frames as :func:`_doc_shingles` builds them. Callers that
-    run the gate several times over overlapping doc sets shingle the
-    union once and filter by doc_id instead of re-normalizing the text
-    per call. (corpus_refresh no longer goes through here — it reads
-    the PERSISTED band table and candidate-prunes the verify; this form
-    remains for callers that already hold both sides' arrays, e.g. the
-    streaming-twin parity tests.)"""
-    bc = _band_rows(_signature_of_shingles(shc)).select(
-        F.col("doc_id").alias("corpus_doc"), "band_key"
-    )
-    bi = _band_rows(_signature_of_shingles(shi)).select(
-        F.col("doc_id").alias("inc_doc"), "band_key"
-    )
-    cand = bi.join(bc, "band_key").select("inc_doc", "corpus_doc").distinct()
-    return _verify_near_dup_candidates(cand, shc, shi, threshold)
-
-
 def _verify_near_dup_candidates(
     cand: DataFrame,
     shc: DataFrame,
@@ -2149,39 +2111,3 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_near_dups(
         d.where(F.col("doc_id") < cut), d.where(F.col("doc_id") >= cut)
     )
-
-
-# ---------------------------------------------------------------------------
-# per-ROW shingle/minhash expressions — stateless column forms of the
-# explode-first batch kernels, for STREAMING consumers (a stream cannot
-# explode-regroup per doc without a stateful aggregate; a whole doc
-# arrives as one row, so its shingle set and signature are pure
-# projections). Values are identical to the batch forms: same
-# normalization, same slice windows, and MIN over the distinct array ==
-# MIN over the exploded multiset. Interpreted-HOF cost per row is the
-# price of statelessness — batch callers should keep using shingle_rows
-# (measured faster there, see _doc_shingles).
-# ---------------------------------------------------------------------------
-def shingle_array(textcol: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of one row's text, as an array —
-    the per-row twin of :func:`shingle_rows`, delegating to the one
-    shingle-window expression so the two forms cannot drift."""
-    return shingles(norm_text(textcol), n)
-
-
-def minhash_cols(sh: Column) -> list[Column]:
-    """h0..h7 minhash columns from a shingle-array column — the per-row
-    twin of :func:`minhash_signature`. The md5 hash runs ONCE per
-    shingle into an intermediate long array (interpreted HOFs get no
-    common-subexpression elimination across columns, so inlining the
-    hash into each h_i would pay it 8x), then each h_i is a cheap
-    affine array_min over the shared xs."""
-    xs = F.transform(sh, lambda t: _HASH32_SPARK(t) % MINHASH_P)
-    return [
-        F.array_min(
-            F.transform(
-                xs, lambda x: (x * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P
-            )
-        ).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]

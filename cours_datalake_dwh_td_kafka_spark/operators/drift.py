@@ -219,9 +219,8 @@ KS_NULL_BIN = LEN_BIN_MAX + 1
 
 
 def ks_len_bin() -> "F.Column":
-    """The KS length-bucket binning expression, shared with the
-    streaming twin so batch and stream can never disagree on where
-    null mass lands."""
+    """The KS length-bucket binning expression: null ``n_chars`` lands
+    in :data:`KS_NULL_BIN`, after every capped bin."""
     return (
         F.when(F.col("n_chars").isNull(), F.lit(KS_NULL_BIN))
         .otherwise(
@@ -418,8 +417,7 @@ def ksa_edges(ref: DataFrame) -> list[float]:
 
 def ksa_bin_expr(edges: list[float], c: "F.Column") -> "F.Column":
     """Equi-depth bin of ``c``: the count of edges it exceeds; NULL
-    lands in the sentinel bin after every real one. Shared by the
-    batch row and the streaming twin so they cannot drift."""
+    lands in the sentinel bin after every real one."""
     b = F.lit(0)
     for e in edges:
         b = b + F.when(c.cast("double") > F.lit(e), 1).otherwise(0)

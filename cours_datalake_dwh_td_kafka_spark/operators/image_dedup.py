@@ -356,49 +356,6 @@ def _phash_of(payload: bytes) -> int:
     return _phash_of_pixels(decode_bmp24(payload))
 
 
-def with_phash(images: DataFrame, strict: bool = True) -> DataFrame:
-    """Append a ``phash`` column while PRESERVING the input columns —
-    the streaming-friendly shape (a stream dedup needs event time and
-    payload to survive the hash stage). Stateless mapInPandas; works on
-    batch and streaming frames alike.
-
-    ``strict=False`` maps undecodable payloads to a NULL phash instead
-    of raising — the streaming posture, where one poisoned record must
-    not kill the query (batch callers keep the default fail-fast, the
-    codec fuzz-test discipline)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    in_cols = list(images.columns)
-    out_schema = StructType(
-        list(images.schema.fields) + [StructField("phash", LongType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.copy()
-            hashes = []
-            for p in pdf["payload"]:
-                if strict:
-                    hashes.append(_phash_of(bytes(p)))
-                else:
-                    # decode_bmp24 is @_reject_corrupt-fenced (structural
-                    # failures -> ValueError); a NULL payload would raise
-                    # TypeError at bytes(None) — both are poison, not a
-                    # reason to kill the stream
-                    try:
-                        hashes.append(
-                            None if p is None else _phash_of(bytes(p))
-                        )
-                    except (ValueError, TypeError):
-                        hashes.append(None)
-            pdf["phash"] = pd.array(hashes, dtype="Int64")
-            yield pdf[in_cols + ["phash"]]
-
-    return images.mapInPandas(run, out_schema)
-
-
 # mapInPandas closures here must ship BY VALUE (including the imported
 # codec callables) — under a plain driver session the executors' Python
 # workers don't have the repo on sys.path (the round-3 gram lesson).

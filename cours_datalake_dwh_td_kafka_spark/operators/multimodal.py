@@ -1936,18 +1936,6 @@ def _quantize_blocks(gray):
     )
 
 
-def _dequantize_blocks(quant, h: int, w: int):
-    """(n_blocks, 8, 8) int -> (h, w) uint8 via dequantize + IDCT."""
-    import numpy as np
-
-    q = np.asarray(_JPEG_QTABLE, dtype=np.float64)
-    m = _dct_matrix()
-    qb = quant.astype(np.float64).reshape(h // 8, w // 8, 8, 8)
-    blocks = np.einsum("ij,abjk,kl->abil", m.T, qb * q, m)
-    g = blocks.transpose(0, 2, 1, 3).reshape(h, w) + 128.0
-    return np.clip(np.round(g), 0, 255).astype(np.uint8)
-
-
 JPEG_SCHEMA = (
     "doc_id BIGINT, width BIGINT, height BIGINT, n_blocks BIGINT, "
     "jfif_ok BOOLEAN, lossless_ok BOOLEAN, stuffing_ok BOOLEAN, "
@@ -2253,6 +2241,9 @@ def decode_jfif(payload: bytes):
                 raise ValueError("AC run past block end")
             seq[k] = _amplitude_value(s, r.take(s))
             k += 1
+        # a corrupt table or DC chain can decode values no int16 holds
+        if not all(-32768 <= v <= 32767 for v in seq):
+            raise ValueError("DCT coefficient out of range")
         for idx, (i, j) in enumerate(zz):
             quant[b, i, j] = seq[idx]
 

@@ -1,8 +1,7 @@
 """Mergeable quantile sketch (round 13, VERDICT r12 #4): the missing
-member of the sketch family. CMS / HLL / KMV / Misra-Gries all have
-bounded-state streaming twins; percentiles didn't — and the drift
-monitors bin at fixed width (LEN_BIN_WIDTH) because full-resolution KS
-needs a global sort. This module adds a KLL/MRL-style compacting
+member of the sketch family next to CMS / HLL / KMV / Misra-Gries,
+and the drift monitors bin at fixed width (LEN_BIN_WIDTH) because
+full-resolution KS needs a global sort. This module adds a KLL/MRL-style compacting
 summary (Munro-Paterson 1980; Manku-Rajagopalan-Lindsay 1998;
 Karnin-Lang-Liberty 2016 — public papers; the reference has no sketch
 of any kind, its quantiles come from pandas ``describe``,
@@ -23,9 +22,7 @@ work/Intro_pySpark.ipynb):
   commutative, order-insensitive bit-for-bit (no cross-summary
   re-compaction, so merging adds ZERO new error; the union grows by
   O(k log(m/k)) per summary, the driver-side fold every production
-  sketch library does in its ``get_quantiles``). A deployment with
-  millions of partitions would re-compact the union at a known extra
-  err; the hook is :func:`sketch_compress`.
+  sketch library does in its ``get_quantiles``).
 - a rank query walks the value-sorted points' cumulative weights.
   Guarantee: the returned value's TRUE rank is within ``err`` of the
   target — checked in-query against Spark's exact ``percentile`` at
@@ -71,8 +68,7 @@ _SUMMARY_SCHEMA = "value double, weight long, err long, n long"
 
 
 # ---------------------------------------------------------------------------
-# pure-Python sketch core — shared verbatim by the mapInPandas workers
-# and the streaming twin, so batch and stream cannot drift
+# pure-Python sketch core, run by the mapInPandas workers
 # ---------------------------------------------------------------------------
 
 
@@ -122,28 +118,6 @@ def sketch_merge(
 ) -> tuple[list, int, int]:
     """Union-only merge: associative, commutative, adds no error."""
     return points_a + points_b, n_a + n_b, err_a + err_b
-
-
-def sketch_compress(points: list, n: int, err: int) -> tuple[list, int, int]:
-    """Optional re-compaction of a merged union (for million-partition
-    fan-ins): rebuild through the compactor, inheriting its error
-    accounting on top of the carried budget."""
-    st = sketch_new()
-    for v, w in sorted(points):
-        h = w.bit_length() - 1
-        while len(st["levels"]) <= h:
-            st["levels"].append([])
-        st["levels"][h].append(v)
-        st["n"] += w
-    # cascade sweep AFTER the feed: a compaction's promotions can
-    # overflow the level above, which a per-append check would miss
-    h = 0
-    while h < len(st["levels"]):
-        while len(st["levels"][h]) > QS_K:
-            _compact_level(st, h)
-        h += 1
-    assert st["n"] == n
-    return sketch_points(st), n, err + st["err"]
 
 
 def sketch_quantile(points: list, n: int, p: float) -> float:

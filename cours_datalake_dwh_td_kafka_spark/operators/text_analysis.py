@@ -715,8 +715,6 @@ BM25_B = 0.75
 BM25_TERMS = ("join", "scan", "merge")
 BM25_TOP_N = 20
 
-_BM25_TERM_IN = ", ".join(f"'{t}'" for t in BM25_TERMS)
-
 
 def bm25_ctes(terms: tuple[str, ...]) -> str:
     """The BM25 oracle CTE chain for an arbitrary query-term set —

@@ -606,8 +606,8 @@ def cusum_changepoint(
 
     ``target_mu``/``target_sigma``: monitor drift against a KNOWN
     baseline instead of the key's own sample stats — the form a
-    streaming monitor runs (and what ``streaming.cusum_stateful``
-    mirrors, since a stream cannot know its full-series mean). Both
+    streaming monitor runs, since a stream cannot know its full-series
+    mean. Both
     modes share the SAME downstream pipeline; only the (n, mu, sigma)
     source differs."""
     cum = Window.partitionBy(key).orderBy("ts", "event_id").rowsBetween(

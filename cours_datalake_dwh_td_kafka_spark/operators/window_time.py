@@ -11,8 +11,16 @@ width that divides 24h (all widths used here).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from cours_datalake_dwh_td_kafka_spark.io import load_table
 from cours_datalake_dwh_td_kafka_spark.registry import register
@@ -168,10 +176,75 @@ def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Custom-state sessionization (pandas grouped-map twin of the
-# applyInPandasWithState streaming operator, streaming/stateful.py):
-# same gap semantics as session_window but via explicit per-key state —
-# the engine's extension point for state machines Spark lacks.
+# Custom-state sessionization: same gap semantics as session_window but
+# via an explicit fold over each user's time-ordered rows — the engine's
+# extension point for state machines Spark lacks.
+OUTPUT_SCHEMA = StructType(
+    [
+        StructField("user_id", LongType()),
+        StructField("session_start", TimestampType()),
+        StructField("session_end", TimestampType()),
+        StructField("n_obs", LongType()),
+        StructField("sum_value", DoubleType()),
+    ]
+)
+
+_US = 1_000_000
+
+
+def sessionize_pandas_batch(events: DataFrame, gap_seconds: int) -> DataFrame:
+    """Gap sessionization as an explicit per-partition fold in pandas,
+    registered as ``pandas_sessionization``: same gap semantics as
+    ``F.session_window`` (session_end = last event + gap), checked
+    against the DuckDB oracle.
+
+    Shape: hash-repartition by user_id, sort within partitions by
+    (user_id, event_time), then ONE ``mapInPandas`` pass per partition
+    with fully-vectorized numpy session folding. NOT
+    ``groupBy().applyInPandas`` — grouped-map invokes the Python UDF once
+    PER KEY, and at thousands of keys that per-call overhead dominated
+    the query (measured 13.7 s grouped-map vs ~1.5 s partition-local at
+    sf0.1, same results). Memory bound = one partition's rows; size
+    ``n_partitions`` so partitions fit, the same dial every shuffle has."""
+    import numpy as np
+
+    gap_us = gap_seconds * _US
+
+    def fold_partition(batches) -> "pd.DataFrame":
+        # a user's rows can straddle Arrow batches, so fold whole
+        # partitions (the repartition guarantees user completeness)
+        pdfs = [p for p in batches if len(p)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        u = pdf["user_id"].to_numpy()
+        ts = (pdf["event_time"].astype("int64") // 1_000).to_numpy()
+        vals = pdf["value"].to_numpy(dtype="float64")
+        new_session = np.concatenate(
+            ([True], (u[1:] != u[:-1]) | (np.diff(ts) > gap_us))
+        )
+        starts = np.flatnonzero(new_session)
+        bounds = np.concatenate((starts[1:], [len(ts)]))
+        yield pd.DataFrame(
+            {
+                "user_id": u[starts],
+                "session_start": pd.to_datetime(ts[starts], unit="us"),
+                "session_end": pd.to_datetime(
+                    ts[bounds - 1] + gap_us, unit="us"
+                ),
+                "n_obs": (bounds - starts).astype("int64"),
+                "sum_value": np.add.reduceat(vals, starts),
+            }
+        )
+
+    return (
+        events.select("user_id", "event_time", "value")
+        .repartition("user_id")
+        .sortWithinPartitions("user_id", "event_time")
+        .mapInPandas(fold_partition, OUTPUT_SCHEMA)
+    )
+
+
 _PANDAS_SESSION_SQL = """
     WITH flagged AS (
       SELECT user_id, ts, value,
@@ -199,10 +272,6 @@ _PANDAS_SESSION_SQL = """
 
 @register("pandas_sessionization", _PANDAS_SESSION_SQL)
 def q_pandas_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cours_datalake_dwh_td_kafka_spark.streaming.stateful import (
-        sessionize_pandas_batch,
-    )
-
     e = _events(spark, sf_dir)
     out = sessionize_pandas_batch(e, gap_seconds=4 * 3600)
     return out.select(

@@ -112,17 +112,51 @@ def count_jobs(
     fresh job group through the status tracker (works with the UI off).
     ``description`` labels the group's jobs (default: the group id).
     Jobs that ``fn`` submits from ``attest.legs`` threads inherit the
-    group and are counted; the caller's own group is restored after."""
+    group and are counted; the caller's own group is restored after.
+
+    A streaming query runs its micro-batch jobs under its own ``runId``
+    job group, not the caller's: a listener records the run of every
+    query ``spark.streams`` starts while ``fn`` runs, and those groups'
+    jobs are counted too (the jobs a run has submitted by the time
+    ``fn`` returns)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class _Runs(StreamingQueryListener):
+        # onQueryStarted runs before start() returns, so no run is missed
+        def __init__(self) -> None:
+            self.ids: list[str] = []
+
+        def onQueryStarted(self, event) -> None:
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event) -> None:
+            pass
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            pass
+
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     prev = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    runs = _Runs()
+    spark.streams.addListener(runs)
     sc.setJobGroup(group, description or group)
     try:
         out = fn()
     finally:
+        spark.streams.removeListener(runs)
         for k, v in prev.items():
             sc.setLocalProperty(k, v)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    if runs.ids:
+        # a stream's job events reach the status tracker asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return out, sum(
+        len(tracker.getJobIdsForGroup(g)) for g in (group, *runs.ids)
+    )
 
 
 @contextmanager
@@ -367,16 +401,3 @@ def low_cardinality_keyed_windows(
             continue  # per-key top-k: survivors capped at n_keys * k
         bad.append(spec)
     return bad
-
-
-def assert_no_cartesian(df: DataFrame) -> None:
-    f = plan_facts(df)
-    assert f.n_cartesian == 0, f"unexpected CartesianProduct:\n{physical_plan(df)}"
-
-
-def assert_no_python_row_udf(df: DataFrame) -> None:
-    """The engine policy (SURVEY.md §4): no row-at-a-time Python UDFs in
-    any hot path — pandas/Arrow evals only where built-ins can't express
-    the op."""
-    f = plan_facts(df)
-    assert f.python_evals == 0, f"row-wise Python UDF in plan:\n{physical_plan(df)}"

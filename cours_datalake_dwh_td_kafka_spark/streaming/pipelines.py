@@ -1,7 +1,8 @@
-"""Structured Streaming speed layer — SURVEY.md §2.9 (T1-T10).
+"""Structured Streaming speed layer — SURVEY.md §2.9 (T1-T10) and S16.
 
 Reproduces the reference's streaming topology with idiomatic state
-handling:
+handling, in the shape source -> stateless or windowed transform ->
+idempotent sink:
 
 - transform: Kafka-shaped JSON value -> parse -> enrich with alert levels
   (reference: work/spark_processor.py:19-47).
@@ -11,7 +12,13 @@ handling:
   state, `complete` survives as a compat option.
 - stream-static anomaly join against the batch profile on the full
   (type, month) key (reference: work/anomaly_detector.py:35-49 + the spec
-  key from KAFKA exos (1).pdf §Exercice 13).
+  key from KAFKA exos (1).pdf §Exercice 13), and a watermarked
+  stream-stream interval join.
+- sinks: the partitioned file sink (S16, reference:
+  work/weather_to_hdfs.py), the exactly-once versioned-lake sink
+  (:func:`commit_stream_to_lake`), its CDC consumer
+  (:func:`consume_lake_changes_stream`) and the plain-parquet upsert sink
+  (:func:`merge_stream_to_lake`).
 
 Everything is source-agnostic: pipelines take a DataFrame (batch or
 streaming) and return a DataFrame, so the same plan runs under Kafka in
@@ -216,291 +223,6 @@ def anomaly_stream(
         mean.alias("expected_value"),
         F.when(v > mean + 2 * std, "high").otherwise("low").alias("anomaly_type"),
         F.lit(True).alias("is_anomaly"),
-    )
-
-
-def stream_dedup(
-    enriched: DataFrame,
-    watermark: str = "10 minutes",
-    key_cols: tuple[str, ...] | None = None,
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """Streaming exact dedup: drop replayed records (producer re-sends,
-    at-least-once upstream) inside the watermark horizon.
-
-    ``key_cols=None`` dedups on full content: an md5 fingerprint of every
-    column (the streaming twin of the batch fingerprint dedup,
-    operators/dedup.py). ``dropDuplicatesWithinWatermark`` bounds the
-    state store by the watermark window — plain ``dropDuplicates`` on a
-    stream keeps every key seen forever, which is exactly the unbounded
-    state the reference's complete-mode jobs suffered from.
-    """
-    df = enriched.withWatermark(event_time_col, watermark)
-    if key_cols is None:
-        df = df.withColumn(
-            "fingerprint", F.md5(F.to_json(F.struct(*enriched.columns)))
-        )
-        return df.dropDuplicatesWithinWatermark(["fingerprint"]).drop(
-            "fingerprint"
-        )
-    return df.dropDuplicatesWithinWatermark(list(key_cols))
-
-
-def stream_image_dedup(
-    images: DataFrame,
-    watermark: str = "10 minutes",
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """Streaming PERCEPTUAL image dedup: phash every payload (the
-    integer-DCT hash of operators/image_dedup.py, computed in a
-    stateless passthrough mapInPandas) and drop rows whose hash was
-    already seen inside the watermark horizon. Catches what the
-    byte-fingerprint :func:`stream_dedup` structurally cannot: a
-    re-encoded or brightness-shifted copy has different BYTES but the
-    IDENTICAL pHash (exact invariances pinned in
-    tests/test_image_dedup.py). State is one 60-bit hash per distinct
-    image within the watermark — bounded, like every stateful op here.
-    Undecodable payloads hash to NULL and are DROPPED (the DLQ posture:
-    one poisoned record must not kill the stream, and a corrupt blob is
-    not trainable data anyway). (Hamming-distance near-dups beyond hash
-    equality stay a batch concern: the banded candidate join needs a
-    corpus-wide index, not per-record state.)"""
-    from cours_datalake_dwh_td_kafka_spark.operators.image_dedup import (
-        with_phash,
-    )
-
-    return (
-        with_phash(images, strict=False)
-        .where(F.col("phash").isNotNull())
-        .withWatermark(event_time_col, watermark)
-        .dropDuplicatesWithinWatermark(["phash"])
-    )
-
-
-def stream_audio_dedup(
-    clips: DataFrame,
-    watermark: str = "10 minutes",
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """Streaming PERCEPTUAL audio dedup — the audio twin of
-    :func:`stream_image_dedup`: fingerprint every WAV payload (the
-    energy-envelope integer hash of operators/audio_dedup.py, computed
-    in a stateless passthrough mapInPandas) and drop rows whose hash
-    was already seen inside the watermark horizon. Catches what the
-    byte-fingerprint :func:`stream_dedup` structurally cannot: a
-    gain-re-mastered copy has different BYTES but the IDENTICAL
-    fingerprint (exact gain invariance pinned in
-    tests/test_audio_dedup.py). State is one 60-bit hash per distinct
-    clip within the watermark — bounded. Undecodable or too-short
-    payloads hash to NULL and are DROPPED (the DLQ posture:
-    one poisoned record must not kill the stream, and a corrupt clip is
-    not trainable data anyway). (Hamming-distance near-dups beyond hash
-    equality stay a batch concern: the banded candidate join needs a
-    corpus-wide index, not per-record state.)"""
-    from cours_datalake_dwh_td_kafka_spark.operators.audio_dedup import (
-        with_audio_fingerprint,
-    )
-
-    return (
-        with_audio_fingerprint(clips, strict=False)
-        .where(F.col("ahash").isNotNull())
-        .withWatermark(event_time_col, watermark)
-        .dropDuplicatesWithinWatermark(["ahash"])
-    )
-
-
-def stream_cell_occupancy(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "10 minutes",
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """Streaming quantizer-occupancy monitor — the ingestion-time feed
-    of the batch drift diagnostics (`ann_index_drift`,
-    `compact_if_drifted`): as embedding vectors arrive, assign each to
-    its nearest centroid of the STATIC centroid table (the stateless
-    int64-exact kernel :func:`operators.clustering.with_cell_assign`,
-    shared verbatim with batch, so stream == batch assignment by
-    construction) and emit per-(window, cell) arrival counts. A cell
-    whose live occupancy share drifts away from its share at index-build
-    time is the earliest possible re-train signal — it fires while the
-    drifted vectors are still in flight, before any index append or
-    recall probe sees them. State is one count per (window, cell):
-    k-bounded per window, watermark-bounded across windows."""
-    from cours_datalake_dwh_td_kafka_spark.operators.clustering import (
-        with_cell_assign,
-    )
-
-    # watermark AFTER the stateless assignment (the event-time column
-    # passes straight through the kernel, and declaring it downstream
-    # avoids relying on watermark propagation through mapInPandas)
-    assigned = with_cell_assign(vecs, centroids).withWatermark(
-        event_time_col, watermark
-    )
-    return (
-        assigned.groupBy(F.window(event_time_col, window), "cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "cell",
-            "n",
-        )
-    )
-
-
-def stream_near_dup_alerts(
-    docs: DataFrame,
-    corpus: DataFrame,
-    watermark: str = "10 minutes",
-    event_time_col: str = "event_time",
-    corpus_bands: DataFrame | None = None,
-    corpus_shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Ingestion-time NEAR-dup alerts against the kept corpus — the
-    streaming twin of ``dedup_incremental_lsh``: as documents arrive,
-    emit one alert per doc that near-duplicates (banded MinHash
-    candidates + exact Jaccard) a document in the STATIC survivor set.
-    Catches the re-crawled page with a new footer while it is still in
-    flight; the batch gate inside ``corpus_refresh`` stays the
-    authoritative sweep.
-
-    A stream cannot explode-regroup per doc without a stateful
-    aggregate, so the stream side uses the PER-ROW column forms
-    (``dedup.shingle_array`` / ``dedup.minhash_cols`` — value-identical
-    to the batch kernels, pinned in tests): shingle set, signature, and
-    band keys are stateless projections, the band match and the
-    Jaccard verify are the supported stream-static inner joins, and one
-    doc matching several survivors collapses to ONE alert via
-    dropDuplicatesWithinWatermark on doc_id — watermark-bounded state,
-    like every stateful op here.
-
-    ``corpus_bands`` / ``corpus_shingles`` (round 10): the PERSISTED
-    gate artifacts — (doc_id, band_key) rows and (doc_id, sh, n_sh)
-    shingle arrays, exactly what ``corpus_refresh`` maintains per MERGE
-    — so a stream start against a 100 TB survivor set reads two tables
-    instead of re-normalizing and re-shingling the whole corpus text.
-    When omitted (self-contained tests), both recompute from
-    ``corpus``; the value parity of the two forms is pinned in
-    tests/test_streaming.py."""
-    from cours_datalake_dwh_td_kafka_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        _band_rows,
-        _doc_shingles,
-        _signature_of_shingles,
-        band_key_array,
-        minhash_cols,
-        shingle_array,
-    )
-
-    shc = (
-        corpus_shingles
-        if corpus_shingles is not None
-        else _doc_shingles(corpus).localCheckpoint(eager=True)
-    )
-    static_bands = (
-        corpus_bands
-        if corpus_bands is not None
-        else _band_rows(_signature_of_shingles(shc)).localCheckpoint(
-            eager=True
-        )
-    ).select(F.col("doc_id").alias("corpus_doc"), "band_key")
-    static_sh = shc.select(
-        F.col("doc_id").alias("corpus_doc"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    ).localCheckpoint(eager=True)
-
-    sh = docs.withColumn("sh", shingle_array(F.col("text")))
-    sig = sh.select(
-        "doc_id", event_time_col, "sh", *minhash_cols(F.col("sh"))
-    )
-    banded = sig.select(
-        "doc_id",
-        event_time_col,
-        "sh",
-        F.explode(band_key_array()).alias("band_key"),
-    )
-    verified = (
-        banded.join(static_bands, "band_key")
-        .join(static_sh, "corpus_doc")
-        .withColumn("n_shared", F.size(F.array_intersect("sh", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_shared")
-                / (F.size("sh") + F.col("n_b") - F.col("n_shared")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_id", event_time_col, "corpus_doc", "jaccard")
-    )
-    return verified.withWatermark(
-        event_time_col, watermark
-    ).dropDuplicatesWithinWatermark(["doc_id"])
-
-
-def stream_contamination_alerts(
-    docs: DataFrame,
-    bench: DataFrame,
-    n: int | None = None,
-    watermark: str = "10 minutes",
-    event_time_col: str = "event_time",
-) -> DataFrame:
-    """Streaming benchmark-decontamination gate: as documents arrive,
-    emit an alert row for every doc sharing an ``n``-gram with the
-    STATIC benchmark set — contamination caught at ingestion time, not
-    at the next batch sweep. The stream's shingles are a stateless
-    explode (the batch shingle_rows plan, hashed to longs on the map
-    side); the bench side is the static shingle set, so the inner join
-    is the supported stream-static shape (broadcast per micro-batch
-    when it fits); one doc sharing many shingles collapses to ONE alert
-    via dropDuplicatesWithinWatermark on doc_id — watermark-bounded
-    state, like every stateful op here. The quarantine topology:
-    alerts feed a side sink; the batch layer owns the authoritative
-    anti-join (contamination_check), because a stream cannot anti-join
-    itself retroactively."""
-    from cours_datalake_dwh_td_kafka_spark.operators.curation import (
-        CONTAM_NGRAM,
-    )
-    from cours_datalake_dwh_td_kafka_spark.operators.dedup import shingle_rows
-
-    n = CONTAM_NGRAM if n is None else n
-    bench_sh = (
-        shingle_rows(bench, n=n, distinct=False)
-        .select(F.xxhash64("shingle").alias("shingle"))
-        .distinct()
-    )
-    # shingle_rows keeps only (doc_id, shingle); the stream side needs
-    # event time carried through, so inline the same explode-first plan
-    # with the extra column
-    toks = F.split(
-        F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), " "
-    )
-    pos = docs.select("doc_id", event_time_col, toks.alias("toks")).select(
-        "doc_id",
-        event_time_col,
-        "toks",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.size("toks") - n, F.lit(0)))
-        ).alias("i"),
-    )
-    doc_sh = pos.select(
-        "doc_id",
-        event_time_col,
-        F.xxhash64(
-            F.concat_ws(" ", F.slice("toks", F.col("i") + 1, n))
-        ).alias("shingle"),
-    )
-    hits = doc_sh.join(bench_sh, "shingle").select(
-        "doc_id", event_time_col
-    )
-    return (
-        hits.withWatermark(event_time_col, watermark)
-        .dropDuplicatesWithinWatermark(["doc_id"])
-        .withColumn("contaminated", F.lit(True))
     )
 
 
@@ -824,638 +546,4 @@ def merge_stream_to_lake(
         df.writeStream.foreachBatch(merge)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
-    )
-
-
-def curate_stream(
-    docs: DataFrame,
-    watermark: str = "10 minutes",
-    q_min: float | None = None,
-) -> DataFrame:
-    """Speed-layer twin of the batch curation pipeline
-    (operators/text_analysis.curation_pipeline): quality-gate ->
-    content dedup, incrementally over a document stream.
-
-    ``docs`` needs (doc_id, event_time, text, source). Stage 1 scores
-    each document with the SAME inline quality expression as the batch
-    gate (pure projections — streaming-safe, evaluated in the scan
-    stage so rejected bytes never reach state). Stage 2 drops
-    re-published content via the content fingerprint inside the
-    watermark horizon (dropDuplicatesWithinWatermark — state bounded by
-    the lateness allowance, NOT the corpus; the batch keeper rule
-    min-doc-id-ever needs the full history and stays a batch job, see
-    dedup_incremental for the cross-run reconcile).
-
-    Emits the curated stream in append mode: (doc_id, event_time,
-    source, n_tokens, quality_score, fingerprint)."""
-    from cours_datalake_dwh_td_kafka_spark.operators.dedup import norm_text
-    from cours_datalake_dwh_td_kafka_spark.operators.text_analysis import (
-        _STOPWORDS,
-        CURATION_QUALITY_MIN,
-    )
-
-    if q_min is None:
-        q_min = CURATION_QUALITY_MIN
-    toks = F.split(norm_text(F.col("text")), " ")
-    feat = docs.select(
-        "doc_id",
-        "event_time",
-        "source",
-        F.md5(norm_text(F.col("text"))).alias("fingerprint"),
-        F.size(toks).alias("n_tokens"),
-        (
-            F.size(F.filter(toks, lambda x: x.isin(*_STOPWORDS))).cast(
-                "double"
-            )
-            / F.size(toks)
-        ).alias("stop_r"),
-        (
-            F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        ).alias("dist_r"),
-        (
-            F.length(
-                F.regexp_replace("text", r"[^.,!?;:]", "")
-            ).cast("double")
-            / F.nullif(F.length("text"), F.lit(0))
-        ).alias("punct_r"),
-    )
-    score = (
-        0.4 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
-        + 0.3 * F.col("dist_r")
-        + 0.2 * F.least(F.col("stop_r") * 5.0, F.lit(1.0))
-        + 0.1 * (1.0 - F.least(F.col("punct_r") * 10.0, F.lit(1.0)))
-    )
-    gated = feat.withColumn("quality_score", F.round(score, 6)).where(
-        F.col("quality_score") >= q_min
-    )
-    if docs.isStreaming:
-        gated = gated.withWatermark("event_time", watermark)
-        deduped = gated.dropDuplicatesWithinWatermark(["fingerprint"])
-    else:
-        deduped = gated.dropDuplicates(["fingerprint"])
-    return deduped.select(
-        "doc_id",
-        "event_time",
-        "source",
-        "n_tokens",
-        "quality_score",
-        "fingerprint",
-    )
-
-
-def trending_topk(
-    enriched: DataFrame,
-    window: str = "5 minutes",
-    watermark: str | None = "10 minutes",
-    key: str = "city",
-):
-    """Windowed trending top-k: per tumbling window, the ``k`` hottest
-    keys by event count. Streaming aggregations cannot carry a rank
-    window (no analytic functions over an unfinished aggregate), so
-    this returns the per-(window, key) COUNT stream; the k lives on
-    :func:`rank_topk_snapshot`, which ranks it in a foreachBatch sink — each micro-batch
-    ranks the aggregate snapshot it was handed, which is exactly the
-    "trending now" board a dashboard wants (complete/update mode).
-
-    At scale the count stream is the standard watermark-bounded state
-    (one row per open window x key); the ranking step runs over the
-    already-aggregated snapshot — windows x keys rows, not events."""
-    df = enriched
-    if watermark is not None:
-        df = df.withWatermark("event_time", watermark)
-    return df.groupBy(F.window("event_time", window), key).agg(
-        F.count(F.lit(1)).alias("n_events")
-    )
-
-
-def rank_topk_snapshot(counts: DataFrame, key: str = "city", k: int = 3) -> DataFrame:
-    """Rank a (window, key, n_events) aggregate snapshot to its per-window
-    top-k — the batch-side half of :func:`trending_topk` (ties break on
-    the key for determinism). Works identically on a foreachBatch
-    micro-batch snapshot and on a batch twin of the same aggregate, which
-    is what the stream/batch parity test pins."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("window").orderBy(F.desc("n_events"), F.asc(key))
-    return (
-        counts.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("window.start").alias("window_start"),
-            key,
-            "n_events",
-            "rank",
-        )
-        .orderBy("window_start", "rank")
-    )
-
-
-def drift_monitor_stream(
-    docs: DataFrame,
-    ref: DataFrame,
-    on_psi,
-    checkpoint: str,
-):
-    """Streaming corpus-drift monitor (round 11): maintain the ARRIVING
-    corpus's feature histograms as a streaming aggregation and evaluate
-    the Population Stability Index against a static REFERENCE snapshot
-    after every micro-batch.
-
-    Scale split, same shape as the trending-top-k sink: the part that
-    scales with data volume — counting (feature, bin) occurrences — runs
-    as a regular streaming ``groupBy().count()`` in update mode, so
-    Spark's state store handles partial aggregation, shuffle, and
-    recovery; the part that needs ALL bins at once — the PSI formula —
-    runs in a ``foreachBatch`` callback over the BOUNDED histogram
-    (len/lang bins are capped by construction in
-    :mod:`~cours_datalake_dwh_td_kafka_spark.operators.drift`, never by
-    corpus size). The callback keeps the merged histogram in process
-    memory (update mode emits only changed bins per trigger) and calls
-    ``on_psi(batch_id, {feature: psi})`` each trigger — the same smoothed
-    decimal-summed formula as the batch row, so a drained stream's final
-    verdict equals ``corpus_drift_psi(ref, streamed_docs)`` bit-for-bit
-    (pytest-pinned).
-
-    ``ref`` is read ONCE at start into a bounded dict (bins, not rows).
-    Returns the StreamingQuery.
-    """
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from cours_datalake_dwh_td_kafka_spark.operators.drift import (
-        _feature_rows,
-    )
-
-    ref_counts: dict[tuple[str, str], int] = {
-        (r.feature, r.bin): r.cnt
-        for r in _feature_rows(ref, "is_ref")
-        .groupBy("feature", "bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    cur_counts: dict[tuple[str, str], int] = {}
-
-    def _psi() -> dict[str, float]:
-        feats = {f for f, _ in ref_counts} | {f for f, _ in cur_counts}
-        out = {}
-        for feat in sorted(feats):
-            # null-safe sort: a null lang bin is a real bin (ADVICE r11 —
-            # sorted() over {None, "en"} raises TypeError in Python 3)
-            bins = sorted(
-                {b for f, b in ref_counts if f == feat}
-                | {b for f, b in cur_counts if f == feat},
-                key=lambda b: (b is None, b),
-            )
-            n_ref = sum(c for (f, _), c in ref_counts.items() if f == feat)
-            n_cur = sum(c for (f, _), c in cur_counts.items() if f == feat)
-            nb = len(bins)
-            total = Decimal(0)
-            for b in bins:
-                p_ref = (ref_counts.get((feat, b), 0) + 0.5) / (
-                    n_ref + 0.5 * nb
-                )
-                p_cur = (cur_counts.get((feat, b), 0) + 0.5) / (
-                    n_cur + 0.5 * nb
-                )
-                raw = (p_cur - p_ref) * math.log(p_cur / p_ref)
-                # half-AWAY rounding on the double's repr — exactly what
-                # Spark's ROUND does for doubles (BigDecimal.valueOf →
-                # Double.toString → HALF_UP). The previous
-                # floor(abs*1e6+0.5) emulation could flip near-tie bins
-                # because the *1e6 multiply itself injects float error
-                # (ADVICE r11); Decimal(repr(raw)) has no such step.
-                total += Decimal(repr(raw)).quantize(
-                    Decimal("0.000001"), rounding=ROUND_HALF_UP
-                )
-            out[feat] = float(total)
-        return out
-
-    def evaluate(batch_df: DataFrame, batch_id: int) -> None:
-        # COMPLETE mode re-emits every bin each trigger (bounded by the
-        # bin space, never by corpus size), so the in-process histogram
-        # is rebuilt wholesale — a daemon RESTART from an existing
-        # checkpoint is correct by construction (update mode would
-        # re-emit only bins the new data touched, silently dropping
-        # every unchanged bin from the PSI after a restart)
-        cur_counts.clear()
-        for r in batch_df.collect():
-            cur_counts[(r.feature, r.bin)] = int(r.cnt)
-        on_psi(batch_id, _psi())
-
-    hist = (
-        _feature_rows(docs, "is_cur")
-        .groupBy("feature", "bin")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    return (
-        hist.writeStream.outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(evaluate)
-        .start()
-    )
-
-
-def drift_monitor_stream_ks(
-    docs: DataFrame,
-    ref: DataFrame,
-    on_ks,
-    checkpoint: str,
-):
-    """Streaming binned-KS drift monitor (round 12): the ordered
-    complement of :func:`drift_monitor_stream`, same scale split — the
-    volume-scaling part (counting length-bucket occurrences) runs as a
-    complete-mode streaming aggregation over the BOUNDED bin space, the
-    all-bins part (cumulative CDFs, max gap, the alpha=0.05 verdict)
-    runs in ``foreachBatch`` over <= 16 rows of in-process state. The
-    drained stream's verdict equals the batch
-    ``operators.drift.corpus_drift_ks`` bit-for-bit (pytest-pinned):
-    per-bin gaps round through Decimal(repr(x)) HALF_UP — exactly
-    Spark's double ROUND — before the max.
-
-    ``on_ks(batch_id, ks_stat, critical_value, alert)`` fires per
-    trigger. ``ref`` is read ONCE into a bounded histogram dict."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from cours_datalake_dwh_td_kafka_spark.operators.drift import (
-        KS_COEFF,
-        ks_len_bin,
-    )
-
-    def _len_bins(d: DataFrame) -> DataFrame:
-        # the batch operator's exact binning (null mass -> KS_NULL_BIN,
-        # a real ordered bin) so stream == batch holds on null inputs
-        return d.select(ks_len_bin().alias("bin")).groupBy("bin").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        )
-
-    ref_counts: dict[int, int] = {
-        r.bin: r.cnt for r in _len_bins(ref).collect()
-    }
-    cur_counts: dict[int, int] = {}
-
-    def _round6(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
-    def _ks() -> tuple[float, float, bool]:
-        bins = sorted(set(ref_counts) | set(cur_counts))
-        n_ref = sum(ref_counts.values())
-        n_cur = sum(cur_counts.values())
-        if not bins or n_ref == 0 or n_cur == 0:
-            return 0.0, float("inf"), False
-        ks = 0.0
-        cum_r = cum_c = 0
-        for b in bins:
-            cum_r += ref_counts.get(b, 0)
-            cum_c += cur_counts.get(b, 0)
-            ks = max(ks, _round6(abs(cum_r / n_ref - cum_c / n_cur)))
-        crit = _round6(
-            KS_COEFF * math.sqrt((n_ref + n_cur) / (n_ref * n_cur))
-        )
-        return ks, crit, ks > crit
-
-    def evaluate(batch_df: DataFrame, batch_id: int) -> None:
-        # complete mode re-emits every bin each trigger (bounded by the
-        # bin space), so a restart rebuilds the histogram wholesale —
-        # the drift_monitor_stream restart rule
-        cur_counts.clear()
-        for r in batch_df.collect():
-            cur_counts[r.bin] = int(r.cnt)
-        ks, crit, alert = _ks()
-        on_ks(batch_id, ks, crit, alert)
-
-    hist = _len_bins(docs)
-    return (
-        hist.writeStream.outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(evaluate)
-        .start()
-    )
-
-
-#: streaming sketch union re-compaction threshold (points, not rows)
-QS_COMPRESS_CAP = 8192
-
-
-def quantile_monitor_stream(
-    rows: DataFrame,
-    col: str,
-    on_quantiles,
-    checkpoint: str,
-    ps=None,
-):
-    """Streaming percentiles over an unbounded column (round 13): the
-    quantile member of the stateful-sketch twins (CMS / HLL / MG).
-    Each micro-batch folds DISTRIBUTED into per-partition compactor
-    summaries (operators.quantile_sketch — the exact code the batch
-    row runs), whose bounded (value, weight) rows merge into the
-    monitor's running sketch by union: associative, commutative, and
-    error-free, so the running (n, err) accounting stays EXACT across
-    any batch arrival order. When the union grows past QS_COMPRESS_CAP
-    points it re-compacts through the same compactor, folding the
-    re-compaction cost into the carried err — state stays bounded no
-    matter how long the stream runs, and the rank-error guarantee
-    (|true rank - target| <= err) remains self-reported and checkable
-    at every trigger.
-
-    RESTART-CORRECT (r13 review): unlike the histogram monitors, a
-    compacting sketch cannot live in a complete-mode aggregation, and
-    Structured Streaming does NOT replay committed batches after a
-    restart — so the running state is persisted BESIDE the checkpoint
-    after every folded batch (atomic tmp+rename, stamped with the
-    batch id) and reloaded on start. A replayed batch (foreachBatch's
-    at-least-once tail) is detected by its id and re-emitted from the
-    stored state without re-merging — the standard foreachBatch
-    idempotence recipe, applied to sketch state.
-
-    ``on_quantiles(batch_id, {p: estimate}, n, err)`` fires per
-    trigger. Returns the started StreamingQuery."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    from cours_datalake_dwh_td_kafka_spark.operators.quantile_sketch import (
-        QS_PS,
-        quantile_sketch_summary,
-        sketch_compress,
-        sketch_merge,
-        sketch_quantile,
-    )
-
-    probe = tuple(QS_PS if ps is None else ps)
-    state_path = _os.path.join(checkpoint, "graft_sketch_state.json")
-    state = {"points": [], "n": 0, "err": 0, "last_bid": -1}
-    if _os.path.exists(state_path):
-        with open(state_path) as f:
-            saved = _json.load(f)
-        state.update(
-            points=[tuple(p) for p in saved["points"]],
-            n=saved["n"],
-            err=saved["err"],
-            last_bid=saved["last_bid"],
-        )
-    cap = QS_COMPRESS_CAP
-
-    def _persist() -> None:
-        _os.makedirs(checkpoint, exist_ok=True)
-        tmp = state_path + f".tmp.{_uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {
-                    "points": state["points"],
-                    "n": state["n"],
-                    "err": state["err"],
-                    "last_bid": state["last_bid"],
-                },
-                f,
-            )
-            f.flush()
-            _os.fsync(f.fileno())
-        _os.replace(tmp, state_path)
-
-    def _emit(batch_id: int) -> None:
-        ests = {
-            p: sketch_quantile(state["points"], state["n"], p)
-            for p in probe
-        }
-        on_quantiles(batch_id, ests, state["n"], state["err"])
-
-    def evaluate(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= state["last_bid"]:
-            _emit(batch_id)  # replayed batch: already folded, re-emit
-            return
-        rows_ = quantile_sketch_summary(batch_df, col).collect()
-        pts = [(r.value, r.weight) for r in rows_ if r.value is not None]
-        n_b = sum(r.n for r in rows_)
-        err_b = sum(r.err for r in rows_)
-        state["points"], state["n"], state["err"] = sketch_merge(
-            state["points"], state["n"], state["err"], pts, n_b, err_b
-        )
-        if len(state["points"]) > cap:
-            state["points"], state["n"], state["err"] = sketch_compress(
-                state["points"], state["n"], state["err"]
-            )
-        state["last_bid"] = batch_id
-        _persist()
-        _emit(batch_id)
-
-    return (
-        rows.select(col)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(evaluate)
-        .start()
-    )
-
-
-def quantile_monitor_stream_by_group(
-    rows: DataFrame,
-    key: str,
-    col: str,
-    on_quantiles,
-    checkpoint: str,
-    ps=None,
-):
-    """Per-COHORT streaming percentiles (round 14, VERDICT r13 #3):
-    the grouped twin of :func:`quantile_monitor_stream` and the shape
-    production monitoring actually runs — latency percentiles per
-    event type, length percentiles per source. Each micro-batch folds
-    distributed into per-(partition, key) compactor summaries
-    (``quantile_sketch_summary_by`` — the exact code the batch row
-    runs), which union into one running sketch PER KEY: every cohort's
-    (n, err) accounting stays exact and independent (a hot cohort's
-    compactions never tax a quiet one's budget — the grouped batch
-    row's independent-budget rule, live). A key's sketch re-compacts
-    past QS_COMPRESS_CAP points, so total state is bounded by
-    keys x cap — the promise a per-key monitor must keep to run
-    forever.
-
-    RESTART-CORRECT by the same recipe as the global monitor: the
-    {key -> sketch} map persists beside the checkpoint after every
-    folded batch (atomic tmp+rename, stamped with the batch id) and
-    reloads on start; a replayed batch re-emits from stored state
-    without re-merging. Deterministic: the compactor is
-    deterministic, so the same batch sequence yields bit-identical
-    per-key estimates (pytest-pinned).
-
-    ``on_quantiles(batch_id, {key: {p: estimate}}, {key: n},
-    {key: err})`` fires per trigger. NULL cohort keys are real cohorts
-    (JSON round-trips them as null). Returns the StreamingQuery."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    from cours_datalake_dwh_td_kafka_spark.operators.quantile_sketch import (
-        QS_GROUP_PS,
-        quantile_sketch_summary_by,
-        sketch_compress,
-        sketch_merge,
-        sketch_quantile,
-    )
-
-    probe = tuple(QS_GROUP_PS if ps is None else ps)
-    state_path = _os.path.join(checkpoint, "graft_sketch_state_by.json")
-    state: dict = {"groups": {}, "last_bid": -1}
-
-    def _gkey(k):
-        # dict key for the in-memory map; JSON-safe via the entry list
-        return k
-
-    if _os.path.exists(state_path):
-        with open(state_path) as f:
-            saved = _json.load(f)
-        state["last_bid"] = saved["last_bid"]
-        for k, pts, n, err in saved["groups"]:
-            state["groups"][_gkey(k)] = {
-                "pts": [tuple(p) for p in pts], "n": n, "err": err
-            }
-
-    def _persist() -> None:
-        _os.makedirs(checkpoint, exist_ok=True)
-        tmp = state_path + f".tmp.{_uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {
-                    "groups": [
-                        [k, st["pts"], st["n"], st["err"]]
-                        for k, st in state["groups"].items()
-                    ],
-                    "last_bid": state["last_bid"],
-                },
-                f,
-            )
-            f.flush()
-            _os.fsync(f.fileno())
-        _os.replace(tmp, state_path)
-
-    def _emit(batch_id: int) -> None:
-        ests = {
-            k: {p: sketch_quantile(st["pts"], st["n"], p) for p in probe}
-            for k, st in state["groups"].items()
-        }
-        ns = {k: st["n"] for k, st in state["groups"].items()}
-        errs = {k: st["err"] for k, st in state["groups"].items()}
-        on_quantiles(batch_id, ests, ns, errs)
-
-    def evaluate(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= state["last_bid"]:
-            _emit(batch_id)  # replayed batch: already folded, re-emit
-            return
-        rows_ = quantile_sketch_summary_by(batch_df, key, col).collect()
-        incoming: dict = {}
-        for r in rows_:
-            b = incoming.setdefault(
-                _gkey(r[key]), {"pts": [], "n": 0, "err": 0}
-            )
-            if r.value is not None:
-                b["pts"].append((r.value, r.weight))
-            else:
-                b["n"] += r.n
-                b["err"] += r.err
-        for k, b in incoming.items():
-            st = state["groups"].setdefault(
-                k, {"pts": [], "n": 0, "err": 0}
-            )
-            st["pts"], st["n"], st["err"] = sketch_merge(
-                st["pts"], st["n"], st["err"], b["pts"], b["n"], b["err"]
-            )
-            if len(st["pts"]) > QS_COMPRESS_CAP:
-                st["pts"], st["n"], st["err"] = sketch_compress(
-                    st["pts"], st["n"], st["err"]
-                )
-        state["last_bid"] = batch_id
-        _persist()
-        _emit(batch_id)
-
-    return (
-        rows.select(key, col)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(evaluate)
-        .start()
-    )
-
-
-def drift_monitor_stream_ks_adaptive(
-    docs: DataFrame,
-    ref: DataFrame,
-    on_ks,
-    checkpoint: str,
-):
-    """Streaming EQUI-DEPTH KS drift monitor (round 13): the adaptive
-    twin of :func:`drift_monitor_stream_ks`. Bin edges are derived
-    ONCE from the reference snapshot (the batch row's exact deciles —
-    a deployment substitutes the mergeable quantile sketch's
-    estimates), then the stream side is identical machinery: a
-    complete-mode histogram over the bounded bin space (|KSA_PS| + 2
-    bins), the CDF/verdict math in foreachBatch. Drained verdict ==
-    ``corpus_drift_ks_adaptive`` bit-for-bit on (ks_stat,
-    critical_value, drift_alert) — shared bin expression, shared
-    Decimal(repr) HALF_UP rounding (pytest-pinned).
-
-    ``on_ks(batch_id, ks_stat, critical_value, alert)`` per trigger."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from cours_datalake_dwh_td_kafka_spark.operators.drift import (
-        KS_COEFF,
-        ksa_bin_expr,
-        ksa_edges,
-    )
-
-    edges = ksa_edges(ref)
-
-    def _bins(d: DataFrame) -> DataFrame:
-        return (
-            d.select(ksa_bin_expr(edges, F.col("n_chars")).alias("bin"))
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-
-    ref_counts: dict[int, int] = {
-        r.bin: r.cnt for r in _bins(ref).collect()
-    }
-    cur_counts: dict[int, int] = {}
-
-    def _round6(x: float) -> float:
-        return float(
-            Decimal(repr(x)).quantize(
-                Decimal("0.000001"), rounding=ROUND_HALF_UP
-            )
-        )
-
-    def _ks() -> tuple[float, float, bool]:
-        bins = sorted(set(ref_counts) | set(cur_counts))
-        n_ref = sum(ref_counts.values())
-        n_cur = sum(cur_counts.values())
-        if not bins or n_ref == 0 or n_cur == 0:
-            return 0.0, float("inf"), False
-        ks = 0.0
-        cum_r = cum_c = 0
-        for b in bins:
-            cum_r += ref_counts.get(b, 0)
-            cum_c += cur_counts.get(b, 0)
-            ks = max(ks, _round6(abs(cum_r / n_ref - cum_c / n_cur)))
-        crit = _round6(
-            KS_COEFF * math.sqrt((n_ref + n_cur) / (n_ref * n_cur))
-        )
-        return ks, crit, ks > crit
-
-    def evaluate(batch_df: DataFrame, batch_id: int) -> None:
-        cur_counts.clear()
-        for r in batch_df.collect():
-            cur_counts[r.bin] = int(r.cnt)
-        ks, crit, alert = _ks()
-        on_ks(batch_id, ks, crit, alert)
-
-    return (
-        _bins(docs)
-        .writeStream.outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(evaluate)
-        .start()
     )

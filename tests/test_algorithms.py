@@ -238,7 +238,6 @@ def test_stratified_sample_rates(spark):
         )
 
 
-
 def test_topic_model_shape_and_determinism(spark):
     from cours_datalake_dwh_td_kafka_spark.operators.text_analysis import (
         LDA_K,
@@ -1324,34 +1323,6 @@ def test_kmeans_k1_centroid_is_global_decimal_mean(spark):
     n = e.count()
     rows = kmeans_lloyd(e, k=1, rounds=2).collect()
     assert all(r.n_vecs == n for r in rows)
-
-
-def test_with_cell_assign_matches_decimal_estep(spark):
-    """The int64-micro-unit mapInPandas assignment kernel must agree
-    with the decimal E-step corpus-wide: both quantize to the same 6-dp
-    grid, so every squared distance is the SAME exact integer (scaled
-    1e-12) and the argmin tie-break is identical."""
-    from cours_datalake_dwh_td_kafka_spark.operators.clustering import (
-        _estep,
-        _flat,
-        kmeans_lloyd,
-        with_cell_assign,
-    )
-
-    e = load_table(spark, SF_ORACLE, "embeddings")
-    cent_long = kmeans_lloyd(e, rounds=2).select(
-        "cell", "pos", F.col("c").cast("decimal(28,6)").alias("cq")
-    )
-    want = {
-        r.vec_id: r.cell for r in _estep(_flat(e), cent_long).collect()
-    }
-    got = {
-        r.vec_id: r.cell
-        for r in with_cell_assign(
-            e, cent_long.select("cell", "pos", F.col("cq").alias("c"))
-        ).collect()
-    }
-    assert got == want
 
 
 def test_hard_negative_ivf_masks_inside_probe(spark, tmp_path):

@@ -336,152 +336,3 @@ def test_bucketed_join_skips_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS t_orders_b")
         spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
-
-
-def test_compact_parquet_preserves_rows(spark, tmp_path):
-    """Compaction collapses a many-small-files directory into few files
-    with identical content."""
-    lake = str(tmp_path / "many")
-    src = io.load_table(spark, SF, "orders")
-    src.repartition(24).write.parquet(lake)
-    assert len(spark.read.parquet(lake).inputFiles()) == 24
-    before = src.count()
-    n_after = io.compact_parquet(spark, lake, target_mb=128)
-    assert n_after <= 2
-    after_df = spark.read.parquet(lake)
-    assert after_df.count() == before
-    # content identical, not just counts
-    assert after_df.exceptAll(src).count() == 0
-
-
-def test_zorder_tightens_rowgroup_stats(spark, tmp_path):
-    """Z-order clustering vs linear sort: the SECOND dimension's summed
-    row-group (max - min) spread must shrink, while the first stays
-    usable — the property that makes multi-column data skipping work."""
-    import pyarrow.parquet as pq
-    import glob as _glob
-
-    li = io.load_table(spark, SF, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-
-    def spread(path, col):
-        tot = 0.0
-        for f in _glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[col]).statistics
-                tot += st.max - st.min
-        return tot
-
-    linear = str(tmp_path / "linear")
-    (
-        li.repartitionByRange(4, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.parquet(linear)
-    )
-    zordered = str(tmp_path / "z")
-    # l_partkey x l_quantity: genuinely independent dimensions (suppkey
-    # correlates with partkey in TPC-H and shows no win)
-    io.write_zordered(li, zordered, ["l_partkey", "l_quantity"], n_files=4)
-
-    assert spark.read.parquet(zordered).count() == li.count()
-    # linear partkey sort leaves l_quantity full-range in every row
-    # group; z-order must tighten it markedly while partkey stays
-    # clustered enough to keep skipping useful
-    assert spread(zordered, "l_quantity") < 0.7 * spread(linear, "l_quantity")
-    assert spread(zordered, "l_partkey") < 4 * spread(linear, "l_partkey")
-
-
-def test_orc_roundtrip_pushdown_and_partitioned_layout(spark, tmp_path):
-    """ORC sink/scan: values round-trip, filters reach the ORC reader as
-    PushedFilters, and partitionBy produces the same prunable hive
-    layout as parquet."""
-    import os
-
-    from cours_datalake_dwh_td_kafka_spark.io import read_orc, write_orc
-
-    df = spark.createDataFrame(
-        [(i, f"n{i}", i % 3) for i in range(30)], "id long, name string, g int"
-    )
-    flat = str(tmp_path / "flat")
-    write_orc(df, flat)
-    back = read_orc(spark, flat)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-    plan = (
-        back.where(F.col("id") > 20)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters" in plan and "GreaterThan(id" in plan
-
-    part = str(tmp_path / "part")
-    write_orc(df, part, partition_by=["g"])
-    assert sorted(
-        d for d in os.listdir(part) if d.startswith("g=")
-    ) == ["g=0", "g=1", "g=2"]
-    pruned = read_orc(spark, part).where(F.col("g") == 1)
-    pplan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in pplan
-    assert pruned.count() == 10
-
-
-def test_read_text_lines_and_whole(spark, tmp_path):
-    from cours_datalake_dwh_td_kafka_spark.io import read_text
-
-    p = tmp_path / "t"
-    p.mkdir()
-    (p / "a.txt").write_text("one\ntwo\nthree")
-    (p / "b.txt").write_text("four")
-    lines = {r.value for r in read_text(spark, str(p)).collect()}
-    assert lines == {"one", "two", "three", "four"}
-    wholes = {r.value for r in read_text(spark, str(p), whole=True).collect()}
-    assert wholes == {"one\ntwo\nthree", "four"}
-    # custom record separator: form-feed-delimited dump
-    (p / "c.txt").unlink(missing_ok=True)
-    sep_dir = tmp_path / "sep"
-    sep_dir.mkdir()
-    (sep_dir / "d.txt").write_text("alpha\x0cbeta\x0cgamma")
-    recs = {
-        r.value
-        for r in read_text(spark, str(sep_dir), line_sep="\x0c").collect()
-    }
-    assert recs == {"alpha", "beta", "gamma"}
-
-
-def test_read_binary_files_glob_and_decode(spark, tmp_path):
-    """binaryFile ingestion end-to-end into the codec layer: write real
-    WAV payloads as files, scan them with a glob that excludes the
-    decoy, and decode the content column with the engine's own codec."""
-    import numpy as np
-
-    from cours_datalake_dwh_td_kafka_spark.io import read_binary_files
-    from cours_datalake_dwh_td_kafka_spark.operators.multimodal import (
-        decode_wav_pcm16,
-        encode_wav_pcm16,
-    )
-
-    p = tmp_path / "media"
-    p.mkdir()
-    want = {}
-    for i in range(3):
-        samples = (np.arange(10, dtype=np.int64) * (i + 1) * 100).astype(
-            "<i2"
-        )
-        payload = encode_wav_pcm16(samples, 8000)
-        (p / f"clip{i}.wav").write_bytes(payload)
-        want[f"clip{i}.wav"] = samples.tolist()
-    (p / "decoy.txt").write_text("not audio")
-
-    df = read_binary_files(spark, str(p), glob="*.wav")
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 3  # the decoy never enters the scan
-    for r in rows:
-        name = r.path.rsplit("/", 1)[-1]
-        assert r.length == len(bytes(r.content))
-        rate, samples = decode_wav_pcm16(bytes(r.content))
-        assert rate == 8000
-        assert samples.tolist() == want[name]

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -963,6 +963,8 @@ def test_bmff_and_header_walk_demux_agree(seed):
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     truncate=st.booleans(),
 )
+# a bit flip that decodes a DCT coefficient past int16
+@example(codec="jfif", seed=8086, truncate=False)
 @settings(max_examples=120, deadline=None)
 def test_all_decoders_reject_corruption_gracefully(codec, seed, truncate):
     """EVERY decoder of untrusted bytes must, on a truncated or
@@ -1208,41 +1210,3 @@ def test_sketch_rank_error_bound_property(data, n_parts, p):
     hi = max(lo, sum(1 for x in s if x <= v))
     target = max(1, math.ceil(p * n))
     assert lo - err <= target <= hi + err, (p, v, lo, hi, err, target)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    data=st.lists(
-        st.floats(
-            min_value=-1e6, max_value=1e6,
-            allow_nan=False, allow_infinity=False,
-        ),
-        min_size=1,
-        max_size=2000,
-    ),
-)
-def test_sketch_compress_keeps_bound_property(data):
-    """Re-compacting a union keeps weight conservation and the
-    (enlarged) error budget honest for every decile."""
-    from cours_datalake_dwh_td_kafka_spark.operators.quantile_sketch import (
-        sketch_compress,
-        sketch_new,
-        sketch_points,
-        sketch_quantile,
-        sketch_update,
-    )
-
-    stt = sketch_new()
-    sketch_update(stt, data)
-    pts, n, err = sketch_compress(
-        sketch_points(stt), stt["n"], stt["err"]
-    )
-    assert sum(w for _, w in pts) == n == len(data)
-    assert err >= stt["err"]
-    s = sorted(data)
-    for p in (0.1, 0.5, 0.9):
-        v = sketch_quantile(pts, n, p)
-        lo = 1 + sum(1 for x in s if x < v)
-        hi = max(lo, sum(1 for x in s if x <= v))
-        target = max(1, math.ceil(p * n))
-        assert lo - err <= target <= hi + err

@@ -1,14 +1,10 @@
 """Mergeable quantile sketch (VERDICT r12 #4): deterministic compactor
-with exact self-reported rank-error accounting, union-only merges, and
-the bounded-state streaming twin."""
+with exact self-reported rank-error accounting and union-only merges."""
 
 from __future__ import annotations
 
-import json
 import math
-import os
 import random
-import time
 
 import pytest
 
@@ -18,7 +14,6 @@ from cours_datalake_dwh_td_kafka_spark.operators.quantile_sketch import (
     quantile_sketch_bound,
     quantile_sketch_by_group,
     quantile_sketch_summary,
-    sketch_compress,
     sketch_merge,
     sketch_new,
     sketch_points,
@@ -94,21 +89,6 @@ def test_merge_union_is_associative_commutative_and_error_free():
     _assert_bound(*ab_c, alldata)
 
 
-def test_compress_reduces_points_and_keeps_bound_honest():
-    rng = random.Random(99)
-    data = [rng.expovariate(0.01) for _ in range(30000)]
-    parts = [data[i::8] for i in range(8)]
-    pts, n, err = [], 0, 0
-    for part in parts:
-        st = sketch_new()
-        sketch_update(st, part)
-        pts, n, err = sketch_merge(pts, n, err, sketch_points(st), st["n"],
-                                   st["err"])
-    cpts, cn, cerr = sketch_compress(pts, n, err)
-    assert cn == n and len(cpts) < len(pts) and cerr >= err
-    _assert_bound(cpts, cn, cerr, data)
-
-
 def test_spark_summary_and_bound_row(spark):
     rng = random.Random(5)
     vals = [(float(rng.lognormvariate(3, 1)),) for _ in range(40000)]
@@ -128,64 +108,6 @@ def test_spark_summary_and_bound_row(spark):
     assert sum(r.n for r in s2) == 3
 
 
-@pytest.mark.slow
-def test_quantile_monitor_stream_bound_and_exact_accounting(
-    spark, tmp_path, monkeypatch
-):
-    """Drained stream: exact n, self-reported err, and every estimate
-    within the rank-error bound of the full streamed multiset — with a
-    tiny compress cap so the re-compaction path is exercised live."""
-    import cours_datalake_dwh_td_kafka_spark.streaming.pipelines as pl
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    monkeypatch.setattr(pl, "QS_COMPRESS_CAP", 64)
-
-    rng = random.Random(21)
-    data = [rng.gauss(0, 1) * 10 + (i % 7) for i, _ in
-            enumerate(range(6000))]
-    src = str(tmp_path / "qs_in")
-    os.makedirs(src)
-    third = len(data) // 3
-    for i in range(3):
-        with open(os.path.join(src, f"p{i}.json"), "w") as f:
-            for v in data[i * third : (i + 1) * third]:
-                f.write(json.dumps({"value": v}) + "\n")
-
-    schema = StructType([StructField("value", DoubleType())])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    ticks: list[tuple[int, dict, int, int]] = []
-    q = pl.quantile_monitor_stream(
-        stream,
-        "value",
-        lambda bid, ests, n, err: ticks.append((bid, ests, n, err)),
-        str(tmp_path / "qs_ckpt"),
-    )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if len(ticks) >= 3:
-            prog = q.lastProgress
-            if prog and prog["numInputRows"] == 0:
-                break
-        time.sleep(1)
-    q.stop()
-    q.awaitTermination(30)
-
-    assert len(ticks) >= 3, [t[0] for t in ticks]
-    _, ests, n, err = ticks[-1]
-    assert n == len(data)
-    assert err > 0  # the 64-point cap forced live re-compactions
-    for p, v in ests.items():
-        target = max(1, math.ceil(p * n))
-        lo, hi = _true_rank_window(data, v)
-        assert lo - err <= target <= hi + err, (p, v, lo, hi, err)
-    # intermediate ticks carry exact running counts too
-    assert [t[2] for t in ticks][: 3] == [third, 2 * third, 3 * third]
-
-
 def test_grouped_sketch_independent_budgets(spark):
     """Per-key sketches: each group's estimate honors its OWN error
     budget; a tiny group (never compacted, err 0) is EXACT while a big
@@ -203,76 +125,6 @@ def test_grouped_sketch_independent_budgets(spark):
     tiny = {r.p: r.exact_q for r in out if r.k == "tiny"}
     # 4 values, interpolated percentiles — exact, nulls excluded
     assert tiny[0.5] == 2.5
-
-
-@pytest.mark.slow
-def test_quantile_monitor_stream_restart_keeps_state(spark, tmp_path):
-    """Restart correctness (r13 review): the running sketch persists
-    beside the checkpoint, so a stopped-and-restarted monitor carries
-    every pre-restart row — n stays exact across the restart and the
-    final estimates bound over the FULL stream."""
-    rng = random.Random(11)
-    data = [rng.uniform(0, 100) for _ in range(3000)]
-    src = str(tmp_path / "qr_in")
-    os.makedirs(src)
-    half = len(data) // 2
-    with open(os.path.join(src, "p0.json"), "w") as f:
-        for v in data[:half]:
-            f.write(json.dumps({"value": v}) + "\n")
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    import cours_datalake_dwh_td_kafka_spark.streaming.pipelines as pl
-
-    schema = StructType([StructField("value", DoubleType())])
-    ckpt = str(tmp_path / "qr_ckpt")
-
-    def start(sink):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-        )
-        return pl.quantile_monitor_stream(
-            stream,
-            "value",
-            lambda bid, ests, n, err: sink.append((bid, ests, n, err)),
-            ckpt,
-        )
-
-    first: list = []
-    q = start(first)
-    deadline = time.time() + 60
-    while time.time() < deadline and not first:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(30)
-    assert first and first[-1][2] == half
-
-    # second half lands while the monitor is DOWN
-    with open(os.path.join(src, "p1.json"), "w") as f:
-        for v in data[half:]:
-            f.write(json.dumps({"value": v}) + "\n")
-
-    second: list = []
-    q = start(second)
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        if second and second[-1][2] == len(data):
-            prog = q.lastProgress
-            if prog and prog["numInputRows"] == 0:
-                break
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(30)
-
-    assert second, "restarted monitor emitted nothing"
-    _, ests, n, err = second[-1]
-    assert n == len(data)  # pre-restart mass survived
-    for p, v in ests.items():
-        target = max(1, math.ceil(p * n))
-        lo, hi = _true_rank_window(data, v)
-        assert lo - err <= target <= hi + err, (p, v, lo, hi, err)
 
 
 def test_grouped_sketch_all_null_cohort_and_null_ordering(spark):
@@ -326,100 +178,3 @@ def test_grouped_sketch_non_string_key(spark):
     assert all(r.within_rank_err and r.weight_conserved_ok for r in got)
     small = {r.p: r.exact_q for r in got if r.k == 2}
     assert small[0.5] == 20.0
-
-
-@pytest.mark.slow
-def test_grouped_quantile_monitor_stream_restart_and_determinism(
-    spark, tmp_path, monkeypatch
-):
-    """Round 14 (VERDICT r13 #3): the per-cohort streaming monitor —
-    per-key n exact, per-key err budgets independent (tiny cohort
-    stays exact while the hot one compacts live under a tiny cap),
-    estimates within each cohort's OWN rank window over the FULL
-    interleaved stream, state surviving a restart, and the same batch
-    sequence replayed into a fresh checkpoint yielding bit-identical
-    per-key estimates (deterministic compactor)."""
-    import cours_datalake_dwh_td_kafka_spark.streaming.pipelines as pl
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    monkeypatch.setattr(pl, "QS_COMPRESS_CAP", 64)
-    rng = random.Random(14)
-    hot = [rng.expovariate(0.01) for _ in range(4000)]
-    tiny = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
-    # interleave: every batch carries both cohorts
-    batches = []
-    third = len(hot) // 3
-    for i in range(3):
-        b = [("hot", v) for v in hot[i * third : (i + 1) * third]]
-        b += [("tiny", v) for v in tiny[i * 2 : i * 2 + 2]]
-        batches.append(b)
-    batches[0].append(("tiny", None))  # null VALUE dropped per cohort
-
-    src = str(tmp_path / "g_in")
-    os.makedirs(src)
-
-    def write_batch(i):
-        with open(os.path.join(src, f"p{i}.json"), "w") as f:
-            for k, v in batches[i]:
-                f.write(json.dumps({"k": k, "value": v}) + "\n")
-
-    schema = StructType(
-        [StructField("k", StringType()), StructField("value", DoubleType())]
-    )
-
-    def run(ckpt, sink, expect_n):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-        )
-        q = pl.quantile_monitor_stream_by_group(
-            stream,
-            "k",
-            "value",
-            lambda bid, ests, ns, errs: sink.append((bid, ests, ns, errs)),
-            ckpt,
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if sink and sum(sink[-1][2].values()) == expect_n:
-                prog = q.lastProgress
-                if prog and prog["numInputRows"] == 0:
-                    break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination(30)
-
-    ckpt = str(tmp_path / "g_ckpt")
-    write_batch(0)
-    write_batch(1)
-    first: list = []
-    run(ckpt, first, 2 * third + 4)
-    assert first and first[-1][2] == {"hot": 2 * third, "tiny": 4}
-
-    # batch 2 lands while the monitor is DOWN; restart carries state
-    write_batch(2)
-    second: list = []
-    run(ckpt, second, 3 * third + 6)
-    _, ests, ns, errs = second[-1]
-    assert ns == {"hot": 3 * third, "tiny": 6}
-    # independent budgets: hot compacted live (cap 64), tiny exact
-    assert errs["hot"] > 0 and errs["tiny"] == 0
-    streamed = {"hot": hot[: 3 * third], "tiny": tiny[:6]}
-    for k, data in streamed.items():
-        for p, v in ests[k].items():
-            target = max(1, math.ceil(p * ns[k]))
-            lo, hi = _true_rank_window(data, v)
-            assert lo - errs[k] <= target <= hi + errs[k], (k, p, v)
-
-    # determinism: fresh checkpoint, same batch sequence -> the SAME
-    # per-key estimates bit-for-bit
-    third_run: list = []
-    run(str(tmp_path / "g_ckpt2"), third_run, 3 * third + 6)
-    assert third_run[-1][1] == ests
-    assert third_run[-1][3] == errs
