@@ -19,8 +19,7 @@ Invariants:
   silently clobbering (optimistic concurrency, single-writer-wins);
 - deletes/updates are copy-on-write: affected rows are rewritten into
   new files and the manifest swaps the file set — at scale, pair with
-  partition/bucket pruning so only touched files rewrite (the
-  merge-upsert sink in streaming/pipelines.py is the incremental twin).
+  partition/bucket pruning so only touched files rewrite.
   Round 10 adds the MERGE-ON-READ alternative (:func:`lake_delete_keys`,
   the Iceberg-v2 equality-delete shape): a delete writes only its key
   file, readers anti-join at scan time, and the rewrite rungs (cluster,
@@ -195,6 +194,57 @@ def _merged_append_schema(prev_schema: dict | None, df: DataFrame) -> dict:
     return {"type": "struct", "fields": list(declared.values())}
 
 
+def _append_onto(df: DataFrame, path: str, tip: int, write) -> dict:
+    """The ONE append rule of :func:`lake_commit` and of every
+    :func:`lake_commit_occ` attempt: the ``files``, ``schema``,
+    ``stats``, ``bloom`` and ``deletes`` of a manifest that appends
+    ``df``'s files onto version ``tip`` (0: no table yet, or an
+    overwrite — the file list starts fresh).
+
+    ``write()`` returns ``(new_files, new_stats)`` and runs after the
+    schema check: :func:`lake_commit` writes inside it, so a retype is
+    rejected before any data file lands; :func:`lake_commit_occ`
+    writes once, before its first attempt, and hands the files back."""
+    if tip == 0:
+        new_files, new_stats = write()
+        return dict(
+            files=new_files, schema=_schema_dict(df), stats=new_stats or None
+        )
+    tip_m = _read_manifest(path, tip)
+    schema = tip_m.get("schema")
+    if schema is None and tip_m["files"]:
+        # pre-evolution manifest: recover the declared schema from
+        # the existing files — otherwise an evolving append would
+        # declare only the INCOMING frame's columns, silently
+        # dropping legacy columns on read and skipping the retype
+        # rejection. mergeSchema because pre-evolution appends never
+        # validated schemas, so the legacy file set may be
+        # heterogeneous; the recovered schema must be the union of
+        # every file's columns, not whichever file's footer wins.
+        # One-time migration cost (next commit records the schema).
+        schema = _schema_dict(
+            df.sparkSession.read.option("mergeSchema", "true").parquet(
+                *(os.path.join(path, f) for f in tip_m["files"])
+            )
+        )
+    schema = _merged_append_schema(schema, df)
+    new_files, new_stats = write()
+    # kept files keep their clustering stats and Bloom bitmaps (new
+    # files are conservatively scanned by pruned reads unless
+    # stats_cols collects their ranges); without this carry-forward
+    # one append would silently de-index the whole layout
+    stats = tip_m.get("stats")
+    if new_stats:
+        stats = {**(stats or {}), **new_stats}
+    return dict(
+        files=tip_m["files"] + new_files,
+        schema=schema,
+        stats=stats,
+        bloom=tip_m.get("bloom"),
+        deletes=tip_m.get("deletes"),
+    )
+
+
 def lake_commit(
     df: DataFrame,
     path: str,
@@ -238,60 +288,21 @@ def lake_commit(
             "exactly-once replay guard is scoped per logical stream "
             "(the Delta txn-appId rule)"
         )
-    prev = current_version(path)
-    if mode == "append" and prev > 0:
-        prev_m = _read_manifest(path, prev)
-        prev_schema = prev_m.get("schema")
-        if prev_schema is None and prev_m["files"]:
-            # pre-evolution manifest: recover the declared schema from
-            # the existing files — otherwise an evolving append would
-            # declare only the INCOMING frame's columns, silently
-            # dropping legacy columns on read and skipping the retype
-            # rejection. mergeSchema because pre-evolution appends never
-            # validated schemas, so the legacy file set may be
-            # heterogeneous; the recovered schema must be the union of
-            # every file's columns, not whichever file's footer wins.
-            # One-time migration cost (next commit records the schema).
-            prev_schema = _schema_dict(
-                df.sparkSession.read.option("mergeSchema", "true").parquet(
-                    *(os.path.join(path, f) for f in prev_m["files"])
-                )
-            )
-        schema = _merged_append_schema(prev_schema, df)
-        new_files = _write_data_files(df, path)
-        files = prev_m["files"] + new_files
-        # kept files keep their clustering stats and Bloom bitmaps
-        # (new files are conservatively scanned by pruned reads unless
-        # stats_cols collects their ranges); without this carry-forward
-        # one append would silently de-index the whole layout
-        stats = prev_m.get("stats")
-        if stats_cols:
-            stats = {
-                **(stats or {}),
-                **_file_stats(df.sparkSession, path, new_files, stats_cols),
-            }
-        bloom = prev_m.get("bloom")
-        deletes = prev_m.get("deletes")
-    else:
-        schema = _schema_dict(df)
+
+    def write() -> tuple[list[str], dict]:
         files = _write_data_files(df, path)
-        stats = (
-            _file_stats(df.sparkSession, path, files, stats_cols)
-            if stats_cols
-            else None
+        return files, _file_stats(
+            df.sparkSession, path, files, stats_cols, df.schema
         )
-        bloom = deletes = None
+
+    prev = current_version(path)
     return _commit_manifest(
         path,
         prev + 1,
-        files,
-        mode,
-        schema,
-        stats,
-        bloom,
-        stream_batch_id,
-        deletes,
-        stream_id,
+        op=mode,
+        stream_batch_id=stream_batch_id,
+        stream_id=stream_id,
+        **_append_onto(df, path, prev if mode == "append" else 0, write),
     )
 
 
@@ -398,7 +409,7 @@ def _occ_publish_loop(path: str, op_desc: str, attempt, max_attempts: int = 8):
         except FileExistsError as e:
             last = e
     raise LakeConflictError(
-        f"{op_desc} at {path}: lost the single-winner publish race "
+        f"{op_desc} at {path}: lost the publish race "
         f"{max_attempts} times — table too hot, re-run the operation"
     ) from last
 
@@ -406,8 +417,9 @@ def _occ_publish_loop(path: str, op_desc: str, attempt, max_attempts: int = 8):
 def _ops_since(path: str, frm: int, to: int) -> list[str] | None:
     """Manifest ops of versions (frm, to], oldest first — the rival
     history a rebase must classify. ``None`` when any intervening
-    manifest was vacuumed (unclassifiable: callers must re-derive from
-    the tip, the same conservative rule as :func:`lake_commit_occ`)."""
+    manifest was vacuumed: the erased commit may have been
+    row-changing, so callers must re-derive from the tip (or abort,
+    as :func:`lake_commit_occ` does) — never skip it."""
     existing = set(_existing_versions(path))
     ops = []
     for v in range(frm + 1, to + 1):
@@ -541,20 +553,16 @@ def lake_commit_occ(
         rk_vals = [x for x in raw if x is not None]
 
     def classify(tip: int) -> None:
-        existing = set(_existing_versions(path))
-        for v in range(check_from + 1, tip + 1):
-            if v not in existing:
-                # a vacuumed intervening manifest is UNPROVABLE: the
-                # erased commit may have been row-changing, and
-                # skipping it would let an RMW writer rebase over a
-                # vanished state — same conservative rule as
-                # _occ_delete_disjoint's vacuumed-predecessor case
-                raise LakeConflictError(
-                    f"optimistic append to {path}: intervening commit "
-                    f"v{v} was vacuumed — its op cannot be classified, "
-                    "re-derive from the current tip"
-                )
-            op = _read_manifest(path, v).get("op")
+        ops = _ops_since(path, check_from, tip)
+        if ops is None:
+            # same conservative rule as _occ_delete_disjoint's
+            # vacuumed-predecessor case: an unclassifiable rival aborts
+            raise LakeConflictError(
+                f"optimistic append to {path}: a commit after "
+                f"v{check_from} was vacuumed — its op cannot be "
+                "classified, re-derive from the current tip"
+            )
+        for v, op in enumerate(ops, check_from + 1):
             if op in _OCC_APPEND_COMMUTES:
                 continue
             if read_version is None and op in _OCC_ROW_CHANGING and op not in (
@@ -582,10 +590,12 @@ def lake_commit_occ(
                 )
             )
 
-    if (
-        stream_batch_id is not None
-        and stream_batch_id <= last_stream_batch_id(path, stream_id)
-    ):
+    def replayed() -> bool:
+        return stream_batch_id is not None and (
+            stream_batch_id <= last_stream_batch_id(path, stream_id)
+        )
+
+    if replayed():
         return current_version(path)  # replayed batch: already in
     # classify BEFORE paying the data write: a transaction already
     # doomed by commits that landed before entry aborts at
@@ -602,62 +612,28 @@ def lake_commit_occ(
     # stats-on-append (see lake_commit): the new files' ranges are a
     # property of the files, computed ONCE; each rebase attempt merges
     # them with whatever stats the live tip carries
-    new_stats = (
-        _file_stats(df.sparkSession, path, new_files, stats_cols)
-        if stats_cols
-        else {}
+    written = new_files, _file_stats(
+        df.sparkSession, path, new_files, stats_cols, df.schema
     )
-    for _ in range(max_attempts):
+
+    def attempt() -> int:
         tip = current_version(path)
-        if (
-            stream_batch_id is not None
-            and stream_batch_id <= last_stream_batch_id(path, stream_id)
-        ):
+        if replayed():
             # a replay raced us between entry and publish (rebuilt
             # topology double-run): the mark says the batch is in —
             # drop this attempt's files to the vacuum lifecycle
             return tip
         classify(tip)
-        if tip > 0:
-            tip_m = _read_manifest(path, tip)
-            tip_schema = tip_m.get("schema")
-            if tip_schema is None and tip_m["files"]:
-                # pre-evolution tip: recover the declared schema from
-                # the existing files exactly as lake_commit does —
-                # otherwise the rebase would declare only the incoming
-                # frame's columns (silent legacy-column loss on read)
-                # and skip the retype rejection
-                tip_schema = _schema_dict(
-                    df.sparkSession.read.option("mergeSchema", "true")
-                    .parquet(*(os.path.join(path, f) for f in tip_m["files"]))
-                )
-            schema = _merged_append_schema(tip_schema, df)
-            files = tip_m["files"] + new_files
-            stats, bloom, deletes = (
-                tip_m.get("stats"),
-                tip_m.get("bloom"),
-                tip_m.get("deletes"),
-            )
-            if new_stats:
-                stats = {**(stats or {}), **new_stats}
-        else:
-            schema = _schema_dict(df)
-            files = new_files
-            stats = new_stats or None
-            bloom = deletes = None
-        try:
-            return _commit_manifest(
-                path, tip + 1, files, "append", schema, stats, bloom,
-                stream_batch_id=stream_batch_id,
-                deletes=deletes,
-                stream_id=stream_id,
-            )
-        except FileExistsError:
-            continue  # rival landed tip+1 first: re-read, re-classify
-    raise LakeConflictError(
-        f"optimistic append to {path} lost the publish race "
-        f"{max_attempts} times — table too hot, re-run the transaction"
-    )
+        return _commit_manifest(
+            path,
+            tip + 1,
+            op="append",
+            stream_batch_id=stream_batch_id,
+            stream_id=stream_id,
+            **_append_onto(df, path, tip, lambda: written),
+        )
+
+    return _occ_publish_loop(path, "optimistic append", attempt, max_attempts)
 
 
 def last_stream_batch_id(path: str, stream_id: str | None = None) -> int:
@@ -1017,9 +993,7 @@ def lake_merge_upsert(
 
     Scale note: like lake_delete_where this rewrites the whole kept
     set; at 100 TB pair it with partition/bucket pruning so only
-    touched files rewrite (the incremental streaming twin is the
-    merge-upsert sink in streaming/pipelines.py, which scopes each
-    micro-batch's rewrite to the partitions it touches).
+    touched files rewrite.
 
     Race safety (round 14): MERGE is read-modify-write over "the
     current rows", so a lost publish race must NOT rebase — a rival's
@@ -1468,6 +1442,29 @@ def lake_compact(
     # the cached rewrite resurrect rows)
     cache: dict = {}
 
+    def publish_kept(v: int, m: dict) -> int:
+        # the cached small-file rewrite replaces its inputs; kept
+        # (un-compacted) files keep their clustering stats and Bloom
+        # bitmaps, the rewritten small files lose theirs (they merged)
+        keep = [f for f in m["files"] if f not in cache["small_set"]]
+        kept = set(keep)
+        kept_stats = {
+            f: s for f, s in (m.get("stats") or {}).items() if f in kept
+        }
+        kept_bloom = {
+            c: {**b, "files": {f: e for f, e in b["files"].items() if f in kept}}
+            for c, b in (m.get("bloom") or {}).items()
+        }
+        return _commit_manifest(
+            path,
+            v + 1,
+            keep + cache["new_files"],
+            "compact",
+            m.get("schema"),
+            kept_stats or None,
+            kept_bloom or None,
+        )
+
     def attempt() -> int:
         v = current_version(path)
         m = _read_manifest(path, v)
@@ -1482,29 +1479,7 @@ def lake_compact(
                 return _commit_manifest(
                     path, v + 1, files, "compact", m.get("schema")
                 )
-            keep = [f for f in m["files"] if f not in cache["small_set"]]
-            kept = set(keep)
-            kept_stats = {
-                f: s for f, s in (m.get("stats") or {}).items() if f in kept
-            }
-            kept_bloom = {
-                c: {
-                    **b,
-                    "files": {
-                        f: e for f, e in b["files"].items() if f in kept
-                    },
-                }
-                for c, b in (m.get("bloom") or {}).items()
-            }
-            return _commit_manifest(
-                path,
-                v + 1,
-                keep + cache["new_files"],
-                "compact",
-                m.get("schema"),
-                kept_stats or None,
-                kept_bloom or None,
-            )
+            return publish_kept(v, m)
         if m.get("deletes"):
             # pending merge-on-read deletes: the raw small-file rewrite
             # below would resurrect deleted rows, so compact by folding
@@ -1530,8 +1505,6 @@ def lake_compact(
         ]
         if len(small) <= target_files:
             return v
-        small_set = set(small)
-        keep = [f for f in files if f not in small_set]
         reader = spark.read
         if "schema" in m:
             # post-evolution tables mix file schemas: reading with the
@@ -1544,33 +1517,14 @@ def lake_compact(
         rewritten = reader.parquet(
             *(os.path.join(path, f) for f in small)
         ).coalesce(target_files)
-        new_files = _write_data_files(rewritten, path)
         cache.update(
             read_v=v,
             read_files=set(files),
-            small_set=small_set,
-            new_files=new_files,
+            small_set=set(small),
+            new_files=_write_data_files(rewritten, path),
             deletes_at_read=[],
         )
-        # kept (un-compacted) files keep their clustering stats; the
-        # rewritten small files lose theirs (they merged)
-        kept = set(keep)
-        kept_stats = {
-            f: s for f, s in (m.get("stats") or {}).items() if f in kept
-        }
-        kept_bloom = {
-            c: {**b, "files": {f: e for f, e in b["files"].items() if f in kept}}
-            for c, b in (m.get("bloom") or {}).items()
-        }
-        return _commit_manifest(
-            path,
-            v + 1,
-            keep + new_files,
-            "compact",
-            m.get("schema"),
-            kept_stats or None,
-            kept_bloom or None,
-        )
+        return publish_kept(v, m)
 
     return _occ_publish_loop(path, "compaction", attempt)
 
@@ -1665,7 +1619,9 @@ def lake_cluster_by(
                 .drop("_z")
             )
         new_files = _write_data_files(clustered, path)
-        stats = _file_stats(spark, path, new_files, stat_cols)
+        stats = _file_stats(
+            spark, path, new_files, stat_cols, clustered.schema
+        )
         cache.update(
             read_v=v,
             read_files=set(m["files"]),
@@ -1681,22 +1637,27 @@ def lake_cluster_by(
 
 
 def _file_stats(
-    spark: SparkSession, path: str, files: list[str], stat_cols
+    spark: SparkSession, path: str, files: list[str], stat_cols, schema
 ) -> dict:
     """Per-file {file: {"cols": {col: [min, max]}}} over exactly
-    ``files`` — ONE aggregate job keyed by input_file_name(). The
-    manifest-stats builder shared by :func:`lake_cluster_by` (layout
-    rewrite) and stats-on-append (:func:`lake_commit` with
-    ``stats_cols``, round 14). Values go through :func:`_stat_scalar`
-    (outward-widened decimals, ISO time strings) so pruning stays
-    sound."""
+    ``files`` — ONE aggregate keyed by input_file_name(), and no Spark
+    job at all when ``stat_cols`` is empty. The manifest-stats builder shared by
+    :func:`lake_cluster_by` (layout rewrite) and stats-on-append
+    (:func:`lake_commit` with ``stats_cols``, round 14). ``schema`` is
+    the schema of the frame that wrote ``files``: the read runs under
+    it, so building stats never runs a schema-inference job. Values go
+    through :func:`_stat_scalar` (outward-widened decimals, ISO time
+    strings) so pruning stays sound."""
     from pyspark.sql import functions as F
 
+    if not stat_cols:
+        return {}
     aggs = []
     for i, c in enumerate(stat_cols):
         aggs += [F.min(c).alias(f"lo{i}"), F.max(c).alias(f"hi{i}")]
     stat_rows = (
-        spark.read.parquet(*(os.path.join(path, f) for f in files))
+        spark.read.schema(schema)
+        .parquet(*(os.path.join(path, f) for f in files))
         .groupBy(F.input_file_name().alias("_f"))
         .agg(*aggs)
         .collect()

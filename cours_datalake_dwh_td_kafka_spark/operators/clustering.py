@@ -52,8 +52,6 @@ aggregation of centroid updates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,10 +66,7 @@ LLOYD_ROUNDS = 3
 #: 5M (long, long) rows framed sits well inside the broadcast caps
 #: (the graph.py GRAPH_BC_MAX_NODES rule). Above it every round falls
 #: back to the original packed shuffle join against the source table.
-#: Env-overridable for cluster profiles.
-KMEANS_BC_MAX_VECS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_BC_MAX_VECS", "5000000")
-)
+KMEANS_BC_MAX_VECS = 5_000_000
 
 
 def _flat(emb: DataFrame) -> DataFrame:

@@ -27,7 +27,6 @@ candidate generator caps per-shingle postings via a frequency filter
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -971,11 +970,8 @@ CC_MAX_ITER = 15
 #: broadcast gate for connected_components' per-round O(nodes) label
 #: vector — 5M (node, label) long-pairs is ~80 MB framed, comfortably
 #: inside the broadcast caps; above it every round falls back to the
-#: original shuffle join. Env-overridable for cluster profiles
-#: (the graph.py GRAPH_BC_MAX_NODES rule).
-CC_BC_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_CC_BC_MAX_NODES", "5000000")
-)
+#: original shuffle join (the graph.py GRAPH_BC_MAX_NODES rule).
+CC_BC_MAX_NODES = 5_000_000
 
 
 def connected_components(

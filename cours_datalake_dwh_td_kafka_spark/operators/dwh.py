@@ -1,7 +1,7 @@
 """Data-warehouse modeling operators — the course IS a DWH course
 (reference: the star-schema modeling in work/Td_Dwh notebooks and the
-mutable-entity upsert the merge sink covers,
-streaming/pipelines.py:merge_stream_to_lake). This module adds the
+mutable-entity upsert the versioned lake's MERGE covers,
+lake.py:lake_merge_upsert). This module adds the
 classic slowly-changing-dimension type-2 build: derive validity
 intervals from an event history, the batch backbone behind every
 point-in-time join.

@@ -15,8 +15,6 @@ ranks match bit-for-bit after 10 rounds.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,8 +28,7 @@ PAGERANK_TOP_K = 20
 
 #: broadcast gate for the iterative operators' O(nodes) state vectors
 #: (rank / label / degree tables); beyond it every loop falls back to
-#: its original shuffle-join + checkpoint path. Env-overridable so a
-#: cluster profile can move it without a code change.
+#: its original shuffle-join + checkpoint path.
 #:
 #: r15 default 100k, MEASURED on the 10x lake (plans/r15/scaling): at
 #: 20k nodes the broadcast regime wins pagerank 5.9 vs 7.7 s, but at
@@ -41,9 +38,7 @@ PAGERANK_TOP_K = 20
 #: 14.4 s). The r14 default of 5M was sized by broadcast-cap arithmetic
 #: alone; the measured crossover is far lower, and above the gate the
 #: shuffle path is the robust default.
-GRAPH_BC_MAX_NODES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_BC_MAX_NODES", "100000")
-)
+GRAPH_BC_MAX_NODES = 100_000
 
 
 def _pagerank_sql(iters: int = PAGERANK_ITERS, top_k: int = PAGERANK_TOP_K) -> str:
@@ -432,9 +427,7 @@ def triangle_counts(
 #: ~4 M rows keeps the built relation well under the broadcast caps.
 #: Decided from parquet FOOTER metadata (no Spark job), so the gate
 #: costs nothing and flips to the shuffle join as the lake grows.
-TRIANGLE_BC_MAX_LI_ROWS = int(
-    os.environ.get("SPARK_GRAFT_TRIANGLE_BC_MAX_LI_ROWS", "4000000")
-)
+TRIANGLE_BC_MAX_LI_ROWS = 4_000_000
 
 
 @register("triangle_count", _TRIANGLE_SQL)

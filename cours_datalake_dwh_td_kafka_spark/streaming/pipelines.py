@@ -16,9 +16,8 @@ idempotent sink:
   stream-stream interval join.
 - sinks: the partitioned file sink (S16, reference:
   work/weather_to_hdfs.py), the exactly-once versioned-lake sink
-  (:func:`commit_stream_to_lake`), its CDC consumer
-  (:func:`consume_lake_changes_stream`) and the plain-parquet upsert sink
-  (:func:`merge_stream_to_lake`).
+  (:func:`commit_stream_to_lake`) and its CDC consumer
+  (:func:`consume_lake_changes_stream`).
 
 Everything is source-agnostic: pipelines take a DataFrame (batch or
 streaming) and return a DataFrame, so the same plan runs under Kafka in
@@ -429,121 +428,6 @@ def consume_lake_changes_stream(
     ).load()
     return (
         tick.writeStream.foreachBatch(poll)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
-
-
-def merge_stream_to_lake(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    keys: tuple[str, ...],
-    partition_col: str,
-    order_col: str | None = None,
-):
-    """Streaming UPSERT into a parquet lake via ``foreachBatch`` +
-    dynamic partition overwrite: per micro-batch, only the partitions the
-    batch actually touches are read back, merged (batch rows win on key
-    collision), and atomically replaced. Partitions outside the batch
-    are never read or written, so per-batch cost is O(touched
-    partitions), not O(lake) — the standard plain-parquet merge shape
-    when no table format (Delta/Iceberg) manages row-level commits.
-
-    CONTRACT: ``partition_col`` must be stable per key (derived from the
-    key, or immutable like an entity's home region). The merge only
-    rewrites partitions the batch touches, so a key that MOVES partition
-    would leave its old row behind in the old partition — model moving
-    entities with an append sink + compaction, or a table format.
-
-    ``order_col`` names the column that decides which of several
-    same-key rows in ONE batch wins (max value wins — e.g. an event
-    timestamp). Without it the choice falls to ``dropDuplicates``,
-    which keeps an arbitrary row — fine for idempotent re-sends,
-    wrong for in-batch corrections; pass it whenever upstream can emit
-    multiple versions per key per batch.
-
-    The append-only sink (:func:`write_stream_to_lake`) is the right
-    default for immutable events; this one is for mutable entities
-    (latest reading per station, profile snapshots) where replays or
-    corrections must not duplicate keys. Checkpointed offsets +
-    idempotent-per-partition overwrite give effectively-once output
-    for deterministic batches.
-
-    RESTART CONTRACT (checkpoint upgrade): the query may be restarted
-    from its existing checkpoint with ADDED projected columns — the lake
-    read merges schemas across files and the union fills missing columns
-    with NULL on whichever side lacks them, so pre-upgrade rows coexist
-    with post-upgrade rows (pinned by
-    tests/test_streaming.py::test_merge_lake_restart_with_added_column).
-    Keys, ``partition_col`` and ``order_col`` must NOT change across
-    restarts (they define row identity); type changes of an existing
-    column are not supported (parquet mergeSchema rejects them)."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if order_col is not None:
-            from pyspark.sql import Window as _W
-
-            w = _W.partitionBy(*keys).orderBy(F.desc(order_col))
-            batch_dedup = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            batch_dedup = batch_df.dropDuplicates(list(keys))
-        parts = [
-            r[0]
-            for r in batch_dedup.select(partition_col).distinct().collect()
-        ]
-        if not parts:
-            return  # empty micro-batch: nothing to merge
-        # existence is checked EXPLICITLY: a blanket try/except around
-        # the read would also swallow transient FS/schema errors and
-        # then overwrite surviving rows with batch-only data
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        if fs.exists(hpath):
-            # mergeSchema: after a checkpoint-upgrade restart the stream
-            # may project MORE columns than the files written before the
-            # upgrade; the merged read surfaces the union schema so the
-            # new column isn't silently dropped from surviving rows
-            existing = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(path)
-                .where(F.col(partition_col).isin(parts))
-            )
-            survivors = existing.join(
-                F.broadcast(batch_dedup.select(*keys).distinct()),
-                list(keys),
-                "left_anti",
-            )
-            # allowMissingColumns: pre-upgrade survivors carry NULL for
-            # columns the upgraded stream added (and vice versa on a
-            # column retirement) — the restart contract below
-            merged = survivors.unionByName(
-                batch_dedup, allowMissingColumns=True
-            )
-        else:  # first batch: lake doesn't exist yet
-            merged = batch_dedup
-        # writer-scoped dynamic overwrite (takes precedence over the
-        # session conf since Spark 2.4): a static-mode overwrite here
-        # would truncate the whole lake before reading it, and setting
-        # the session conf instead would leak dynamic semantics to every
-        # concurrent write in the session for the duration of the batch
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-
-    return (
-        df.writeStream.foreachBatch(merge)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )

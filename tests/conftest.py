@@ -11,12 +11,20 @@ import sys
 import duckdb
 import pandas as pd
 import pytest
+from hypothesis import settings
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cours_datalake_dwh_td_kafka_spark.io import LAKE_TABLES
 from cours_datalake_dwh_td_kafka_spark.plans.inspect import count_jobs
 from cours_datalake_dwh_td_kafka_spark.session import get_spark
+
+# Property tests draw the same inputs on every run (seeded from each
+# test's source), so a failure means the code changed, never that a new
+# draw found an old fault; derandomize also keeps no example database.
+# Each test's own max_examples still applies.
+settings.register_profile("deterministic", derandomize=True)
+settings.load_profile("deterministic")
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"

@@ -2238,3 +2238,32 @@ def test_stats_on_append_occ_rebase_merges_both_sides(spark, tmp_path):
     keep, total = pruned_files(path, "k", 1000, 1050)
     # base files (no stats) conservatively kept; wave-2000 file skipped
     assert len(keep) == total - 1
+
+
+def test_stats_on_append_runs_no_inference_job(spark, tmp_path):
+    """Stats-on-append reads the new files under the appending frame's
+    schema, so their [min, max] cost only the aggregate's two jobs (its
+    shuffle stage and its result, under AQE) and no schema-inference
+    job: a stats-carrying append submits exactly two jobs more than the
+    same plain append, through both append paths."""
+    from cours_datalake_dwh_td_kafka_spark.lake import lake_commit_occ
+    from tests.conftest import spark_jobs
+
+    path = str(tmp_path / "t")
+    lake_commit(spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v"), path)
+
+    def wave(lo):
+        return (
+            spark.range(lo, lo + 50)
+            .selectExpr("id AS k", "id * 2 AS v")
+            .coalesce(1)
+        )
+
+    _, plain = spark_jobs(spark, lambda: lake_commit(wave(1000), path))
+    _, seq = spark_jobs(
+        spark, lambda: lake_commit(wave(2000), path, stats_cols=("k",))
+    )
+    _, occ = spark_jobs(
+        spark, lambda: lake_commit_occ(wave(3000), path, stats_cols=("k",))
+    )
+    assert (seq, occ) == (plain + 2, plain + 2)

@@ -671,3 +671,65 @@ def test_restore_retries_past_rival_append(spark, tmp_path, monkeypatch):
     assert _rows(spark, path) == [(k, "v1") for k in range(5)]
     ops = [h["op"] for h in lake_history(path)]
     assert ops[-2:] == ["append", "restore"]  # rival preserved in history
+
+
+@pytest.mark.parametrize("legacy_tip", [False, True])
+def test_occ_append_writes_the_same_manifest_as_lake_commit(
+    spark, tmp_path, legacy_tip
+):
+    """The append rule is shared: the same frame appended onto the same
+    tip (clustering stats, a Bloom index and a pending delete entry) by
+    ``lake_commit`` and by ``lake_commit_occ`` publishes identical
+    manifests apart from the new files' names — also onto a
+    pre-evolution tip, whose schema both recover from the files."""
+    import json
+    import os
+    import shutil
+
+    from cours_datalake_dwh_td_kafka_spark.lake import (
+        lake_bloom_index,
+        lake_cluster_by,
+    )
+
+    base = str(tmp_path / "base")
+    lake_commit(
+        spark.range(0, 40).selectExpr("id AS k", "CAST(id AS STRING) AS s"),
+        base,
+    )
+    lake_cluster_by(spark, base, "k", n_files=2)
+    lake_delete_keys(spark, base, "k", "k < 3")
+    tip = lake_bloom_index(spark, base, "s")
+    mpath = os.path.join(base, "_manifests", f"v{tip}.json")
+    with open(mpath) as f:
+        tip_m = json.load(f)
+    assert tip_m["stats"] and tip_m["bloom"] and tip_m["deletes"]
+    if legacy_tip:
+        del tip_m["schema"]
+        with open(mpath, "w") as f:
+            json.dump(tip_m, f)
+
+    df = spark.range(100, 110).selectExpr(
+        "id AS k", "CAST(id AS STRING) AS s", "id * 2 AS extra"
+    ).coalesce(1)
+
+    def shape(path, v):
+        m = lake_mod._read_manifest(path, v)
+        text = json.dumps(m, sort_keys=True)
+        new = [f for f in m["files"] if f not in tip_m["files"]]
+        for i, f in enumerate(new):
+            text = text.replace(f, f"<new{i}>")
+        return json.loads(text), len(new)
+
+    shapes = []
+    for name, commit in (("seq", lake_commit), ("occ", lake_commit_occ)):
+        path = str(tmp_path / name)
+        shutil.copytree(base, path)
+        v = commit(df, path, stats_cols=("k",))
+        assert v == tip + 1
+        shapes.append(shape(path, v))
+    assert shapes[0] == shapes[1]
+    m, n_new = shapes[0]
+    assert n_new == 1
+    assert [f["name"] for f in m["schema"]["fields"]] == ["k", "s", "extra"]
+    assert m["deletes"] == tip_m["deletes"] and m["bloom"] == tip_m["bloom"]
+    assert m["stats"] == {**tip_m["stats"], **{"<new0>": m["stats"]["<new0>"]}}

@@ -87,7 +87,6 @@ _TEST_ONLY_ALLOWED = {
     "low_cardinality_keyed_windows": "plan check run against registered rows",
     "unbounded_global_windows": "plan check run against registered rows",
     # ROADMAP open items that will use them
-    "merge_stream_to_lake": "ROADMAP item 2 re-bases it on the versioned lake",
     "consume_lake_changes_stream": "ROADMAP item 5 runs it as a CDC consumer",
     "sessions_maintenance_stream": "ROADMAP item 5 runs it as a CDC consumer",
     "compact_if_needed": "ROADMAP item 5's maintenance daemon runs it",

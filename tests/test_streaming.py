@@ -423,180 +423,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert batch == got
 
 
-def test_merge_stream_to_lake_upserts(spark, tmp_path):
-    """foreachBatch merge sink: replayed/updated keys overwrite in place
-    (no duplicates), untouched partitions survive, new keys append."""
-    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
-        merge_stream_to_lake,
-    )
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    lake = str(tmp_path / "lake")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "station LONG, region STRING, reading DOUBLE, seq LONG"
-
-    def run():
-        s = spark.readStream.schema(schema).json(str(indir))
-        q = merge_stream_to_lake(
-            s, lake, ckpt, keys=("station",), partition_col="region",
-            order_col="seq",
-        ).start()
-        q.awaitTermination(120)
-
-    _write_batch(
-        str(indir),
-        [
-            {"station": 1, "region": "eu", "reading": 10.0, "seq": 1},
-            {"station": 2, "region": "us", "reading": 20.0, "seq": 1},
-        ],
-        "b0",
-    )
-    run()
-    # second batch: update station 1 TWICE (the higher seq must win —
-    # in-batch correction), add station 3; us partition untouched
-    _write_batch(
-        str(indir),
-        [
-            {"station": 1, "region": "eu", "reading": 10.5, "seq": 2},
-            {"station": 1, "region": "eu", "reading": 11.0, "seq": 3},
-            {"station": 3, "region": "eu", "reading": 30.0, "seq": 1},
-        ],
-        "b1",
-    )
-    run()
-    got = {
-        r.station: (r.region, r.reading)
-        for r in spark.read.parquet(lake).collect()
-    }
-    assert got == {1: ("eu", 11.0), 2: ("us", 20.0), 3: ("eu", 30.0)}
-
-
-def test_merge_stream_to_lake_filtered_batch_leaves_lake_unchanged(
-    spark, tmp_path
-):
-    """A micro-batch that filters to zero rows touches no file: the
-    merge sink sees no partition to replace and returns before reading
-    or writing the lake. A streaming query runs its jobs under its
-    ``runId`` job group, so they are counted there."""
-    import os
-
-    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
-        merge_stream_to_lake,
-    )
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    lake = str(tmp_path / "lake")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        s = spark.readStream.schema(
-            "station LONG, region STRING, reading DOUBLE"
-        ).json(str(indir))
-        q = merge_stream_to_lake(
-            s.where("reading > 0"), lake, ckpt, keys=("station",),
-            partition_col="region",
-        ).start()
-        q.awaitTermination(120)
-        assert q.exception() is None
-        sc = spark.sparkContext
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
-        return q.lastProgress["batchId"], len(jobs)
-
-    def snapshot():
-        out = {}
-        for root, _, files in os.walk(lake):
-            for f in files:
-                full = os.path.join(root, f)
-                with open(full, "rb") as fh:
-                    out[os.path.relpath(full, lake)] = (
-                        fh.read(), os.stat(full).st_mtime_ns
-                    )
-        return out
-
-    _write_batch(
-        str(indir), [{"station": 1, "region": "eu", "reading": 1.0}], "b0"
-    )
-    batch, jobs_first = run()
-    assert batch == 0
-    before = snapshot()
-    assert before
-    _write_batch(
-        str(indir), [{"station": 1, "region": "eu", "reading": -5.0}], "b1"
-    )
-    batch, jobs_empty = run()
-    assert batch == 1
-    assert snapshot() == before
-    # only the partition collect ran: no lake read, no write
-    assert jobs_empty < jobs_first
-
-
-def test_merge_lake_restart_with_added_column(spark, tmp_path):
-    """Checkpoint-upgrade compatibility (SURVEY §7 hard-point #1): the
-    merge sink restarted from its existing checkpoint with an ADDED
-    projected column must keep pre-upgrade rows (NULL in the new
-    column), upsert across the schema boundary, and write the new
-    column for post-upgrade rows."""
-    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
-        merge_stream_to_lake,
-    )
-
-    indir = tmp_path / "in"
-    indir.mkdir()
-    lake = str(tmp_path / "lake")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run(schema, project=None):
-        s = spark.readStream.schema(schema).json(str(indir))
-        if project:
-            s = s.select(*project)
-        q = merge_stream_to_lake(
-            s, lake, ckpt, keys=("station",), partition_col="region",
-            order_col="seq",
-        ).start()
-        q.awaitTermination(120)
-
-    v1 = "station LONG, region STRING, reading DOUBLE, seq LONG"
-    _write_batch(
-        str(indir),
-        [
-            {"station": 1, "region": "eu", "reading": 10.0, "seq": 1},
-            {"station": 2, "region": "us", "reading": 20.0, "seq": 1},
-        ],
-        "b0",
-    )
-    run(v1)
-
-    # upgrade: the stream now projects an extra `quality` column; same
-    # checkpoint. Station 1 is corrected post-upgrade, station 2 is
-    # untouched pre-upgrade data, station 3 is new.
-    v2 = v1 + ", quality STRING"
-    _write_batch(
-        str(indir),
-        [
-            {"station": 1, "region": "eu", "reading": 10.5, "seq": 2,
-             "quality": "good"},
-            {"station": 3, "region": "eu", "reading": 30.0, "seq": 1,
-             "quality": "poor"},
-        ],
-        "b1",
-    )
-    run(v2)
-    got = {
-        r.station: (r.reading, r.quality)
-        for r in spark.read.option("mergeSchema", "true")
-        .parquet(lake)
-        .collect()
-    }
-    assert got == {
-        1: (10.5, "good"),
-        2: (20.0, None),  # pre-upgrade row survives with NULL quality
-        3: (30.0, "poor"),
-    }
-
-
 def test_windowed_agg_restart_with_added_column(spark, stream_dir, tmp_path):
     """The sliding-window agg restarted from its checkpoint with an
     added DOWNSTREAM projection (derived after the stateful agg, so the
@@ -809,6 +635,83 @@ def test_commit_stream_to_lake_exactly_once_commits(
     assert [(r.station, r._change) for r in diff] == [(3, "insert")]
     # and the advisor sees the per-batch small files piling up
     assert lake_maintenance_plan(lake)["n_files"] >= 2
+
+
+def test_commit_stream_to_lake_restart_with_added_column(
+    spark, tmp_path, monkeypatch
+):
+    """Checkpoint-upgrade compatibility (SURVEY §7 hard-point #1): the
+    versioned-lake sink restarted from its existing checkpoint with an
+    ADDED projected column commits under the evolved schema. The new
+    version declares the column, pre-upgrade rows read NULL in it, the
+    old version still reads without it, and the upgraded batch replayed
+    after a kill between its commit and the checkpoint ack does not
+    commit twice."""
+    import cours_datalake_dwh_td_kafka_spark.lake as lakemod
+    from cours_datalake_dwh_td_kafka_spark.lake import (
+        current_version,
+        lake_history,
+        lake_read,
+        last_stream_batch_id,
+    )
+    from cours_datalake_dwh_td_kafka_spark.streaming.pipelines import (
+        checkpoint_query_id,
+        commit_stream_to_lake,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    lake = str(tmp_path / "lake")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(*cols):
+        s = spark.readStream.schema(
+            "station LONG, reading DOUBLE, quality STRING"
+        ).json(str(indir))
+        q = commit_stream_to_lake(s.select(*cols), lake, ckpt).start()
+        q.awaitTermination(120)
+
+    _write_batch(
+        str(indir),
+        [{"station": 1, "reading": 10.0}, {"station": 2, "reading": 20.0}],
+        "b0",
+    )
+    run("station", "reading")
+    qid = checkpoint_query_id(ckpt)
+    assert lake_read(spark, lake).columns == ["station", "reading"]
+
+    # upgrade: same checkpoint, one more projected column; the sink dies
+    # after committing the upgraded batch and before the checkpoint ack
+    orig_commit = lakemod.lake_commit_occ
+    state = {"crash": True}
+
+    def crashing(df, path, **kw):
+        v = orig_commit(df, path, **kw)
+        if state["crash"]:
+            state["crash"] = False
+            raise RuntimeError("simulated kill after commit, before ack")
+        return v
+
+    monkeypatch.setattr(lakemod, "lake_commit_occ", crashing)
+    _write_batch(
+        str(indir), [{"station": 3, "reading": 30.0, "quality": "good"}], "b1"
+    )
+    with pytest.raises(Exception, match="simulated kill"):
+        run("station", "reading", "quality")
+    run("station", "reading", "quality")  # replays batch 1: skipped
+
+    assert checkpoint_query_id(ckpt) == qid
+    assert current_version(lake) == 2, "replayed batch committed twice"
+    assert last_stream_batch_id(lake, qid) == 1
+    assert [h["op"] for h in lake_history(lake)] == ["append", "append"]
+    cur = lake_read(spark, lake)
+    assert cur.columns == ["station", "reading", "quality"]
+    assert sorted(tuple(r) for r in cur.collect()) == [
+        (1, 10.0, None),
+        (2, 20.0, None),
+        (3, 30.0, "good"),
+    ]
+    assert lake_read(spark, lake, 1).columns == ["station", "reading"]
 
 
 def test_commit_stream_to_lake_empty_batch_publishes_nothing(spark, tmp_path):
